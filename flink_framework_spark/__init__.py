@@ -16,6 +16,7 @@ where built-in functions genuinely cannot express the semantics.
 Layout
 ------
 - ``session``    SparkSession builder (AQE on, UTC, tuned shuffle)
+- ``_pyworker``  Python-worker import-cache fix (stat-gated zip refresh)
 - ``sql``        Flink SQL statement dialect (window TVFs,
                  MATCH_RECOGNIZE) rewritten onto the operators
 - ``io``         parquet table loaders (incl. the ns-timestamp fix)
@@ -31,5 +32,7 @@ Layout
 
 __version__ = "0.1.0"
 
+# first: on a Python worker, stop per-task re-reads of every zip archive
+from flink_framework_spark import _pyworker  # noqa: F401
 from flink_framework_spark.registry import all_queries  # noqa: F401
 from flink_framework_spark.sql import flink_sql  # noqa: F401

@@ -841,11 +841,6 @@ def skip_past_last(
     return _skip_greedy(matches, key_col, first_col, last_col, inclusive=False)
 
 
-from flink_framework_spark.operators.groupmap import (  # noqa: E402
-    grouped_map_batched as _grouped_map_batched,
-)
-
-
 def _tuplify(v):
     # array-valued tiebreak columns (a combinations frame's ``ids``)
     # are unhashable/unsortable for pandas — compare as tuples
@@ -887,9 +882,12 @@ def _skip_scan(
     boundaries compare as (timestamp, event_id) pairs — the per-key
     total order — so duplicate-timestamp runs ending at different
     events are ordered and compared by their true event positions,
-    not collapsed. With only one of the two present, neither is used
-    (both-or-neither): starts and ends must compare against each
-    other, so a tuple start against a scalar end would TypeError."""
+    not collapsed. With only one of the two present, the greedy modes
+    use neither (both-or-neither): starts and ends must compare
+    against each other, so a tuple start against a scalar end would
+    TypeError. 'next' compares starts only, so like
+    :func:`skip_to_next` it identifies a start by ``id_first``
+    whenever that column exists."""
     import pandas as pd
 
     from pyspark.sql.types import StringType, StructField, StructType
@@ -900,7 +898,8 @@ def _skip_scan(
     for c in (key_col, first_col, last_col):
         if c not in cols:
             raise ValueError(f"matches frame is missing column {c!r}")
-    id_first = "id_first" if "id_first" in cols else None
+    next_id = "id_first" if "id_first" in cols else None
+    id_first = next_id
     id_last = "id_last" if "id_last" in cols else None
     if id_first is None or id_last is None:
         id_first = id_last = None
@@ -943,14 +942,22 @@ def _skip_scan(
         for j, mode in enumerate(modes):
             keep = []
             prev_key = object()  # sentinel no key equals
-            last_end = last_start = None
+            last_end = None
             if mode == "next":
-                for i, s in enumerate(starts):
+                # first row per start in the canonical sort; a single
+                # id_first is not in that sort, so a start's rows need
+                # not be adjacent: track the key's starts seen so far
+                if next_id:
+                    next_starts = list(zip(pdf[first_col].tolist(),
+                                           pdf[next_id].tolist()))
+                else:
+                    next_starts = pdf[first_col].tolist()
+                for i, s in enumerate(next_starts):
                     if keys[i] != prev_key:
-                        prev_key, last_start = keys[i], None
-                    if last_start is None or s != last_start:
+                        prev_key, seen = keys[i], set()
+                    if s not in seen:
                         keep.append(i)
-                        last_start = s
+                        seen.add(s)
             else:
                 inclusive = mode == "last"
                 for i, s in enumerate(starts):

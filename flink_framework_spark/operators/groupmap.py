@@ -36,10 +36,9 @@ def bucketed_map(
     """Dispatch ``bucket_fn`` over ``buckets`` deterministic hash
     buckets of ``key_cols``: the function receives each bucket's WHOLE
     pandas frame (every row of every key hashing to the bucket) and
-    returns that bucket's output rows. This is the primitive the
-    per-key convenience wrapper below builds on; use it directly when
-    the per-key work can itself be amortized bucket-wide (one sort /
-    one scan per bucket instead of per key)."""
+    returns that bucket's output rows. Use it when the per-key work
+    can be amortized bucket-wide (one sort / one scan per bucket
+    instead of per key)."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
 
     def run(pdf):
@@ -50,38 +49,3 @@ def bucketed_map(
         F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(buckets)),
     )
     return bucketed.groupBy("__gb").applyInPandas(run, schema)
-
-
-def grouped_map_batched(
-    df: DataFrame,
-    key_cols: list[str] | str,
-    fn,
-    schema,
-    buckets: int = 64,
-) -> DataFrame:
-    """Equivalent of ``df.groupBy(*key_cols).applyInPandas(fn, schema)``
-    (``fn`` receives each key group exactly as applyInPandas would,
-    minus any row-order guarantee neither form gives), dispatched over
-    ``buckets`` hash buckets. Output row order differs from the
-    per-key form — callers aggregate or treat output as a set, as
-    applyInPandas callers already must."""
-    import pandas as pd
-
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    if hasattr(schema, "fields"):
-        out_names = [f.name for f in schema.fields]
-    else:  # flat DDL string: "a long, b double"
-        out_names = [s.strip().split()[0] for s in str(schema).split(",")]
-    gb_keys = keys if len(keys) > 1 else keys[0]
-
-    def bucket_fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        outs = [
-            fn(g.reset_index(drop=True))
-            for _, g in pdf.groupby(gb_keys, sort=False, dropna=False)
-        ]
-        outs = [o for o in outs if len(o)]
-        if outs:
-            return pd.concat(outs, ignore_index=True)
-        return pd.DataFrame(columns=out_names)
-
-    return bucketed_map(df, keys, bucket_fn, schema, buckets)

@@ -15,7 +15,10 @@ vectorized transfer.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -38,17 +41,18 @@ def _ship_package(spark: SparkSession) -> None:
     the driving process runs from a different cwd, workers cannot
     import it. Shipping a zip via addPyFile fixes that for ANY session
     we are handed. Idempotent per session.
+
+    Executors on a non-local master fetch the zip from its staging
+    directory while the context lives, so the directory is removed at
+    interpreter exit, not before.
     """
     try:
         sc = spark.sparkContext
         if getattr(sc, "_ffs_package_shipped", False):
             return
-        import os
-        import shutil
-        import tempfile
-
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
         staging = tempfile.mkdtemp(prefix="ffs_pkg_")
+        atexit.register(shutil.rmtree, staging, ignore_errors=True)
         archive = shutil.make_archive(
             os.path.join(staging, "flink_framework_spark"),
             "zip",

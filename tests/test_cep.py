@@ -776,36 +776,49 @@ def test_skip_on_combinations_fuzz_vs_reference(spark):
 
 
 def test_skip_greedy_pair_equals_granular(spark, sf_dir):
-    """The batched two-strategy pick (r11 melt consolidation) must
-    emit exactly the granular skip_past_last / skip_to_last rows."""
+    """The batched three-strategy pick (r11 melt consolidation) must
+    emit exactly the granular skip_past_last / skip_to_last /
+    skip_to_next rows — also on frames with ``id_first`` but no
+    ``id_last``, where SKIP_TO_NEXT identifies a start by (ts_first,
+    id_first) in both spellings: two matches starting at the same
+    instant from different events are two starts (planted below)."""
+    import datetime as dt
+
     from flink_framework_spark.io import table
     from flink_framework_spark.operators.cep import (
         match_times,
         skip_greedy_pair,
         skip_past_last,
         skip_to_last,
+        skip_to_next,
     )
-
-    from flink_framework_spark.operators.cep import skip_to_next
 
     ev = table(spark, sf_dir, "events")
     m = match_times(ev, "click", "purchase", 2, 3, "12 HOURS").persist()
+    t = [dt.datetime(2024, 1, 1, 0, 0, s) for s in range(4)]
+    planted = spark.createDataFrame(
+        [(1, t[0], 1, t[2]), (1, t[0], 2, t[1]), (1, t[0], 1, t[3]),
+         (1, t[2], 3, t[3]), (2, t[1], 4, t[1]), (2, t[1], 5, t[2])],
+        "user_id long, ts_first timestamp_ntz, id_first long, "
+        "ts_last timestamp_ntz",
+    )
     try:
-        both = skip_greedy_pair(
-            m, tags=("skip_past", "skip_last", "skip_next")
-        ).persist()
-        cols = m.columns
-        for tag, fn in (("skip_past", skip_past_last),
-                        ("skip_last", skip_to_last),
-                        ("skip_next", skip_to_next)):
-            got = sorted(
-                map(repr, (tuple(r) for r in both.filter(
-                    both["__skip"] == tag).select(*cols).collect()))
-            )
-            want = sorted(
-                map(repr, (tuple(r) for r in fn(m).collect()))
-            )
-            assert got == want and want, tag
-        both.unpersist()
+        for frame in (m, m.drop("id_last"), planted):
+            both = skip_greedy_pair(
+                frame, tags=("skip_past", "skip_last", "skip_next")
+            ).persist()
+            cols = frame.columns
+            for tag, fn in (("skip_past", skip_past_last),
+                            ("skip_last", skip_to_last),
+                            ("skip_next", skip_to_next)):
+                got = sorted(
+                    map(repr, (tuple(r) for r in both.filter(
+                        both["__skip"] == tag).select(*cols).collect()))
+                )
+                want = sorted(
+                    map(repr, (tuple(r) for r in fn(frame).collect()))
+                )
+                assert got == want and want, (cols, tag)
+            both.unpersist()
     finally:
         m.unpersist()

@@ -9,7 +9,8 @@ dlog(rows_per_batch). alpha ~ 1 means linear per-row cost (the keyed
 state machine touches each row once); alpha > 1 means the buffer /
 prefilter adds superlinear work at depth. rows/s per tile is printed
 too (it should RISE with batch size while the per-batch fixed cost —
-state-store commits, Arrow batch setup — amortizes).
+Python-worker task setup, Arrow batch setup, state-store commits —
+amortizes; tools/pyworker_profile.py splits the worker part).
 
 Scenarios (both the keyed Arrow-state family):
 - cep_times_disorder: times(2,3) with 1% of rows rewound 5 s under a
