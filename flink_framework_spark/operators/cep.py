@@ -898,11 +898,10 @@ def _skip_scan(
     for c in (key_col, first_col, last_col):
         if c not in cols:
             raise ValueError(f"matches frame is missing column {c!r}")
-    next_id = "id_first" if "id_first" in cols else None
-    id_first = next_id
-    id_last = "id_last" if "id_last" in cols else None
-    if id_first is None or id_last is None:
-        id_first = id_last = None
+    has_id_first = "id_first" in cols
+    id_first = id_last = None
+    if has_id_first and "id_last" in cols:
+        id_first, id_last = "id_first", "id_last"
     lead_cols = [first_col] + ([id_first] if id_first else []) + [
         last_col
     ] + ([id_last] if id_last else [])
@@ -938,6 +937,9 @@ def _skip_scan(
         else:
             starts = pdf[first_col].tolist()
             ends = pdf[last_col].tolist()
+        # 'next' identifies a start by id_first even without id_last
+        next_starts = starts if id_first or not has_id_first else list(
+            zip(pdf[first_col].tolist(), pdf["id_first"].tolist()))
         outs = []
         for j, mode in enumerate(modes):
             keep = []
@@ -947,11 +949,6 @@ def _skip_scan(
                 # first row per start in the canonical sort; a single
                 # id_first is not in that sort, so a start's rows need
                 # not be adjacent: track the key's starts seen so far
-                if next_id:
-                    next_starts = list(zip(pdf[first_col].tolist(),
-                                           pdf[next_id].tolist()))
-                else:
-                    next_starts = pdf[first_col].tolist()
                 for i, s in enumerate(next_starts):
                     if keys[i] != prev_key:
                         prev_key, seen = keys[i], set()

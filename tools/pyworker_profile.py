@@ -12,6 +12,9 @@ scenario and prints the per-invocation table and a JSON summary.
     python tools/pyworker_profile.py stream temporal_join_changelog
     python tools/pyworker_profile.py stream my_module:build   # build(spark, rows) -> (df, mode)
 
+A stream runs BATCHES micro-batches of ROWS rows at PARTITIONS
+shuffle (and state-store) partitions.
+
 Columns: worker pid, invocation number within that worker, setup CPU,
 work CPU, and whether the stat-gated zip refresh
 (``flink_framework_spark/_pyworker.py``) was in place when the
@@ -33,6 +36,10 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+ROWS = 2000  # stream rows per micro-batch
+BATCHES = 5  # stream micro-batches to run
+PARTITIONS = 4  # shuffle (and state-store) partitions
 
 # Spark's daemon only loads worker modules whose name starts with "pyspark".
 WRAPPER = "pyspark_ffs_profiled_worker"
@@ -74,9 +81,9 @@ def main(infile, outfile):
 '''
 
 
-def _rate(spark, rows: int, partitions: int):
+def _rate(spark, rows: int):
     return (spark.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", rows).option("numPartitions", partitions)
+            .option("rowsPerBatch", rows).option("numPartitions", PARTITIONS)
             .option("startTimestamp", 1_700_000_000_000)
             .option("advanceMillisPerBatch", 1000).load())
 
@@ -90,10 +97,10 @@ def temporal_join_changelog(spark, rows: int):
 
     keys = max(1, rows // 4)
     v = F.col("value")
-    facts = _rate(spark, rows, 4).select(
+    facts = _rate(spark, rows).select(
         (v % keys).alias("k"), F.col("timestamp").alias("ts"),
         v.alias("event_id"))
-    dims = _rate(spark, keys, 4).select(
+    dims = _rate(spark, keys).select(
         (v % keys).alias("k"), F.col("timestamp").alias("dim_ts"),
         (v % 100).alias("tier"))
     return temporal_join_changelog_stream(
@@ -114,16 +121,16 @@ def _resolve_stream(name: str):
     return getattr(importlib.import_module(module), fn)
 
 
-def run_stream(spark, name: str, rows: int, batches: int) -> None:
-    df, mode = _resolve_stream(name)(spark, rows)
+def run_stream(spark, name: str) -> None:
+    df, mode = _resolve_stream(name)(spark, ROWS)
     ckpt = tempfile.mkdtemp(prefix="pyworker_profile_ckpt_")
     q = (df.writeStream.format("noop").outputMode(mode)
          .option("checkpointLocation", ckpt).start())
     try:
-        deadline = time.monotonic() + 60 + 20 * batches
+        deadline = time.monotonic() + 60 + 20 * BATCHES
         while q.isActive and time.monotonic() < deadline:
             last = q.lastProgress
-            if last and last["batchId"] >= batches - 1:
+            if last and last["batchId"] >= BATCHES - 1:
                 break
             time.sleep(0.1)
         if q.exception() is not None:
@@ -165,12 +172,6 @@ def main(argv=None) -> int:
                     "or module:function returning (streaming df, output mode)")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
                     help="query data dir (default $SPARK_GRAFT_SF_DIR)")
-    ap.add_argument("--rows", type=int, default=2000,
-                    help="stream rows per micro-batch")
-    ap.add_argument("--batches", type=int, default=5,
-                    help="stream micro-batches to run")
-    ap.add_argument("--partitions", type=int, default=4,
-                    help="shuffle (and state-store) partitions")
     args = ap.parse_args(argv)
     if args.kind == "query" and not args.sf_dir:
         ap.error("a query needs --sf-dir or $SPARK_GRAFT_SF_DIR")
@@ -189,13 +190,13 @@ def main(argv=None) -> int:
     from flink_framework_spark.session import get_spark
 
     spark = get_spark(app_name="pyworker-profile",
-                      shuffle_partitions=args.partitions)
+                      shuffle_partitions=PARTITIONS)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         if args.kind == "query":
             run_query(spark, args.name, args.sf_dir)
         else:
-            run_stream(spark, args.name, args.rows, args.batches)
+            run_stream(spark, args.name)
     finally:
         spark.stop()
     records = []
