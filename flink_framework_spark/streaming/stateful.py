@@ -12,8 +12,8 @@ the way a Flink process function would hold ValueState + timers.
 from __future__ import annotations
 
 import bisect
-from datetime import timedelta
-from typing import Any, Iterable, Iterator
+from functools import partial
+from typing import Iterable, Iterator
 
 import pandas as pd
 
@@ -212,60 +212,6 @@ def sequence_matches_join(
     return cur.withColumnRenamed("__k0", key_col)
 
 
-def funnel_conversions_tws(events: DataFrame) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` spelling of the same
-    funnel (the successor API to applyInPandasWithState: explicit
-    StatefulProcessor with named state and timer support — the closest
-    Spark analogue of a Flink KeyedProcessFunction).
-
-    Runtime dependency: the TWS protocol needs ``google.protobuf``
-    (absent in this container — the equivalence test skips itself);
-    ``funnel_conversions`` is the dependency-free twin."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class FunnelProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._views = handle.getValueState("views", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            views = list(self._views.get()[0]) if self._views.exists() else []
-            out_ts = []
-            for pdf in rows:
-                pdf = pdf.sort_values("ts")
-                for ts, etype in zip(pdf["ts"], pdf["event_type"]):
-                    sec = ts.timestamp()
-                    if etype == "view":
-                        views.append(sec)
-                    elif etype == "purchase":
-                        views = [v for v in views if sec - v <= _HORIZON_S]
-                        if any(v < sec for v in views):
-                            out_ts.append(ts)
-            if views:
-                floor = max(views) - _HORIZON_S
-                views = [v for v in views if v >= floor]
-            self._views.update((views,))
-            if out_ts:
-                yield pd.DataFrame({"user_id": user_id, "purchase_ts": out_ts})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "ts", "event_type")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            FunnelProcessor(),
-            outputStructType=FUNNEL_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 _NEG_STATE_SCHEMA = "views array<double>, clicks array<double>"
 
 
@@ -349,159 +295,55 @@ TIMES_SCHEMA = (
 _TIMES_STATE_SCHEMA = (
     "clicks array<double>, click_ids array<long>, emitted array<string>"
 )
+# the reorder buffer's fields, appended after its core's own fields
+_PEND_STATE_SCHEMA = (
+    ", pend_ts array<double>, pend_id array<long>,"
+    " pend_type array<string>, hi double, done double"
+)
+_PEND_FIELDS = 5
 
 
-class _TimesCore:
-    """The times(m, n) transition core — run enumeration over the
-    key's step-event list plus the emitted-run dedup set — shared by
-    the in-order driver (:func:`make_times_fn`) and the reorder-
-    buffered disorder driver (:func:`make_times_disorder_fn`). Events
-    MUST be fed in (event time, event id) order; contiguous windows
-    of the clicks list are then the batch operator's consecutive
-    runs."""
-
-    def __init__(self, n_min, n_max, horizon_s, packed=None):
-        self.n_min, self.n_max = n_min, n_max
-        self.horizon_s = horizon_s
-        if packed is not None:
-            self.clicks = list(zip(packed[0], packed[1]))
-            self.emitted = set(packed[2])
-        else:
-            self.clicks, self.emitted = [], set()
-        self.out: list[tuple] = []
-
-    def feed(self, sec: float, eid: int, etype: str, step, then_step):
-        if etype == step:
-            self.clicks.append((sec, int(eid)))
-        elif etype == then_step:
-            for n in range(self.n_min, self.n_max + 1):
-                for i in range(len(self.clicks) - n + 1):
-                    (first, _), (last, last_id) = (
-                        self.clicks[i],
-                        self.clicks[i + n - 1],
-                    )
-                    if not (
-                        last <= first + self.horizon_s
-                        and last < sec
-                        and sec <= first + self.horizon_s
-                    ):
-                        continue
-                    rk = f"{first!r}|{last_id}|{n}"
-                    if rk not in self.emitted:
-                        self.emitted.add(rk)
-                        self.out.append((first, last, n))
-
-    def trim(self, floor: float) -> None:
-        self.clicks = [(c, i) for (c, i) in self.clicks if c >= floor]
-        self.emitted = {
-            e for e in self.emitted if float(e.split("|")[0]) >= floor
-        }
-
-    def pack(self):
-        return (
-            [c for c, _ in self.clicks],
-            [i for _, i in self.clicks],
-            sorted(self.emitted),
-        )
-
-
-def _times_out_frame(user_id, out):
-    # float-seconds -> exact microseconds: round BEFORE the ns
-    # multiply (f * 1e9 alone drifts ~hundreds of ns at 2024 epochs —
-    # float64 mantissa — and breaks equality with the batch twin's
-    # microsecond timestamps)
+def _quant_out_frame(user_id, out):
+    """Quantifier matches ``(first_s, last_s, n)`` -> the output rows
+    of :func:`times_matches` / :func:`greedy_matches`."""
+    first, last, n_reps = zip(*out)
     return pd.DataFrame(
         {
             "user_id": user_id,
-            "ts_first": [
-                pd.Timestamp(round(f * 1e6) * 1000) for f, _, _ in out
-            ],
-            "ts_last": [
-                pd.Timestamp(round(l * 1e6) * 1000) for _, l, _ in out
-            ],
-            "n_reps": [n for _, _, n in out],
+            "ts_first": epoch_s_to_timestamps(first),
+            "ts_last": epoch_s_to_timestamps(last),
+            "n_reps": list(n_reps),
         }
     )
 
 
-def make_times_fn(
-    n_min: int,
-    n_max: int,
-    horizon_s: float,
-    step: str = "click",
-    then_step: str = "purchase",
-    disorder_s: float = 0.0,
-):
-    """Streaming twin of operators.cep.match_times for one
-    (step, then_step) pair: state keeps the key's recent ``step``
-    events — (timestamp, event_id) pairs, so runs are identified by
-    their ENDING EVENT like the batch window's lag rows (two runs
-    with identical timestamps but different ending events are
-    distinct matches on both sides) — plus the run keys already
-    emitted (a run matches once, on its FIRST qualifying follower —
-    the batch spelling's LEFT SEMI). Per-follower cost is
-    |clicks| x (n_max - n_min + 1) inside one horizon window.
+def make_disorder_fn(new_core, disorder_s: float):
+    """The out-of-order driver for a quantifier core
+    (:class:`_TimesCore` or :class:`_GreedyCore`): events park in a
+    per-key reorder buffer and are RELEASED — in (event time, event
+    id) order — only once the key's high-water mark ``hi`` has moved
+    ``disorder_s`` past them, so a later micro-batch may deliver an
+    earlier-timestamped event and it still lands in sequence (the
+    watermark-delay analogue of the in-order drivers' per-batch
+    sort). Events arriving MORE than ``disorder_s`` late — at or
+    behind the processed frontier ``done`` — are dropped, exactly
+    Spark's late-data rule under a watermark.
 
-    This is the IN-ORDER driver: ``disorder_s`` here only widens the
-    state trim so a FOLLOWER arriving a micro-batch late still finds
-    its run — a late STEP event would append out of timestamp order
-    and corrupt run contiguity, which is why
-    :func:`times_matches` routes ``disorder_s > 0`` to the
-    reorder-buffered driver (:func:`make_times_disorder_fn`) that
-    handles both. The default 0 assumes per-key in-order batches
-    (the file-stream twins)."""
+    ``new_core(packed)`` builds the key's core from its own state
+    fields (None for a new key); the buffer's fields
+    (``_PEND_STATE_SCHEMA``) follow them in the key's state. After a
+    release the driver calls ``core.settle(done)``: every later
+    release has ``sec > done``, so the core may trim what that
+    frontier proves dead. State stays bounded: the buffer holds at
+    most ``disorder_s`` of events per key plus the core's own bounded
+    state.
 
-    def _times_fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        core = _TimesCore(
-            n_min, n_max, horizon_s, state.get if state.exists else None
-        )
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ts, eid, etype in zip(
-                pdf["ts"], pdf["event_id"], pdf["event_type"]
-            ):
-                core.feed(ts.timestamp(), eid, etype, step, then_step)
-        hi = max((c for c, _ in core.clicks), default=None)
-        if hi is not None:
-            core.trim(hi - horizon_s - disorder_s)
-        state.update(core.pack())
-        if core.out:
-            yield _times_out_frame(user_id, core.out)
-
-    return _times_fn
-
-
-_TIMES_DIS_STATE_SCHEMA = (
-    "clicks array<double>, click_ids array<long>,"
-    " emitted array<string>, pend_ts array<double>,"
-    " pend_id array<long>, pend_type array<string>,"
-    " hi double, done double"
-)
-
-
-def make_times_disorder_fn(
-    n_min: int,
-    n_max: int,
-    horizon_s: float,
-    disorder_s: float,
-    step: str = "click",
-    then_step: str = "purchase",
-):
-    """The out-of-order driver for the times core (round 10 — the
-    in-order driver's allowance only covered late FOLLOWERS; a late
-    STEP event appended behind later ones and corrupted contiguity).
-    Same reorder discipline as :func:`make_greedy_disorder_fn`:
-    events park per key and release in (event time, event id) order
-    once the key's high-water mark moves ``disorder_s`` past them;
-    later-than-allowance events drop like watermark late data. A run
-    matches when its follower is RELEASED, so a bounded stream drains
-    with ONE far-future sentinel event (unlike greedy, no closure
-    event must itself be processed)."""
+    Draining a bounded stream: a far-future sentinel event releases
+    every real event, which is enough for times (a run matches when
+    its follower is released). Greedy closes a run only when the
+    NEXT step event is processed, so its sentinel step must itself be
+    released: follow it with a second event at least ``disorder_s``
+    later."""
 
     def _fn(
         key: tuple,
@@ -511,11 +353,11 @@ def make_times_disorder_fn(
         (user_id,) = key
         if state.exists:
             packed = state.get
-            core = _TimesCore(n_min, n_max, horizon_s, packed[:3])
-            pend = list(zip(packed[3], packed[4], packed[5]))
-            hi, done = packed[6], packed[7]
+            core = new_core(packed[:-_PEND_FIELDS])
+            pend = list(zip(*packed[-_PEND_FIELDS:-2]))
+            hi, done = packed[-2:]
         else:
-            core = _TimesCore(n_min, n_max, horizon_s)
+            core = new_core(None)
             pend, hi, done = [], None, None
         for pdf in pdfs:
             for ts, eid, etype in zip(
@@ -542,11 +384,10 @@ def make_times_disorder_fn(
             for sec, eid, etype in ready:
                 if frontier is not None and sec <= frontier:
                     continue  # at-or-beyond the allowance: late drop
-                core.feed(sec, eid, etype, step, then_step)
+                core.feed(sec, eid, etype)
                 done = sec if done is None else max(done, sec)
             if done is not None:
-                # safe floor: every future release has sec >= done
-                core.trim(done - horizon_s)
+                core.settle(done)
         state.update(
             core.pack()
             + (
@@ -558,9 +399,117 @@ def make_times_disorder_fn(
             )
         )
         if core.out:
-            yield _times_out_frame(user_id, core.out)
+            yield _quant_out_frame(user_id, core.out)
 
     return _fn
+
+
+class _TimesCore:
+    """The times(m, n) transition core — run enumeration over the
+    key's step-event list plus the emitted-run dedup set — shared by
+    the in-order driver (:func:`make_times_fn`) and the reorder
+    buffer (:func:`make_disorder_fn`). Events MUST be fed in (event
+    time, event id) order; contiguous windows of the clicks list are
+    then the batch operator's consecutive runs."""
+
+    def __init__(self, n_min, n_max, horizon_s, step, then_step,
+                 packed=None):
+        self.n_min, self.n_max = n_min, n_max
+        self.horizon_s = horizon_s
+        self.step, self.then_step = step, then_step
+        if packed is not None:
+            self.clicks = list(zip(packed[0], packed[1]))
+            self.emitted = set(packed[2])
+        else:
+            self.clicks, self.emitted = [], set()
+        self.out: list[tuple] = []
+
+    def feed(self, sec: float, eid: int, etype: str):
+        if etype == self.step:
+            self.clicks.append((sec, int(eid)))
+        elif etype == self.then_step:
+            for n in range(self.n_min, self.n_max + 1):
+                for i in range(len(self.clicks) - n + 1):
+                    (first, _), (last, last_id) = (
+                        self.clicks[i],
+                        self.clicks[i + n - 1],
+                    )
+                    if not (
+                        last <= first + self.horizon_s
+                        and last < sec
+                        and sec <= first + self.horizon_s
+                    ):
+                        continue
+                    rk = f"{first!r}|{last_id}|{n}"
+                    if rk not in self.emitted:
+                        self.emitted.add(rk)
+                        self.out.append((first, last, n))
+
+    def trim(self, floor: float) -> None:
+        self.clicks = [(c, i) for (c, i) in self.clicks if c >= floor]
+        self.emitted = {
+            e for e in self.emitted if float(e.split("|")[0]) >= floor
+        }
+
+    def settle(self, done: float) -> None:
+        # safe floor: every future release has sec > done
+        self.trim(done - self.horizon_s)
+
+    def pack(self):
+        return (
+            [c for c, _ in self.clicks],
+            [i for _, i in self.clicks],
+            sorted(self.emitted),
+        )
+
+
+def make_times_fn(
+    n_min: int,
+    n_max: int,
+    horizon_s: float,
+    step: str = "click",
+    then_step: str = "purchase",
+):
+    """Streaming twin of operators.cep.match_times for one
+    (step, then_step) pair: state keeps the key's recent ``step``
+    events — (timestamp, event_id) pairs, so runs are identified by
+    their ENDING EVENT like the batch window's lag rows (two runs
+    with identical timestamps but different ending events are
+    distinct matches on both sides) — plus the run keys already
+    emitted (a run matches once, on its FIRST qualifying follower —
+    the batch spelling's LEFT SEMI). Per-follower cost is
+    |clicks| x (n_max - n_min + 1) inside one horizon window.
+
+    This is the IN-ORDER driver: it assumes per-key in-order batches
+    (the file-stream twins). :func:`times_matches` routes
+    ``disorder_s > 0`` to the reorder buffer
+    (:func:`make_disorder_fn`), which handles late step events and
+    late followers alike."""
+
+    def _times_fn(
+        key: tuple,
+        pdfs: Iterable[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        (user_id,) = key
+        core = _TimesCore(
+            n_min, n_max, horizon_s, step, then_step,
+            state.get if state.exists else None,
+        )
+        for pdf in pdfs:
+            pdf = pdf.sort_values(["ts", "event_id"])
+            for ts, eid, etype in zip(
+                pdf["ts"], pdf["event_id"], pdf["event_type"]
+            ):
+                core.feed(ts.timestamp(), eid, etype)
+        hi = max((c for c, _ in core.clicks), default=None)
+        if hi is not None:
+            core.trim(hi - horizon_s)
+        state.update(core.pack())
+        if core.out:
+            yield _quant_out_frame(user_id, core.out)
+
+    return _times_fn
 
 
 def times_matches(
@@ -571,33 +520,25 @@ def times_matches(
 ) -> DataFrame:
     """Streaming twin of q_cep_times: step-run quantifier matches per
     user (update mode), one row per run on its first qualifying
-    follower. ``disorder_s > 0`` (round 10) routes to the
-    reorder-buffered driver, which handles late STEP events as well
-    as late followers (the in-order driver's trim-widening only
-    covered the latter)."""
+    follower. ``disorder_s > 0`` routes to the reorder buffer
+    (:func:`make_disorder_fn`), which handles late step events as
+    well as late followers."""
     if disorder_s:
-        return (
-            events.select("user_id", "ts", "event_id", "event_type")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                make_times_disorder_fn(
-                    n_min, n_max, horizon_s, disorder_s, step, then_step
-                ),
-                outputStructType=TIMES_SCHEMA,
-                stateStructType=_TIMES_DIS_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+        fn = make_disorder_fn(
+            partial(_TimesCore, n_min, n_max, horizon_s, step, then_step),
+            disorder_s,
         )
+        state_schema = _TIMES_STATE_SCHEMA + _PEND_STATE_SCHEMA
+    else:
+        fn = make_times_fn(n_min, n_max, horizon_s, step, then_step)
+        state_schema = _TIMES_STATE_SCHEMA
     return (
         events.select("user_id", "ts", "event_id", "event_type")
         .groupBy("user_id")
         .applyInPandasWithState(
-            make_times_fn(
-                n_min, n_max, horizon_s, step, then_step, disorder_s
-            ),
+            fn,
             outputStructType=TIMES_SCHEMA,
-            stateStructType=_TIMES_STATE_SCHEMA,
+            stateStructType=state_schema,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
@@ -620,15 +561,16 @@ class _GreedyCore:
     """The greedy-oneOrMore transition core — open-run extension /
     closure, closed-run horizon GC, follower buffering and matching —
     shared by the in-order driver (:func:`make_greedy_fn`) and the
-    reorder-buffered disorder driver
-    (:func:`make_greedy_disorder_fn`) so the two semantics cannot
-    drift. Events MUST be fed in event-time order; ordering is the
-    caller's contract (per-batch sort for the in-order driver, the
-    release buffer for the disorder driver)."""
+    reorder buffer (:func:`make_disorder_fn`) so the two semantics
+    cannot drift. Events MUST be fed in event-time order; ordering is
+    the caller's contract (per-batch sort for the in-order driver,
+    the release order of the reorder buffer)."""
 
-    def __init__(self, max_gap_s: float, horizon_s: float, packed=None):
+    def __init__(self, max_gap_s: float, horizon_s: float, step: str,
+                 then_step: str, packed=None):
         self.max_gap_s = max_gap_s
         self.horizon_s = horizon_s
+        self.step, self.then_step = step, then_step
         if packed is not None:
             open_first, open_last, open_n, closed_raw, buf = packed
             self.open_first = open_first
@@ -669,11 +611,12 @@ class _GreedyCore:
         self.buf = []
         self.closed.append(run)
 
-    def feed(self, sec: float, etype: str, step: str, then_step: str):
+    def feed(self, sec: float, eid: int, etype: str):
+        # runs are identified by their timestamps; eid is unused
         self.closed[:] = [
             r for r in self.closed if sec <= r[0] + self.horizon_s
         ]
-        if etype == step:
+        if etype == self.step:
             if (
                 self.open_first is not None
                 and sec <= self.open_last + self.max_gap_s
@@ -685,13 +628,17 @@ class _GreedyCore:
                 self.close_open()
                 self.open_first = self.open_last = sec
                 self.open_n = 1
-        elif etype == then_step:
+        elif etype == self.then_step:
             for r in list(self.closed):
                 if self._try_match(r, sec):
                     self.out.append(r)
                     self.closed.remove(r)
             if self.open_first is not None and sec > self.open_last:
                 self.buf.append(sec)
+
+    def settle(self, done: float) -> None:
+        # nothing to trim: feed() already expires closed runs
+        pass
 
     def pack(self):
         return (
@@ -701,23 +648,6 @@ class _GreedyCore:
             [f"{f!r}|{l!r}|{n}" for (f, l, n) in self.closed],
             self.buf,
         )
-
-
-def _greedy_out_frame(user_id, out):
-    # float-seconds -> exact microseconds: round BEFORE the ns
-    # multiply (f * 1e9 alone drifts ~hundreds of ns at 2024 epochs)
-    return pd.DataFrame(
-        {
-            "user_id": user_id,
-            "ts_first": [
-                pd.Timestamp(round(f * 1e6) * 1000) for f, _, _ in out
-            ],
-            "ts_last": [
-                pd.Timestamp(round(l * 1e6) * 1000) for _, l, _ in out
-            ],
-            "n_reps": [n for _, _, n in out],
-        }
-    )
 
 
 def make_greedy_fn(
@@ -757,7 +687,8 @@ def make_greedy_fn(
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
         core = _GreedyCore(
-            max_gap_s, horizon_s, state.get if state.exists else None
+            max_gap_s, horizon_s, step, then_step,
+            state.get if state.exists else None,
         )
 
         if use_timeout and state.hasTimedOut:
@@ -775,8 +706,10 @@ def make_greedy_fn(
         else:
             for pdf in pdfs:
                 pdf = pdf.sort_values(["ts", "event_id"])
-                for ts, etype in zip(pdf["ts"], pdf["event_type"]):
-                    core.feed(ts.timestamp(), etype, step, then_step)
+                for ts, eid, etype in zip(
+                    pdf["ts"], pdf["event_id"], pdf["event_type"]
+                ):
+                    core.feed(ts.timestamp(), eid, etype)
         if (
             use_timeout
             and core.open_first is None
@@ -798,94 +731,9 @@ def make_greedy_fn(
                 )
                 state.setTimeoutTimestamp(fire_ms)
         if core.out:
-            yield _greedy_out_frame(user_id, core.out)
+            yield _quant_out_frame(user_id, core.out)
 
     return _greedy_fn
-
-
-_GREEDY_DIS_STATE_SCHEMA = (
-    "open_first double, open_last double, open_n long,"
-    " closed array<string>, buf array<double>,"
-    " pend_ts array<double>, pend_id array<long>,"
-    " pend_type array<string>, hi double, done double"
-)
-
-
-def make_greedy_disorder_fn(
-    max_gap_s: float,
-    horizon_s: float,
-    disorder_s: float,
-    step: str = "click",
-    then_step: str = "purchase",
-):
-    """The out-of-order driver for the greedy core: events park in a
-    per-key reorder buffer and are RELEASED — in (event time,
-    event id) order — only once the key's high-water mark has moved
-    ``disorder_s`` past them, so a later micro-batch may deliver an
-    earlier-timestamped event and it still lands in sequence (the
-    watermark-delay analogue the in-order driver documents as its
-    contract violation). Events arriving MORE than ``disorder_s``
-    late — behind the processed frontier — are dropped, exactly
-    Spark's late-data rule under a watermark.
-
-    Closure consequence: a bounded stream's final runs need the
-    far-future sentinel step event to be RELEASED too, i.e. a second,
-    even-later event (>= sentinel + disorder_s) must follow it — or
-    drain the stream with two sentinel ticks. State stays bounded:
-    the pending buffer holds at most ``disorder_s`` of events per
-    key plus the greedy core's own bounded state."""
-
-    def _fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            packed = state.get
-            core = _GreedyCore(max_gap_s, horizon_s, packed[:5])
-            pend = list(zip(packed[5], packed[6], packed[7]))
-            hi, done = packed[8], packed[9]
-        else:
-            core = _GreedyCore(max_gap_s, horizon_s)
-            pend, hi, done = [], None, None
-        for pdf in pdfs:
-            for ts, eid, etype in zip(
-                pdf["ts"], pdf["event_id"], pdf["event_type"]
-            ):
-                sec = ts.timestamp()
-                pend.append((sec, int(eid), etype))
-                hi = sec if hi is None else max(hi, sec)
-        if hi is not None:
-            release_to = hi - disorder_s
-            ready = sorted(
-                [e for e in pend if e[0] <= release_to],
-                key=lambda e: (e[0], e[1]),
-            )
-            pend = [e for e in pend if e[0] > release_to]
-            # frontier ties drop (see the times driver above): batch-
-            # entry snapshot keeps same-batch ties feeding in (ts, id)
-            # order while cross-batch ties at the frontier are late.
-            frontier = done
-            for sec, _eid, etype in ready:
-                if frontier is not None and sec <= frontier:
-                    continue  # at-or-beyond the allowance: late drop
-                core.feed(sec, etype, step, then_step)
-                done = sec if done is None else max(done, sec)
-        state.update(
-            core.pack()
-            + (
-                [e[0] for e in pend],
-                [e[1] for e in pend],
-                [e[2] for e in pend],
-                hi,
-                done,
-            )
-        )
-        if core.out:
-            yield _greedy_out_frame(user_id, core.out)
-
-    return _fn
 
 
 def greedy_matches(
@@ -902,11 +750,11 @@ def greedy_matches(
     qualifying ``then_step`` exists. ``use_timeout=True`` closes runs
     on event-time timers too (input must carry a watermark).
 
-    ``disorder_s > 0`` (round 10) routes to the reorder-buffered
-    driver (:func:`make_greedy_disorder_fn`): cross-batch event-time
-    disorder up to the allowance lands in sequence; later-than-that
-    events drop like late data under a watermark. Mutually exclusive
-    with ``use_timeout`` — the release frontier is per-key
+    ``disorder_s > 0`` routes to the reorder buffer
+    (:func:`make_disorder_fn`): cross-batch event-time disorder up to
+    the allowance lands in sequence; later-than-that events drop like
+    late data under a watermark. Mutually exclusive with
+    ``use_timeout`` — the release frontier is per-key
     high-water-mark driven, while timers fire on the global
     watermark; mixing the two closure authorities would double-close
     runs."""
@@ -917,28 +765,22 @@ def greedy_matches(
             "buffer (sentinel-drained) or the event-time timer"
         )
     if disorder_s:
-        return (
-            events.select("user_id", "ts", "event_id", "event_type")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                make_greedy_disorder_fn(
-                    max_gap_s, horizon_s, disorder_s, step, then_step
-                ),
-                outputStructType=GREEDY_SCHEMA,
-                stateStructType=_GREEDY_DIS_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+        fn = make_disorder_fn(
+            partial(_GreedyCore, max_gap_s, horizon_s, step, then_step),
+            disorder_s,
         )
+        state_schema = _GREEDY_STATE_SCHEMA + _PEND_STATE_SCHEMA
+    else:
+        fn = make_greedy_fn(max_gap_s, horizon_s, use_timeout, step,
+                            then_step, tz=wallclock_tz(events, "ts"))
+        state_schema = _GREEDY_STATE_SCHEMA
     return (
         events.select("user_id", "ts", "event_id", "event_type")
         .groupBy("user_id")
         .applyInPandasWithState(
-            make_greedy_fn(max_gap_s, horizon_s, use_timeout,
-                           step, then_step,
-                           tz=wallclock_tz(events, "ts")),
+            fn,
             outputStructType=GREEDY_SCHEMA,
-            stateStructType=_GREEDY_STATE_SCHEMA,
+            stateStructType=state_schema,
             outputMode="update",
             timeoutConf=(
                 GroupStateTimeout.EventTimeTimeout
@@ -1045,7 +887,7 @@ def make_sequence_fn(
     State is bounded by the horizon: partials whose first event falls
     ``horizon_s + disorder_s`` behind the high-water mark can never
     complete and are trimmed (``disorder_s`` is the watermark-delay
-    analogue, as in :func:`make_times_fn`)."""
+    analogue)."""
     import json as _json
 
     n = len(steps)

@@ -90,6 +90,65 @@ _STATE_ARRAY = {
 _WM_KEY = "spark.watermarkDelayMs"
 
 
+def _preflight(
+    facts: DataFrame,
+    dim_updates: DataFrame,
+    on: Sequence[str] | str,
+    fact_ts: str,
+    dim_ts: str,
+    how: str,
+):
+    """The changelog temporal join's loud schema checks, shared by
+    both forms: ``how``, fact/dim column collisions, join-key type
+    agreement, and plain-instant event-time columns. Returns
+    ``(keys, fact_types, dim_types, payload, attrs)``."""
+    if how not in ("inner", "left"):
+        raise ValueError(f"how must be inner|left, not {how!r}")
+    keys = [on] if isinstance(on, str) else list(on)
+    f_types = {f.name: f.dataType.simpleString() for f in facts.schema}
+    d_types = {f.name: f.dataType.simpleString()
+               for f in dim_updates.schema}
+    payload = [c for c in facts.columns if c not in (*keys, fact_ts)]
+    attrs = [c for c in dim_updates.columns if c not in (*keys, dim_ts)]
+    clash = sorted(set(payload) & set(attrs))
+    if clash:
+        raise ValueError(
+            f"fact/dim column collision {clash} — rename one side"
+        )
+    for k in keys:
+        if f_types.get(k) != d_types.get(k):
+            raise ValueError(
+                f"join key {k!r}: fact type {f_types.get(k)} != dim "
+                f"type {d_types.get(k)}"
+            )
+    for side, types, ts in (("fact", f_types, fact_ts),
+                            ("dim", d_types, dim_ts)):
+        if types.get(ts) != "timestamp":
+            raise ValueError(
+                f"{side} time column {ts!r} must be TIMESTAMP "
+                f"(got {types.get(ts)}) — streaming event time is "
+                "always a plain instant"
+            )
+    return keys, f_types, d_types, payload, attrs
+
+
+def _wm_side(df: DataFrame, ts: str, watermark: str) -> DataFrame:
+    """Watermark one join side on its event-time column ``ts``:
+    inherit an existing watermark there; refuse one on any other
+    column (it would survive the select and the join would gate on
+    the wrong clock)."""
+    if _WM_KEY in (df.schema[ts].metadata or {}):
+        return df
+    tagged = [f.name for f in df.schema if _WM_KEY in (f.metadata or {})]
+    if tagged:
+        raise ValueError(
+            f"temporal join: watermark is on {tagged[0]!r} but the "
+            f"side's event time is {ts!r} — watermark the event-"
+            "time column"
+        )
+    return df.withWatermark(ts, watermark)
+
+
 def _cell(v, typ):
     """Pandas cell -> state-schema-faithful Python value. A column
     that is int64 on the wire arrives as float64 in pandas whenever
@@ -183,35 +242,13 @@ def temporal_join_changelog_stream(
             version_interval=version_interval,
             unique_versions=unique_versions,
         )
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, not {how!r}")
-    keys = [on] if isinstance(on, str) else list(on)
-    f_types = {f.name: f.dataType.simpleString() for f in facts.schema}
-    d_types = {f.name: f.dataType.simpleString()
-               for f in dim_updates.schema}
-    payload = [c for c in facts.columns if c not in (*keys, fact_ts)]
-    attrs = [c for c in dim_updates.columns if c not in (*keys, dim_ts)]
-    clash = sorted(set(payload) & set(attrs))
-    if clash:
-        raise ValueError(
-            f"fact/dim column collision {clash} — rename one side"
-        )
-    for k in keys:
-        if f_types.get(k) != d_types.get(k):
-            raise ValueError(
-                f"join key {k!r}: fact type {f_types.get(k)} != dim "
-                f"type {d_types.get(k)}"
-            )
-    for side, cols, types, ts in (
-        ("fact", payload, f_types, fact_ts),
-        ("dim", attrs, d_types, dim_ts),
+    keys, f_types, d_types, payload, attrs = _preflight(
+        facts, dim_updates, on, fact_ts, dim_ts, how
+    )
+    for side, cols, types in (
+        ("fact", payload, f_types),
+        ("dim", attrs, d_types),
     ):
-        if types.get(ts) != "timestamp":
-            raise ValueError(
-                f"{side} time column {ts!r} must be TIMESTAMP "
-                f"(got {types.get(ts)}) — streaming event time is "
-                "always a plain instant"
-            )
         for c in cols:
             if types[c] not in _STATE_ARRAY:
                 raise ValueError(
@@ -219,29 +256,14 @@ def temporal_join_changelog_stream(
                     "supported in temporal-join state"
                 )
 
-    def wm_side(df: DataFrame, ts: str) -> DataFrame:
-        # inherit an existing watermark on the time column; refuse a
-        # watermark on any other column (it would survive the select
-        # and the union would gate on the wrong clock)
-        if _WM_KEY in (df.schema[ts].metadata or {}):
-            return df
-        tagged = [f.name for f in df.schema if _WM_KEY in (f.metadata or {})]
-        if tagged:
-            raise ValueError(
-                f"temporal join: watermark is on {tagged[0]!r} but the "
-                f"side's event time is {ts!r} — watermark the event-"
-                "time column"
-            )
-        return df.withWatermark(ts, watermark)
-
-    fan = wm_side(facts, fact_ts).select(
+    fan = _wm_side(facts, fact_ts, watermark).select(
         *keys,
         F.col(fact_ts).alias("__ts"),
         F.lit(1).alias("__side"),
         *payload,
         *[F.lit(None).cast(d_types[a]).alias(a) for a in attrs],
     )
-    dan = wm_side(dim_updates, dim_ts).select(
+    dan = _wm_side(dim_updates, dim_ts, watermark).select(
         *keys,
         F.col(dim_ts).alias("__ts"),
         F.lit(0).alias("__side"),
@@ -440,52 +462,11 @@ def temporal_join_changelog_interval(
     Output columns match the general form: keys + ``fact_ts`` +
     fact payload + dim attributes. Output mode: append.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, not {how!r}")
-    keys = [on] if isinstance(on, str) else list(on)
-    payload = [c for c in facts.columns if c not in (*keys, fact_ts)]
-    attrs = [c for c in dim_updates.columns
-             if c not in (*keys, dim_ts)]
-    clash = sorted(set(payload) & set(attrs))
-    if clash:
-        raise ValueError(
-            f"fact/dim column collision {clash} — rename one side"
-        )
-    # the general form's loud preflight, mirrored: key types must
-    # agree and both event-time columns must be plain instants
-    f_types = {f.name: f.dataType.simpleString() for f in facts.schema}
-    d_types = {f.name: f.dataType.simpleString()
-               for f in dim_updates.schema}
-    for k in keys:
-        if f_types.get(k) != d_types.get(k):
-            raise ValueError(
-                f"join key {k!r}: fact type {f_types.get(k)} != dim "
-                f"type {d_types.get(k)}"
-            )
-    for side, types, ts in (("fact", f_types, fact_ts),
-                            ("dim", d_types, dim_ts)):
-        if types.get(ts) != "timestamp":
-            raise ValueError(
-                f"{side} time column {ts!r} must be TIMESTAMP "
-                f"(got {types.get(ts)}) — streaming event time is "
-                "always a plain instant"
-            )
-
-    def wm_side(df: DataFrame, ts: str) -> DataFrame:
-        if _WM_KEY in (df.schema[ts].metadata or {}):
-            return df
-        tagged = [f.name for f in df.schema
-                  if _WM_KEY in (f.metadata or {})]
-        if tagged:
-            raise ValueError(
-                f"temporal join: watermark is on {tagged[0]!r} but "
-                f"the side's event time is {ts!r} — watermark the "
-                "event-time column"
-            )
-        return df.withWatermark(ts, watermark)
-
-    f = wm_side(facts, fact_ts)
-    d = wm_side(dim_updates, dim_ts).select(
+    keys, _, _, payload, attrs = _preflight(
+        facts, dim_updates, on, fact_ts, dim_ts, how
+    )
+    f = _wm_side(facts, fact_ts, watermark)
+    d = _wm_side(dim_updates, dim_ts, watermark).select(
         *[F.col(k).alias(f"__dk_{k}") for k in keys],
         F.col(dim_ts).alias("__dts"),
         *attrs,

@@ -46,6 +46,34 @@ _CONT_OUT = (
 )
 
 
+def _load_windows(state: GroupState) -> dict:
+    """The key's in-flight window records, keyed by window start."""
+    if not state.exists:
+        return {}
+    (arr,) = state.get
+    return {d["w"]: d for d in map(_json.loads, arr)}
+
+
+def _store_windows(
+    state: GroupState, wins: dict, next_fire: float | None, tz: str | None
+) -> None:
+    """Persist the key's live windows and arm the event-time timer
+    just past ``next_fire`` (naive wall-clock seconds; clamped past
+    the current watermark — a timer at or below it never fires), or
+    drop the key once no window is left."""
+    if not wins:
+        state.remove()
+        return
+    state.update(([_json.dumps(wins[w]) for w in sorted(wins)],))
+    if next_fire is not None:
+        state.setTimeoutTimestamp(
+            max(
+                naive_s_to_instant_ms(next_fire, tz) + 1,
+                state.getCurrentWatermarkMs() + 1,
+            )
+        )
+
+
 def count_trigger_stream(
     events: DataFrame,
     n: int,
@@ -76,12 +104,7 @@ def count_trigger_stream(
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         (key_value,) = key
-        wins: dict = {}
-        if state.exists:
-            (arr,) = state.get
-            for s in arr:
-                d = _json.loads(s)
-                wins[d["w"]] = d
+        wins = _load_windows(state)
         if not state.hasTimedOut:
             for pdf in pdfs:
                 if not len(pdf):
@@ -131,19 +154,7 @@ def count_trigger_stream(
                     t_next if next_fire is None
                     else min(next_fire, t_next)
                 )
-        if wins:
-            state.update(
-                ([_json.dumps(wins[w]) for w in sorted(wins)],)
-            )
-            if next_fire is not None:
-                state.setTimeoutTimestamp(
-                    max(
-                        naive_s_to_instant_ms(next_fire, _tz) + 1,
-                        state.getCurrentWatermarkMs() + 1,
-                    )
-                )
-        else:
-            state.remove()
+        _store_windows(state, wins, next_fire, _tz)
         if out:
             yield pd.DataFrame(
                 {
@@ -210,12 +221,7 @@ def continuous_trigger_stream(
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         (key_value,) = key
-        wins: dict = {}
-        if state.exists:
-            (arr,) = state.get
-            for s in arr:
-                d = _json.loads(s)
-                wins[d["w"]] = d
+        wins = _load_windows(state)
         if not state.hasTimedOut:
             for pdf in pdfs:
                 if not len(pdf):
@@ -286,19 +292,7 @@ def continuous_trigger_stream(
                     t_next if next_fire is None
                     else min(next_fire, t_next)
                 )
-        if wins:
-            state.update(
-                ([_json.dumps(wins[w]) for w in sorted(wins)],)
-            )
-            if next_fire is not None:
-                state.setTimeoutTimestamp(
-                    max(
-                        naive_s_to_instant_ms(next_fire, _tz) + 1,
-                        state.getCurrentWatermarkMs() + 1,
-                    )
-                )
-        else:
-            state.remove()
+        _store_windows(state, wins, next_fire, _tz)
         if out:
             yield pd.DataFrame(
                 {
@@ -392,12 +386,7 @@ def allowed_lateness_stream(
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         (key_value,) = key
-        wins: dict = {}
-        if state.exists:
-            (arr,) = state.get
-            for s in arr:
-                d = _json.loads(s)
-                wins[d["w"]] = d
+        wins = _load_windows(state)
         flink_wm = (
             instant_ms_to_naive_s(
                 state.getCurrentWatermarkMs(), _tz
@@ -450,32 +439,18 @@ def allowed_lateness_stream(
             if flink_wm >= w_end + lateness_s:
                 del wins[w]
             else:
+                # timers run on the SPARK watermark clock (instant,
+                # unshifted): convert back from the naive flink clock
                 t_next = (
                     w_end
                     if (not d["ot"] and d["no"])
                     else w_end + lateness_s
-                )
+                ) - shift_s
                 next_fire = (
                     t_next if next_fire is None
                     else min(next_fire, t_next)
                 )
-        if wins:
-            state.update(
-                ([_json.dumps(wins[w]) for w in sorted(wins)],)
-            )
-            if next_fire is not None:
-                # timers run on the SPARK watermark clock (instant,
-                # unshifted): convert back from the naive flink clock
-                state.setTimeoutTimestamp(
-                    max(
-                        naive_s_to_instant_ms(
-                            next_fire - shift_s, _tz
-                        ) + 1,
-                        state.getCurrentWatermarkMs() + 1,
-                    )
-                )
-        else:
-            state.remove()
+        _store_windows(state, wins, next_fire, _tz)
         if out:
             yield pd.DataFrame(
                 {

@@ -184,34 +184,6 @@ def test_restart_is_idempotent(spark, sf_dir, tmp_path):
     assert n1 == n2 > 0
 
 
-def _protobuf_available() -> bool:
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf, not "
-    "installed in this container (applyInPandasWithState twin covers I8)",
-)
-def test_tws_funnel_matches_batch(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas funnel == batch self-join
-    (and == the applyInPandasWithState implementation)."""
-    from flink_framework_spark.registry import all_queries
-    from flink_framework_spark.streaming.stateful import funnel_conversions_tws
-
-    batch_n = all_queries()["q_funnel"].fn(spark, sf_dir).collect()[0]["n_users"]
-    sdf = read_events_stream(spark, sf_dir)
-    out = run_to_memory(
-        funnel_conversions_tws(sdf), query_name="t_tws_funnel", output_mode="update"
-    )
-    assert out.select("user_id").distinct().count() == batch_n
-
-
 def test_foreach_batch_idempotent_sink(spark, sf_dir, tmp_path):
     """The exactly-once production sink pattern: foreachBatch writing
     batchId-keyed directories — a replayed batch overwrites instead of

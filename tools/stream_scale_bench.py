@@ -15,7 +15,7 @@ amortizes; tools/pyworker_profile.py splits the worker part).
 Scenarios (both the keyed Arrow-state family):
 - cep_times_disorder: times(2,3) with 1% of rows rewound 5 s under a
   10 s allowance — the park/release reorder buffer layered on the
-  quantifier core (streaming/stateful.py make_times_disorder_fn);
+  times quantifier core (streaming/stateful.py make_disorder_fn);
 - cep_where_quant: Pattern click{2,3} -> purchase with where() on
   BOTH steps — the r10 pre-filter lowering ahead of the quantifier
   machine (operators/pattern.py _stream_where_prefilter).
