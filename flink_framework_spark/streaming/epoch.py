@@ -38,14 +38,15 @@ def epoch_s_to_timestamps(values) -> list[pd.Timestamp]:
 
 # -- watermark clock alignment (round 9) ------------------------------
 #
-# ``GroupState.getCurrentWatermarkMs`` is an INSTANT epoch, but Arrow
+# The keyed-state watermark is an INSTANT epoch (ms), but Arrow
 # hands TIMESTAMP (instant) columns to pandas as SESSION-TIMEZONE
 # WALL-CLOCK naive values — so any state function comparing the two
 # scales directly is wrong by the session offset (confirmed: a
 # Tokyo-timezone session delayed every count-trigger firing by 9h and
 # drained nothing; a New-York session widens the watermark and fires
-# EARLY). Every state twin converts through these helpers, keyed by
-# the timezone captured at operator-construction time.
+# EARLY). The keyed-state harness (:mod:`streaming.keyed`) converts
+# through these helpers, keyed by the timezone captured at
+# operator-construction time.
 
 
 def wallclock_tz(df, ts_col: str):
@@ -71,7 +72,7 @@ def instant_ms_to_naive_s(ms: int, tz) -> float:
 
 def naive_s_to_instant_ms(naive_s: float, tz) -> int:
     """Session wall-clock naive seconds -> instant epoch ms (for
-    ``setTimeoutTimestamp``, which runs on the watermark's clock).
+    event-time timers, which run on the watermark's clock).
     DST gaps shift forward; ambiguous instants take the earlier."""
     if not tz:
         return round(naive_s * 1000)

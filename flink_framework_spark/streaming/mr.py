@@ -23,12 +23,9 @@ the emitted stream is row-for-row the batch result."""
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flink_framework_spark.operators.match_recognize import (
     parse_match_recognize,
@@ -37,24 +34,10 @@ from flink_framework_spark.operators.match_recognize import (
     scan_rows,
 )
 from flink_framework_spark.streaming.epoch import (
-    instant_ms_to_naive_s,
-    naive_s_to_instant_ms,
-    wallclock_tz,
     epoch_s_to_timestamps,
     ts_series_to_epoch_s,
 )
-
-_STATE_ARRAY = {
-    "boolean": "array<boolean>",
-    "bigint": "array<bigint>",
-    "int": "array<int>",
-    "double": "array<double>",
-    "float": "array<float>",
-    "string": "array<string>",
-    # timestamps ride as epoch seconds (micros-exact at current epochs)
-    "timestamp": "array<double>",
-    "timestamp_ntz": "array<double>",
-}
+from flink_framework_spark.streaming.keyed import keyed_process, state_array
 
 
 def match_recognize_stream(
@@ -114,16 +97,15 @@ def match_recognize_stream(
     )
     types = {f.name: f.dataType.simpleString() for f in flagged.schema}
     carried = [c for c in flagged.columns if c != spec.partition_by]
-    state_fields = []
-    for c in carried:
-        t = types[c]
-        if t not in _STATE_ARRAY:
-            raise ValueError(
-                f"column {c!r} of type {t} is not supported in streaming "
-                "MATCH_RECOGNIZE state"
-            )
-        state_fields.append(f"{c} {_STATE_ARRAY[t]}")
-    state_schema = ", ".join(state_fields + ["mno bigint"])
+    state_schema = ", ".join(
+        [
+            f"{c} "
+            + state_array(f"column {c!r}", types[c],
+                          "streaming MATCH_RECOGNIZE")
+            for c in carried
+        ]
+        + ["mno bigint"]
+    )
     is_ts = {c: types[c].startswith("timestamp") for c in carried}
 
     elements = [
@@ -140,19 +122,12 @@ def match_recognize_stream(
     subsets = dict(spec.subsets)
     skip, within_s, key_col = spec.skip, spec.within_s, spec.partition_by
     skip_var = spec.skip_var
-    # watermark (instant) vs Arrow timestamps (session wall-clock
-    # naive): align through the epoch.py converters
-    _tz = wallclock_tz(flagged, ts_col)
 
-    def _mr_fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def _mr_step(key, st, rows, ctx):
         (key_value,) = key
         frames = []
-        if state.exists:
-            *arrays, mno = state.get
+        if st is not None:
+            *arrays, mno = st
             cols = {}
             for c, arr in zip(carried, arrays):
                 if is_ts[c]:
@@ -163,20 +138,14 @@ def match_recognize_stream(
                 frames.append(pd.DataFrame(cols))
         else:
             mno = 0
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if len(pdf):
-                    frames.append(pdf[carried])
+        if not ctx.timed_out and len(rows):
+            frames.append(rows[carried])
         if not frames:
-            state.remove()
-            return
+            return None, None, None
         buf = (
             pd.concat(frames, ignore_index=True)
             .sort_values(order_by, kind="mergesort")
             .reset_index(drop=True)
-        )
-        wm_s = instant_ms_to_naive_s(
-            state.getCurrentWatermarkMs(), _tz
         )
         out_rows, resume, mno = scan_rows(
             buf,
@@ -187,48 +156,31 @@ def match_recognize_stream(
             within_s=within_s,
             var_names=var_names,
             ts_col=ts_col,
-            anchor_bound_s=wm_s,
+            anchor_bound_s=ctx.wm_s,
             match_no_start=mno,
             subsets=subsets,
             skip_var=skip_var,
             nav_defines=nav_defines or None,
         )
+        out = rows_to_frame(out_rows, names) if out_rows else None
         rest = buf.iloc[resume:]
-        if len(rest):
-            arrays = []
-            for c in carried:
-                if is_ts[c]:
-                    arrays.append(ts_series_to_epoch_s(rest[c]))
-                else:
-                    arrays.append(rest[c].tolist())
-            state.update((*arrays, mno))
-            first_ts = ts_series_to_epoch_s(rest[ts_col])[0]
-            # fire when the watermark closes the earliest open anchor
-            # (clamped past the current watermark — a timer at or below
-            # it would never fire)
-            state.setTimeoutTimestamp(
-                max(
-                    naive_s_to_instant_ms(first_ts + within_s, _tz) + 1,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-        elif mno:
+        if not len(rest):
             # keep MATCH_NUMBER continuity for future rows on this key
-            state.update((*[[] for _ in carried], mno))
-        else:
-            state.remove()
-        if out_rows:
-            yield rows_to_frame(out_rows, names)
+            return ((*[[] for _ in carried], mno) if mno else None), out, None
+        arrays = []
+        for c in carried:
+            if is_ts[c]:
+                arrays.append(ts_series_to_epoch_s(rest[c]))
+            else:
+                arrays.append(rest[c].tolist())
+        first_ts = ts_series_to_epoch_s(rest[ts_col])[0]
+        # fire when the watermark closes the earliest open anchor
+        timer = ctx.instant_ms(first_ts + within_s) + 1
+        return (*arrays, mno), out, timer
 
-    return (
-        flagged.groupBy(key_col)
-        .applyInPandasWithState(
-            _mr_fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_process(
+        flagged, [key_col], _mr_step, out_schema=out_schema,
+        state_schema=state_schema, event_time=ts_col,
     )
 
 

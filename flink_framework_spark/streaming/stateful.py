@@ -1,6 +1,6 @@
 """Custom keyed state — the Flink ``KeyedProcessFunction`` analogue
-(SURVEY.md §2 I8/J6): per-key state + event-time logic via
-``applyInPandasWithState``.
+(SURVEY.md §2 I8/J6): per-key state + event-time logic as steps on
+the :func:`streaming.keyed.keyed_process` harness.
 
 ``funnel_conversions`` detects the view→purchase-within-30-minutes
 pattern per user. The batch-checkable twin is ``q_funnel`` (a
@@ -13,32 +13,25 @@ from __future__ import annotations
 
 import bisect
 from functools import partial
-from typing import Iterable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flink_framework_spark.streaming.epoch import (
     epoch_s_to_timestamps,
-    instant_ms_to_naive_s,
-    naive_s_to_instant_ms,
     ts_series_to_epoch_s,
-    wallclock_tz,
 )
+from flink_framework_spark.streaming.keyed import keyed_process, out_frame
 
 FUNNEL_SCHEMA = "user_id long, purchase_ts timestamp_ntz"
+_FUNNEL_COLS = ("user_id", "purchase_ts")
 _STATE_SCHEMA = "views array<double>"
 _HORIZON_S = 30 * 60
 
 
-def _funnel_fn(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _funnel_step(key, st, rows, ctx):
     """Emit one row per purchase that converts a prior view (<=30 min).
 
     State: epoch-second floats of views still inside the horizon.
@@ -46,40 +39,29 @@ def _funnel_fn(
     file source preserves arrival order per file, but state logic must
     not depend on intra-batch order.
     """
-    (user_id,) = key
-    views: list[float] = list(state.get[0]) if state.exists else []
-    out_ts: list[pd.Timestamp] = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values("ts")
-        for ts, etype in zip(pdf["ts"], pdf["event_type"]):
-            sec = ts.timestamp()
-            if etype == "view":
-                views.append(sec)
-            elif etype == "purchase":
-                views = [v for v in views if sec - v <= _HORIZON_S]
-                if any(v < sec for v in views):
-                    out_ts.append(ts)
+    views: list[float] = [] if st is None else list(st[0])
+    out: list[tuple] = []
+    rows = rows.sort_values("ts")
+    for ts, etype in zip(rows["ts"], rows["event_type"]):
+        sec = ts.timestamp()
+        if etype == "view":
+            views.append(sec)
+        elif etype == "purchase":
+            views = [v for v in views if sec - v <= _HORIZON_S]
+            if any(v < sec for v in views):
+                out.append((key[0], ts))
     # trim state to the horizon of the latest seen event
     if views:
         horizon_floor = max(views) - _HORIZON_S
         views = [v for v in views if v >= horizon_floor]
-    state.update((views,))
-    if out_ts:
-        yield pd.DataFrame({"user_id": user_id, "purchase_ts": out_ts})
+    return (views,), out_frame(out, _FUNNEL_COLS), None
 
 
 def funnel_conversions(events: DataFrame) -> DataFrame:
     """Streaming view→purchase conversions per user (update mode)."""
-    return (
-        events.select("user_id", "ts", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _funnel_fn,
-            outputStructType=FUNNEL_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_process(
+        events.select("user_id", "ts", "event_type"), ["user_id"],
+        _funnel_step, out_schema=FUNNEL_SCHEMA, state_schema=_STATE_SCHEMA,
     )
 
 
@@ -215,11 +197,7 @@ def sequence_matches_join(
 _NEG_STATE_SCHEMA = "views array<double>, clicks array<double>"
 
 
-def _negated_funnel_fn(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _negated_funnel_step(key, st, rows, ctx):
     """view -> purchase within the horizon with NO click between: the
     streaming spelling of CEP negation (operators.cep
     .match_sequence_negated).
@@ -235,52 +213,38 @@ def _negated_funnel_fn(
     pattern horizon, not the stream length. Strict bounds also make
     same-instant ties (c == p, c == v, v == p) fall out of the
     comparison itself; no sort tie-break is needed."""
-    (user_id,) = key
-    if state.exists:
-        views = list(state.get[0])
-        clicks = list(state.get[1])
-    else:
-        views, clicks = [], []
-    out_ts: list[pd.Timestamp] = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values("ts")
-        for ts, etype in zip(pdf["ts"], pdf["event_type"]):
-            sec = ts.timestamp()
-            if etype == "view":
-                views.append(sec)
-            elif etype == "click":
-                clicks.append(sec)
-            elif etype == "purchase":
-                views = [v for v in views if sec - v <= _HORIZON_S]
-                if any(
-                    v < sec and not any(v < c < sec for c in clicks)
-                    for v in views
-                ):
-                    out_ts.append(ts)
+    views, clicks = ([], []) if st is None else map(list, st)
+    out: list[tuple] = []
+    rows = rows.sort_values("ts")
+    for ts, etype in zip(rows["ts"], rows["event_type"]):
+        sec = ts.timestamp()
+        if etype == "view":
+            views.append(sec)
+        elif etype == "click":
+            clicks.append(sec)
+        elif etype == "purchase":
+            views = [v for v in views if sec - v <= _HORIZON_S]
+            if any(
+                v < sec and not any(v < c < sec for c in clicks)
+                for v in views
+            ):
+                out.append((key[0], ts))
     # trim BOTH lists to the horizon of the latest seen event: a click
     # older than every retainable view can never negate anything again
     hi = max(views + clicks, default=None)
     if hi is not None:
         views = [v for v in views if v >= hi - _HORIZON_S]
         clicks = [c for c in clicks if c >= hi - _HORIZON_S]
-    state.update((views, clicks))
-    if out_ts:
-        yield pd.DataFrame({"user_id": user_id, "purchase_ts": out_ts})
+    return (views, clicks), out_frame(out, _FUNNEL_COLS), None
 
 
 def negated_funnel_conversions(events: DataFrame) -> DataFrame:
     """Streaming twin of q_cep_negation: view->purchase conversions
     with no intervening click, per user (update mode)."""
-    return (
-        events.select("user_id", "ts", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _negated_funnel_fn,
-            outputStructType=FUNNEL_SCHEMA,
-            stateStructType=_NEG_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_process(
+        events.select("user_id", "ts", "event_type"), ["user_id"],
+        _negated_funnel_step, out_schema=FUNNEL_SCHEMA,
+        state_schema=_NEG_STATE_SCHEMA,
     )
 
 
@@ -303,21 +267,27 @@ _PEND_STATE_SCHEMA = (
 _PEND_FIELDS = 5
 
 
-def _quant_out_frame(user_id, out):
+def _quant_out_frame(key, out):
     """Quantifier matches ``(first_s, last_s, n)`` -> the output rows
-    of :func:`times_matches` / :func:`greedy_matches`."""
-    first, last, n_reps = zip(*out)
-    return pd.DataFrame(
-        {
-            "user_id": user_id,
-            "ts_first": epoch_s_to_timestamps(first),
-            "ts_last": epoch_s_to_timestamps(last),
-            "n_reps": list(n_reps),
-        }
+    of :func:`times_matches` / :func:`greedy_matches` (None if none)."""
+    return out_frame(
+        [(key[0], *m) for m in out],
+        ("user_id", "ts_first", "ts_last", "n_reps"),
+        ("ts_first", "ts_last"),
     )
 
 
-def make_disorder_fn(new_core, disorder_s: float):
+def _feed_in_order(core, rows) -> None:
+    """Feed the call's rows to a quantifier core in (event time, event
+    id) order — the in-order drivers' contract."""
+    rows = rows.sort_values(["ts", "event_id"])
+    for ts, eid, etype in zip(
+        rows["ts"], rows["event_id"], rows["event_type"]
+    ):
+        core.feed(ts.timestamp(), eid, etype)
+
+
+def make_disorder_step(new_core, disorder_s: float):
     """The out-of-order driver for a quantifier core
     (:class:`_TimesCore` or :class:`_GreedyCore`): events park in a
     per-key reorder buffer and are RELEASED — in (event time, event
@@ -345,27 +315,20 @@ def make_disorder_fn(new_core, disorder_s: float):
     released: follow it with a second event at least ``disorder_s``
     later."""
 
-    def _fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            packed = state.get
-            core = new_core(packed[:-_PEND_FIELDS])
-            pend = list(zip(*packed[-_PEND_FIELDS:-2]))
-            hi, done = packed[-2:]
+    def _step(key, st, rows, ctx):
+        if st is not None:
+            core = new_core(st[:-_PEND_FIELDS])
+            pend = list(zip(*st[-_PEND_FIELDS:-2]))
+            hi, done = st[-2:]
         else:
             core = new_core(None)
             pend, hi, done = [], None, None
-        for pdf in pdfs:
-            for ts, eid, etype in zip(
-                pdf["ts"], pdf["event_id"], pdf["event_type"]
-            ):
-                sec = ts.timestamp()
-                pend.append((sec, int(eid), etype))
-                hi = sec if hi is None else max(hi, sec)
+        for ts, eid, etype in zip(
+            rows["ts"], rows["event_id"], rows["event_type"]
+        ):
+            sec = ts.timestamp()
+            pend.append((sec, int(eid), etype))
+            hi = sec if hi is None else max(hi, sec)
         if hi is not None:
             release_to = hi - disorder_s
             ready = sorted(
@@ -388,27 +351,23 @@ def make_disorder_fn(new_core, disorder_s: float):
                 done = sec if done is None else max(done, sec)
             if done is not None:
                 core.settle(done)
-        state.update(
-            core.pack()
-            + (
-                [e[0] for e in pend],
-                [e[1] for e in pend],
-                [e[2] for e in pend],
-                hi,
-                done,
-            )
+        new_st = core.pack() + (
+            [e[0] for e in pend],
+            [e[1] for e in pend],
+            [e[2] for e in pend],
+            hi,
+            done,
         )
-        if core.out:
-            yield _quant_out_frame(user_id, core.out)
+        return new_st, _quant_out_frame(key, core.out), None
 
-    return _fn
+    return _step
 
 
 class _TimesCore:
     """The times(m, n) transition core — run enumeration over the
     key's step-event list plus the emitted-run dedup set — shared by
-    the in-order driver (:func:`make_times_fn`) and the reorder
-    buffer (:func:`make_disorder_fn`). Events MUST be fed in (event
+    the in-order driver (:func:`make_times_step`) and the reorder
+    buffer (:func:`make_disorder_step`). Events MUST be fed in (event
     time, event id) order; contiguous windows of the clicks list are
     then the batch operator's consecutive runs."""
 
@@ -463,7 +422,7 @@ class _TimesCore:
         )
 
 
-def make_times_fn(
+def make_times_step(
     n_min: int,
     n_max: int,
     horizon_s: float,
@@ -483,33 +442,18 @@ def make_times_fn(
     This is the IN-ORDER driver: it assumes per-key in-order batches
     (the file-stream twins). :func:`times_matches` routes
     ``disorder_s > 0`` to the reorder buffer
-    (:func:`make_disorder_fn`), which handles late step events and
+    (:func:`make_disorder_step`), which handles late step events and
     late followers alike."""
 
-    def _times_fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        core = _TimesCore(
-            n_min, n_max, horizon_s, step, then_step,
-            state.get if state.exists else None,
-        )
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ts, eid, etype in zip(
-                pdf["ts"], pdf["event_id"], pdf["event_type"]
-            ):
-                core.feed(ts.timestamp(), eid, etype)
+    def _times_step(key, st, rows, ctx):
+        core = _TimesCore(n_min, n_max, horizon_s, step, then_step, st)
+        _feed_in_order(core, rows)
         hi = max((c for c, _ in core.clicks), default=None)
         if hi is not None:
             core.trim(hi - horizon_s)
-        state.update(core.pack())
-        if core.out:
-            yield _quant_out_frame(user_id, core.out)
+        return core.pack(), _quant_out_frame(key, core.out), None
 
-    return _times_fn
+    return _times_step
 
 
 def times_matches(
@@ -521,27 +465,20 @@ def times_matches(
     """Streaming twin of q_cep_times: step-run quantifier matches per
     user (update mode), one row per run on its first qualifying
     follower. ``disorder_s > 0`` routes to the reorder buffer
-    (:func:`make_disorder_fn`), which handles late step events as
+    (:func:`make_disorder_step`), which handles late step events as
     well as late followers."""
     if disorder_s:
-        fn = make_disorder_fn(
+        fn = make_disorder_step(
             partial(_TimesCore, n_min, n_max, horizon_s, step, then_step),
             disorder_s,
         )
         state_schema = _TIMES_STATE_SCHEMA + _PEND_STATE_SCHEMA
     else:
-        fn = make_times_fn(n_min, n_max, horizon_s, step, then_step)
+        fn = make_times_step(n_min, n_max, horizon_s, step, then_step)
         state_schema = _TIMES_STATE_SCHEMA
-    return (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=TIMES_SCHEMA,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_process(
+        events.select("user_id", "ts", "event_id", "event_type"),
+        ["user_id"], fn, out_schema=TIMES_SCHEMA, state_schema=state_schema,
     )
 
 
@@ -560,8 +497,8 @@ _GREEDY_STATE_SCHEMA = (
 class _GreedyCore:
     """The greedy-oneOrMore transition core — open-run extension /
     closure, closed-run horizon GC, follower buffering and matching —
-    shared by the in-order driver (:func:`make_greedy_fn`) and the
-    reorder buffer (:func:`make_disorder_fn`) so the two semantics
+    shared by the in-order driver (:func:`make_greedy_step`) and the
+    reorder buffer (:func:`make_disorder_step`) so the two semantics
     cannot drift. Events MUST be fed in event-time order; ordering is
     the caller's contract (per-batch sort for the in-order driver,
     the release order of the reorder buffer)."""
@@ -650,13 +587,12 @@ class _GreedyCore:
         )
 
 
-def make_greedy_fn(
+def make_greedy_step(
     max_gap_s: float,
     horizon_s: float,
     use_timeout: bool = False,
     step: str = "click",
     then_step: str = "purchase",
-    tz: str | None = None,
 ):
     """Streaming twin of operators.cep.match_one_or_more (greedy
     oneOrMore): per key, state holds the OPEN run (a maximal run is
@@ -669,9 +605,9 @@ def make_greedy_fn(
     Runs close on the next out-of-gap step event; a bounded stream
     closes its final runs with a far-future sentinel step event (the
     repo's watermark-sentinel convention). With ``use_timeout=True``
-    (requires a watermarked input and
-    ``GroupStateTimeout.EventTimeTimeout``) runs ALSO close when the
-    watermark passes ``open_last + max_gap`` — the Flink
+    (requires a watermarked input; the harness then arms event-time
+    timers) runs ALSO close when the watermark passes
+    ``open_last + max_gap`` — the Flink
     ``KeyedProcessFunction`` event-time timer, so unbounded streams
     need no sentinel: once the watermark proves no in-order event can
     extend the run, the timer fires and the buffered followers emit.
@@ -680,60 +616,31 @@ def make_greedy_fn(
     ``horizon_s``, and the buffer is trimmed to the open run's
     follower horizon."""
 
-    def _greedy_fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        core = _GreedyCore(
-            max_gap_s, horizon_s, step, then_step,
-            state.get if state.exists else None,
-        )
-
-        if use_timeout and state.hasTimedOut:
+    def _greedy_step(key, st, rows, ctx):
+        core = _GreedyCore(max_gap_s, horizon_s, step, then_step, st)
+        if ctx.timed_out:
             # the watermark passed open_last + max_gap: no in-order
             # click can extend the run — same closure as an
             # out-of-gap click, timer-driven. Also GC closed runs the
             # watermark has carried past their follower horizon.
             core.close_open()
-            wm_s = instant_ms_to_naive_s(
-                state.getCurrentWatermarkMs(), tz
-            )
             core.closed[:] = [
-                r for r in core.closed if wm_s <= r[0] + horizon_s
+                r for r in core.closed if ctx.wm_s <= r[0] + horizon_s
             ]
         else:
-            for pdf in pdfs:
-                pdf = pdf.sort_values(["ts", "event_id"])
-                for ts, eid, etype in zip(
-                    pdf["ts"], pdf["event_id"], pdf["event_type"]
-                ):
-                    core.feed(ts.timestamp(), eid, etype)
-        if (
-            use_timeout
-            and core.open_first is None
-            and not core.closed
-            and not core.buf
-        ):
-            state.remove()
-        else:
-            state.update(core.pack())
-            if use_timeout:
-                if core.open_first is not None:
-                    fire_s = core.open_last + max_gap_s
-                else:  # GC timer for lingering closed runs
-                    fire_s = max(r[0] for r in core.closed) + horizon_s
-                # the timer must sit past the current watermark
-                fire_ms = max(
-                    naive_s_to_instant_ms(fire_s, tz),
-                    state.getCurrentWatermarkMs() + 1,
-                )
-                state.setTimeoutTimestamp(fire_ms)
-        if core.out:
-            yield _quant_out_frame(user_id, core.out)
+            _feed_in_order(core, rows)
+        out = _quant_out_frame(key, core.out)
+        if not use_timeout:
+            return core.pack(), out, None
+        if core.open_first is not None:
+            fire_s = core.open_last + max_gap_s
+        elif core.closed:  # GC timer for lingering closed runs
+            fire_s = max(r[0] for r in core.closed) + horizon_s
+        else:  # nothing open or pending: drop the key
+            return None, out, None
+        return core.pack(), out, ctx.instant_ms(fire_s)
 
-    return _greedy_fn
+    return _greedy_step
 
 
 def greedy_matches(
@@ -751,7 +658,7 @@ def greedy_matches(
     on event-time timers too (input must carry a watermark).
 
     ``disorder_s > 0`` routes to the reorder buffer
-    (:func:`make_disorder_fn`): cross-batch event-time disorder up to
+    (:func:`make_disorder_step`): cross-batch event-time disorder up to
     the allowance lands in sequence; later-than-that events drop like
     late data under a watermark. Mutually exclusive with
     ``use_timeout`` — the release frontier is per-key
@@ -765,29 +672,20 @@ def greedy_matches(
             "buffer (sentinel-drained) or the event-time timer"
         )
     if disorder_s:
-        fn = make_disorder_fn(
+        fn = make_disorder_step(
             partial(_GreedyCore, max_gap_s, horizon_s, step, then_step),
             disorder_s,
         )
         state_schema = _GREEDY_STATE_SCHEMA + _PEND_STATE_SCHEMA
     else:
-        fn = make_greedy_fn(max_gap_s, horizon_s, use_timeout, step,
-                            then_step, tz=wallclock_tz(events, "ts"))
+        fn = make_greedy_step(max_gap_s, horizon_s, use_timeout, step,
+                              then_step)
         state_schema = _GREEDY_STATE_SCHEMA
-    return (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=GREEDY_SCHEMA,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=(
-                GroupStateTimeout.EventTimeTimeout
-                if use_timeout
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return keyed_process(
+        events.select("user_id", "ts", "event_id", "event_type"),
+        ["user_id"], fn, out_schema=GREEDY_SCHEMA,
+        state_schema=state_schema,
+        event_time="ts" if use_timeout else None,
     )
 
 
@@ -797,7 +695,7 @@ COUNT_WINDOW_SCHEMA = (
 _CW_STATE_SCHEMA = "total long, cur_sum double"
 
 
-def make_count_window_fn(size: int):
+def make_count_window_step(size: int):
     """Streaming twin of q_stream_count_window — Flink
     ``keyBy().countWindow(size)``: every ``size`` events per key form
     a window regardless of time. State is two scalars (events seen,
@@ -806,59 +704,41 @@ def make_count_window_fn(size: int):
     window re-emits with higher n until it fills, exactly how Flink's
     count trigger would fire an accumulating window)."""
 
-    def _cw_fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        total, cur_sum = state.get if state.exists else (0, 0.0)
+    def _cw_step(key, st, rows, ctx):
+        total, cur_sum = (0, 0.0) if st is None else st
         touched: dict[int, tuple[int, float]] = {}
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for v in pdf["value"]:
-                win = total // size
-                total += 1
-                cur_sum += float(v)
-                touched[win] = (total - win * size, cur_sum)
-                if total % size == 0:
-                    cur_sum = 0.0
-        state.update((total, cur_sum))
-        if touched:
-            wins = sorted(touched)
-            yield pd.DataFrame(
-                {
-                    "user_id": user_id,
-                    "win_id": wins,
-                    "n": [touched[w][0] for w in wins],
-                    "sumv": [touched[w][1] for w in wins],
-                }
-            )
+        for v in rows.sort_values(["ts", "event_id"])["value"]:
+            win = total // size
+            total += 1
+            cur_sum += float(v)
+            touched[win] = (total - win * size, cur_sum)
+            if total % size == 0:
+                cur_sum = 0.0
+        out = [(key[0], w, *touched[w]) for w in sorted(touched)]
+        return (
+            (total, cur_sum),
+            out_frame(out, ("user_id", "win_id", "n", "sumv")),
+            None,
+        )
 
-    return _cw_fn
+    return _cw_step
 
 
 def count_windows(events: DataFrame, size: int = 20) -> DataFrame:
     """Streaming count windows per key (update mode): the I-family
     gap called out in q_stream_count_window's docstring, closed. Take
     the LAST emission per (key, win_id) for the final window totals."""
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            make_count_window_fn(size),
-            outputStructType=COUNT_WINDOW_SCHEMA,
-            stateStructType=_CW_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_process(
+        events.select("user_id", "ts", "event_id", "value"), ["user_id"],
+        make_count_window_step(size), out_schema=COUNT_WINDOW_SCHEMA,
+        state_schema=_CW_STATE_SCHEMA,
     )
 
 
 _SEQ_STATE_SCHEMA = "prefixes array<string>, hi double, absents array<double>"
 
 
-def make_sequence_fn(
+def make_sequence_step(
     steps: list,
     horizon_s: float,
     disorder_s: float = 0.0,
@@ -877,7 +757,7 @@ def make_sequence_fn(
     from chaining with itself.
 
     With ``absent`` set (Flink ``notFollowedBy``, the streaming
-    generalization of ``_negated_funnel_fn``), absent-type timestamps
+    generalization of ``_negated_funnel_step``), absent-type timestamps
     are ALSO kept in state (horizon-trimmed) and a completing match
     only emits if no absent event falls strictly inside the
     ``between`` span (mandatory step indices; default first-to-last)
@@ -908,58 +788,50 @@ def make_sequence_fn(
     for i, s in enumerate(steps):
         positions.setdefault(s, []).append(i)
 
-    def _seq_fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
+    def _seq_step(key, st, rows, ctx):
         # partials bucketed by step index: extension only ever reads
         # bucket i-1 and appends to bucket i, so per-event cost is
         # O(|bucket i-1|), not O(all partials), and no defensive copy
         buckets: list[list] = [[] for _ in range(n - 1)]
         hi = None
         absents: list[float] = []
-        if state.exists:
-            for p in state.get[0]:
+        if st is not None:
+            for p in st[0]:
                 step_idx, secs, ids = _json.loads(p)
                 buckets[step_idx].append((secs, ids))
-            hi = state.get[1]
-            absents = list(state.get[2])
+            hi = st[1]
+            absents = list(st[2])
         out: list[tuple] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ts, eid, etype in zip(
-                pdf["ts"], pdf["event_id"], pdf["event_type"]
-            ):
-                # the trim high-water mark advances on EVERY row: a
-                # key dominated by unrelated event types must still
-                # trim its partials/absents at the documented
-                # horizon + disorder bound (state size, not
-                # correctness — trimmed partials can never complete)
-                sec = ts.timestamp()
-                hi = sec if hi is None else max(hi, sec)
-                if etype == absent:
-                    absents.append(sec)
-                if etype not in positions:
+        rows = rows.sort_values(["ts", "event_id"])
+        for ts, eid, etype in zip(
+            rows["ts"], rows["event_id"], rows["event_type"]
+        ):
+            # the trim high-water mark advances on EVERY row: a key
+            # dominated by unrelated event types must still trim its
+            # partials/absents at the documented horizon + disorder
+            # bound (state size, not correctness — trimmed partials
+            # can never complete)
+            sec = ts.timestamp()
+            hi = sec if hi is None else max(hi, sec)
+            if etype == absent:
+                absents.append(sec)
+            if etype not in positions:
+                continue
+            for i in positions[etype]:
+                if i == 0:
+                    buckets[0].append(([sec], [int(eid)]))
                     continue
-                for i in positions[etype]:
-                    if i == 0:
-                        buckets[0].append(([sec], [int(eid)]))
+                for secs, ids in buckets[i - 1]:
+                    if sec <= secs[-1] or sec > secs[0] + horizon_s:
                         continue
-                    for secs, ids in buckets[i - 1]:
-                        if sec <= secs[-1] or sec > secs[0] + horizon_s:
-                            continue
-                        if i == n - 1:
-                            full = secs + [sec]
-                            if absent is None or not any(
-                                full[bi] < a < full[bj] for a in absents
-                            ):
-                                out.append((full, ids + [int(eid)]))
-                        else:
-                            buckets[i].append(
-                                (secs + [sec], ids + [int(eid)])
-                            )
+                    if i == n - 1:
+                        full = secs + [sec]
+                        if absent is None or not any(
+                            full[bi] < a < full[bj] for a in absents
+                        ):
+                            out.append((full, ids + [int(eid)]))
+                    else:
+                        buckets[i].append((secs + [sec], ids + [int(eid)]))
         if hi is not None:
             floor = hi - horizon_s - disorder_s
             buckets = [
@@ -967,28 +839,24 @@ def make_sequence_fn(
                 for b in buckets
             ]
             absents = [a for a in absents if a >= floor]
-        state.update(
-            (
-                [
-                    _json.dumps([i, secs, ids])
-                    for i, b in enumerate(buckets)
-                    for secs, ids in b
-                ],
-                hi,
-                absents,
-            )
+        new_st = (
+            [
+                _json.dumps([i, secs, ids])
+                for i, b in enumerate(buckets)
+                for secs, ids in b
+            ],
+            hi,
+            absents,
         )
-        if out:
-            row: dict = {"user_id": user_id}
-            for i in range(n):
-                row[f"ts_{i}"] = [
-                    pd.Timestamp(round(secs[i] * 1e6) * 1000)
-                    for secs, _ in out
-                ]
-                row[f"id_{i}"] = [ids[i] for _, ids in out]
-            yield pd.DataFrame(row)
+        if not out:
+            return new_st, None, None
+        row: dict = {"user_id": key[0]}
+        for i in range(n):
+            row[f"ts_{i}"] = epoch_s_to_timestamps(secs[i] for secs, _ in out)
+            row[f"id_{i}"] = [ids[i] for _, ids in out]
+        return new_st, pd.DataFrame(row), None
 
-    return _seq_fn
+    return _seq_step
 
 
 def sequence_matches(
@@ -1006,18 +874,12 @@ def sequence_matches(
     schema = "user_id long, " + ", ".join(
         f"ts_{i} timestamp, id_{i} long" for i in range(len(steps))
     )
-    return (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            make_sequence_fn(
-                list(steps), horizon_s, disorder_s, absent, between
-            ),
-            outputStructType=schema,
-            stateStructType=_SEQ_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_process(
+        events.select("user_id", "ts", "event_id", "event_type"),
+        ["user_id"],
+        make_sequence_step(list(steps), horizon_s, disorder_s, absent,
+                           between),
+        out_schema=schema, state_schema=_SEQ_STATE_SCHEMA,
     )
 
 
@@ -1028,40 +890,34 @@ CHANGELOG_SCHEMA = (
 _CL_STATE_SCHEMA = "last_us long, last_eid long, last_op string, last_value double, n long"
 
 
-def _changelog_fn(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _changelog_step(key, st, rows, ctx):
     """Per-key upsert materialization: keep the (ts, event_id)-max row
     and a version counter in state; emit the current materialized row
     each batch (update mode). Timestamps are carried as exact epoch
     MICROSECONDS (int) in state — float seconds would round near ns
     boundaries. Intra-batch arrival order must not matter, so the
     max-row comparison is by value, not position."""
-    (user_id,) = key
-    if state.exists:
-        last_us, last_eid, last_op, last_value, n = state.get
+    if st is not None:
+        last_us, last_eid, last_op, last_value, n = st
     else:
         last_us, last_eid, last_op, last_value, n = -1, -1, None, None, 0
-    for pdf in pdfs:
-        for ts, eid, op, val in zip(
-            pdf["ts"], pdf["event_id"], pdf["event_type"], pdf["value"]
-        ):
-            us = ts.value // 1000
-            n += 1
-            if (us, eid) > (last_us, last_eid):
-                last_us, last_eid, last_op, last_value = us, int(eid), op, float(val)
-    state.update((last_us, last_eid, last_op, last_value, n))
-    yield pd.DataFrame(
+    for ts, eid, op, val in zip(
+        rows["ts"], rows["event_id"], rows["event_type"], rows["value"]
+    ):
+        us = ts.value // 1000
+        n += 1
+        if (us, eid) > (last_us, last_eid):
+            last_us, last_eid, last_op, last_value = us, int(eid), op, float(val)
+    out = pd.DataFrame(
         {
-            "user_id": [user_id],
+            "user_id": [key[0]],
             "last_ts": [pd.Timestamp(last_us * 1000)],
             "last_op": [last_op],
             "last_value": [last_value],
             "n_versions": [n],
         }
     )
+    return (last_us, last_eid, last_op, last_value, n), out, None
 
 
 def changelog_materialize(events: DataFrame) -> DataFrame:
@@ -1070,16 +926,10 @@ def changelog_materialize(events: DataFrame) -> DataFrame:
     the current last-writer-wins row per key every batch (update
     mode); the consumer's final state per key — minus tombstone ops —
     equals the batch compaction (property-tested)."""
-    return (
-        events.select("user_id", "ts", "event_id", "event_type", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _changelog_fn,
-            outputStructType=CHANGELOG_SCHEMA,
-            stateStructType=_CL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_process(
+        events.select("user_id", "ts", "event_id", "event_type", "value"),
+        ["user_id"], _changelog_step, out_schema=CHANGELOG_SCHEMA,
+        state_schema=_CL_STATE_SCHEMA,
     )
 
 
@@ -1092,7 +942,7 @@ _OVER_STATE_SCHEMA = (
 )
 
 
-def make_over_window_fn(tz: str | None = None):
+def make_over_window_step():
     """Streaming twin of the event-time OVER window (Flink SQL
     ``SUM(value) OVER (PARTITION BY key ORDER BY rowtime ROWS
     UNBOUNDED PRECEDING)``): per key, every row emits its running
@@ -1111,76 +961,48 @@ def make_over_window_fn(tz: str | None = None):
     scalars plus the not-yet-final buffer, which the watermark keeps
     bounded (delay window x per-key rate)."""
 
-    def _over_fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            n, sumv, buf_ts, buf_eid, buf_val = state.get
+    def _over_step(key, st, rows, ctx):
+        if st is not None:
+            n, sumv, buf_ts, buf_eid, buf_val = st
             buf = sorted(zip(buf_ts, buf_eid, buf_val))
         else:
             n, sumv, buf = 0, 0.0, []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for sec, eid, v in zip(
-                    ts_series_to_epoch_s(pdf["ts"]),
-                    pdf["event_id"],
-                    pdf["value"],
-                ):
-                    buf.append((sec, int(eid), float(v)))
+        if not ctx.timed_out:
+            for sec, eid, v in zip(
+                ts_series_to_epoch_s(rows["ts"]),
+                rows["event_id"],
+                rows["value"],
+            ):
+                buf.append((sec, int(eid), float(v)))
             buf.sort()
-        wm_s = instant_ms_to_naive_s(
-            state.getCurrentWatermarkMs(), tz
-        )
         # flush strictly below the watermark: Spark admits a late row
         # at exactly ts == watermark, and a same-ts row with a smaller
         # event_id would have to sort BEFORE an already-emitted row —
         # one cut point, sliced once (a pop(0) loop is O(k^2) on a
         # deep buffer)
-        cut = bisect.bisect_left(buf, (wm_s,))
+        cut = bisect.bisect_left(buf, (ctx.wm_s,))
         out: list[tuple] = []
         for sec, eid, v in buf[:cut]:
             n += 1
             sumv += v
-            out.append((sec, eid, n, sumv))
+            out.append((key[0], sec, eid, n, sumv))
         buf = buf[cut:]
-        if buf:
-            state.update(
-                (
-                    n,
-                    sumv,
-                    [t for t, _, _ in buf],
-                    [e for _, e, _ in buf],
-                    [v for _, _, v in buf],
-                )
-            )
-            # re-fire when the watermark passes the earliest buffered
-            # row (clamped past the current watermark — a timer at or
-            # below it would never fire)
-            state.setTimeoutTimestamp(
-                max(
-                    naive_s_to_instant_ms(buf[0][0], tz),
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-        elif n:
-            state.update((n, sumv, [], [], []))
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": user_id,
-                    "ts": epoch_s_to_timestamps(s for s, _, _, _ in out),
-                    "event_id": [e for _, e, _, _ in out],
-                    "run_n": [rn for _, _, rn, _ in out],
-                    "run_sum": [rs for _, _, _, rs in out],
-                }
-            )
+        rows_out = out_frame(
+            out, ("user_id", "ts", "event_id", "run_n", "run_sum"), ("ts",)
+        )
+        if not buf:
+            return ((n, sumv, [], [], []) if n else None), rows_out, None
+        new_st = (
+            n,
+            sumv,
+            [t for t, _, _ in buf],
+            [e for _, e, _ in buf],
+            [v for _, _, v in buf],
+        )
+        # re-fire when the watermark passes the earliest buffered row
+        return new_st, rows_out, ctx.instant_ms(buf[0][0])
 
-    return _over_fn
+    return _over_step
 
 
 def over_window_running(events: DataFrame) -> DataFrame:
@@ -1188,14 +1010,8 @@ def over_window_running(events: DataFrame) -> DataFrame:
     per-row emission, watermark-ordered). Input must carry a
     watermark; output rows never retract — each is final when
     emitted, exactly Flink's rowtime over-aggregate contract."""
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            make_over_window_fn(tz=wallclock_tz(events, "ts")),
-            outputStructType=OVER_SCHEMA,
-            stateStructType=_OVER_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_process(
+        events.select("user_id", "ts", "event_id", "value"), ["user_id"],
+        make_over_window_step(), out_schema=OVER_SCHEMA,
+        state_schema=_OVER_STATE_SCHEMA, event_time="ts",
     )

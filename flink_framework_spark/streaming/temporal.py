@@ -27,20 +27,18 @@ Scale/semantics notes:
 from __future__ import annotations
 
 from bisect import bisect_left, bisect_right
-from typing import Iterable, Iterator, Sequence
+from typing import Sequence
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flink_framework_spark.streaming.epoch import (
     epoch_s_to_timestamps,
-    instant_ms_to_naive_s,
     ts_series_to_epoch_s,
-    wallclock_tz,
 )
+from flink_framework_spark.streaming.keyed import keyed_process, state_array
 
 
 def temporal_join_stream(
@@ -75,17 +73,6 @@ def temporal_join_stream(
 # TABLE FUNCTION join — the versioned dimension arrives as a live
 # stream of updates, not a pre-built SCD2 table).
 # ---------------------------------------------------------------------------
-
-_STATE_ARRAY = {
-    "boolean": "array<boolean>",
-    "bigint": "array<bigint>",
-    "int": "array<int>",
-    "double": "array<double>",
-    "float": "array<float>",
-    "string": "array<string>",
-    # timestamps ride as epoch seconds (micros-exact at current epochs)
-    "timestamp": "array<double>",
-}
 
 _WM_KEY = "spark.watermarkDelayMs"
 
@@ -245,16 +232,16 @@ def temporal_join_changelog_stream(
     keys, f_types, d_types, payload, attrs = _preflight(
         facts, dim_updates, on, fact_ts, dim_ts, how
     )
-    for side, cols, types in (
-        ("fact", payload, f_types),
-        ("dim", attrs, d_types),
-    ):
-        for c in cols:
-            if types[c] not in _STATE_ARRAY:
-                raise ValueError(
-                    f"{side} column {c!r} of type {types[c]} is not "
-                    "supported in temporal-join state"
-                )
+    # _cell encodes instants only: a TIMESTAMP_NTZ payload is refused
+    arr = {
+        c: state_array(f"{side} column {c!r}", types[c], "temporal-join",
+                       ntz=False)
+        for side, cols, types in (
+            ("fact", payload, f_types),
+            ("dim", attrs, d_types),
+        )
+        for c in cols
+    }
 
     fan = _wm_side(facts, fact_ts, watermark).select(
         *keys,
@@ -271,17 +258,11 @@ def temporal_join_changelog_stream(
         *attrs,
     )
     unioned = fan.unionByName(dan)
-    # watermark (instant) vs Arrow timestamps (session wall-clock
-    # naive): align through the epoch.py converters — here the
-    # watermark GATES emission and version pruning, so the skew was
-    # correctness-bearing under non-UTC sessions
-    _tz = wallclock_tz(unioned, "__ts")
-
     state_schema = ", ".join(
         ["d_ts array<double>"]
-        + [f"d_{i} {_STATE_ARRAY[d_types[a]]}" for i, a in enumerate(attrs)]
+        + [f"d_{i} {arr[a]}" for i, a in enumerate(attrs)]
         + ["f_ts array<double>"]
-        + [f"f_{i} {_STATE_ARRAY[f_types[p]]}" for i, p in enumerate(payload)]
+        + [f"f_{i} {arr[p]}" for i, p in enumerate(payload)]
     )
     out_schema = ", ".join(
         [f"{k} {f_types[k]}" for k in keys]
@@ -293,13 +274,8 @@ def temporal_join_changelog_stream(
     p_typ = [f_types[p] for p in payload]
     a_typ = [d_types[a] for a in attrs]
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            st = state.get
+    def step(key, st, pdf, ctx):
+        if st is not None:
             d_us = [round(s * 1e6) for s in st[0]]
             d_at = [list(st[1 + i]) for i in range(na)]
             f_us = [round(s * 1e6) for s in st[1 + na]]
@@ -309,9 +285,7 @@ def temporal_join_changelog_stream(
             d_at = [[] for _ in range(na)]
             f_pl = [[] for _ in range(np_)]
         new_dim: list[tuple] = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
+        if pdf is not None and len(pdf):
             ts_us = [round(s * 1e6) for s in ts_series_to_epoch_s(pdf["__ts"])]
             sides = pdf["__side"].tolist()
             a_cols = [pdf[a] for a in attrs]
@@ -339,11 +313,10 @@ def temporal_join_changelog_stream(
                     d_us.insert(j, us)
                     for i in range(na):
                         d_at[i].insert(j, vals[i])
-        wm_us = round(
-            instant_ms_to_naive_s(
-                state.getCurrentWatermarkMs(), _tz
-            ) * 1e6
-        )
+        # the watermark GATES emission and version pruning, so the
+        # harness's instant-vs-wall-clock alignment is correctness-
+        # bearing under non-UTC sessions
+        wm_us = round(ctx.wm_s * 1e6)
         emit_idx = [r for r, us in enumerate(f_us) if us < wm_us]
         out_rows: list[tuple] = []  # (f_us, payload.., attrs..)
         for r in emit_idx:
@@ -366,41 +339,34 @@ def temporal_join_changelog_stream(
         if cut:
             d_us = d_us[cut:]
             d_at = [col[cut:] for col in d_at]
-        state.update(
-            (
-                [us / 1e6 for us in d_us],
-                *d_at,
-                [us / 1e6 for us in f_us],
-                *f_pl,
-            )
+        new_st = (
+            [us / 1e6 for us in d_us],
+            *d_at,
+            [us / 1e6 for us in f_us],
+            *f_pl,
         )
-        if f_us:
-            # re-fire when the watermark moves so pending facts drain
-            # without new per-key input (fires the batch AFTER wm
-            # advances; must be strictly above the current wm)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        if out_rows:
-            data = {k: [key[i]] * len(out_rows)
-                    for i, k in enumerate(keys)}
-            data[fact_ts] = epoch_s_to_timestamps(
-                [row[0] / 1e6 for row in out_rows]
+        # re-fire when the watermark moves so pending facts drain
+        # without new per-key input (fires the batch AFTER wm advances)
+        timer = ctx.wm_ms + 1 if f_us else None
+        if not out_rows:
+            return new_st, None, timer
+        data = {k: [key[i]] * len(out_rows) for i, k in enumerate(keys)}
+        data[fact_ts] = epoch_s_to_timestamps(
+            [row[0] / 1e6 for row in out_rows]
+        )
+        for i, p in enumerate(payload):
+            data[p] = _out_series(
+                [row[1 + i] for row in out_rows], p_typ[i]
             )
-            for i, p in enumerate(payload):
-                data[p] = _out_series(
-                    [row[1 + i] for row in out_rows], p_typ[i]
-                )
-            for i, a in enumerate(attrs):
-                data[a] = _out_series(
-                    [row[1 + np_ + i] for row in out_rows], a_typ[i]
-                )
-            yield pd.DataFrame(data)
+        for i, a in enumerate(attrs):
+            data[a] = _out_series(
+                [row[1 + np_ + i] for row in out_rows], a_typ[i]
+            )
+        return new_st, pd.DataFrame(data), timer
 
-    return unioned.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return keyed_process(
+        unioned, keys, step, out_schema=out_schema,
+        state_schema=state_schema, event_time="__ts",
     )
 
 

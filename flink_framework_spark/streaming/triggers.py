@@ -18,21 +18,12 @@ their end.
 from __future__ import annotations
 
 import json as _json
-from typing import Iterable, Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from flink_framework_spark.streaming.epoch import (
-    epoch_s_to_timestamps,
-    instant_ms_to_naive_s,
-    naive_s_to_instant_ms,
-    ts_series_to_epoch_s,
-    wallclock_tz,
-)
+from flink_framework_spark.streaming.epoch import ts_series_to_epoch_s
+from flink_framework_spark.streaming.keyed import keyed_process, out_frame
 
 _STATE_SCHEMA = "windows array<string>"
 
@@ -46,32 +37,24 @@ _CONT_OUT = (
 )
 
 
-def _load_windows(state: GroupState) -> dict:
+def _load_windows(st) -> dict:
     """The key's in-flight window records, keyed by window start."""
-    if not state.exists:
+    if st is None:
         return {}
-    (arr,) = state.get
-    return {d["w"]: d for d in map(_json.loads, arr)}
+    return {d["w"]: d for d in map(_json.loads, st[0])}
 
 
-def _store_windows(
-    state: GroupState, wins: dict, next_fire: float | None, tz: str | None
-) -> None:
-    """Persist the key's live windows and arm the event-time timer
-    just past ``next_fire`` (naive wall-clock seconds; clamped past
-    the current watermark — a timer at or below it never fires), or
-    drop the key once no window is left."""
+def _result(wins: dict, next_fire, ctx, out, names, ts_names):
+    """A trigger step's result: the key's live windows (None drops
+    the key once no window is left), the firings ``out`` as a frame
+    of columns ``names`` (epoch seconds rendered as timestamps in
+    ``ts_names``), and the event-time timer 1 ms past ``next_fire``
+    (naive wall-clock seconds)."""
+    frame = out_frame(out, names, ts_names)
     if not wins:
-        state.remove()
-        return
-    state.update(([_json.dumps(wins[w]) for w in sorted(wins)],))
-    if next_fire is not None:
-        state.setTimeoutTimestamp(
-            max(
-                naive_s_to_instant_ms(next_fire, tz) + 1,
-                state.getCurrentWatermarkMs() + 1,
-            )
-        )
+        return None, frame, None
+    timer = None if next_fire is None else ctx.instant_ms(next_fire) + 1
+    return ([_json.dumps(wins[w]) for w in sorted(wins)],), frame, timer
 
 
 def count_trigger_stream(
@@ -94,35 +77,22 @@ def count_trigger_stream(
         raise ValueError("CountTrigger needs n >= 1")
     if evict_last is not None and evict_last < 1:
         raise ValueError("CountEvictor needs keep >= 1")
-    # the watermark is an instant; the Arrow-delivered timestamps are
-    # session wall-clock naive — align the clocks (epoch.py helpers)
-    _tz = wallclock_tz(events, ts_col)
 
-    def _fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def _step(key, st, rows, ctx):
         (key_value,) = key
-        wins = _load_windows(state)
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                secs = ts_series_to_epoch_s(pdf[ts_col])
-                ids = pdf[id_col].tolist()
-                vals = pdf[val_col].astype(float).tolist()
-                for t, i, v in zip(secs, ids, vals):
-                    w = (t // window_s) * window_s
-                    d = wins.setdefault(
-                        w,
-                        {"w": w, "cnt": 0, "sum": 0.0, "last": [],
-                         "buf": []},
-                    )
-                    d["buf"].append([t, i, v])
-        wm = instant_ms_to_naive_s(
-            state.getCurrentWatermarkMs(), _tz
-        )
+        wins = _load_windows(st)
+        if not ctx.timed_out:
+            secs = ts_series_to_epoch_s(rows[ts_col])
+            ids = rows[id_col].tolist()
+            vals = rows[val_col].astype(float).tolist()
+            for t, i, v in zip(secs, ids, vals):
+                w = (t // window_s) * window_s
+                d = wins.setdefault(
+                    w,
+                    {"w": w, "cnt": 0, "sum": 0.0, "last": [], "buf": []},
+                )
+                d["buf"].append([t, i, v])
+        wm = ctx.wm_s
         out = []
         next_fire = None
         for w in sorted(wins):
@@ -154,35 +124,21 @@ def count_trigger_stream(
                     t_next if next_fire is None
                     else min(next_fire, t_next)
                 )
-        _store_windows(state, wins, next_fire, _tz)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "key": [o[0] for o in out],
-                    "w_start": epoch_s_to_timestamps(
-                        [o[1] for o in out]
-                    ),
-                    "firing_seq": [o[2] for o in out],
-                    "n_elems": [o[3] for o in out],
-                    "sum_v": [o[4] for o in out],
-                }
-            )
+        return _result(
+            wins, next_fire, ctx, out,
+            ("key", "w_start", "firing_seq", "n_elems", "sum_v"),
+            ("w_start",),
+        )
 
-    return (
+    return keyed_process(
         events.select(
             F.col(key_col).cast("string").alias(key_col),
             ts_col,
             id_col,
             val_col,
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=_COUNT_OUT,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        ),
+        [key_col], _step, out_schema=_COUNT_OUT,
+        state_schema=_STATE_SCHEMA, event_time=ts_col,
     )
 
 
@@ -213,44 +169,33 @@ def continuous_trigger_stream(
             "window start equals Flink's epoch alignment only then "
             "(same precondition as the batch operator)"
         )
-    _tz = wallclock_tz(events, ts_col)
 
-    def _fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def _step(key, st, rows, ctx):
         (key_value,) = key
-        wins = _load_windows(state)
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                secs = ts_series_to_epoch_s(pdf[ts_col])
-                vals = pdf[val_col].astype(float).tolist()
-                for t, v in zip(secs, vals):
-                    w = (t // window_s) * window_s
-                    d = wins.get(w)
-                    if d is None:
-                        d = wins[w] = {
-                            "w": w,
-                            "nb": w
-                            + ((t - w) // interval_s + 1) * interval_s,
-                            "fired": 0,
-                            "el": [],
-                        }
-                    elif d["fired"] == 0:
-                        # an earlier element (still above the
-                        # watermark) can pull the first boundary back
-                        # — sound only before any firing
-                        d["nb"] = min(
-                            d["nb"],
-                            w + ((t - w) // interval_s + 1) * interval_s,
-                        )
-                    d["el"].append([t, v])
-        wm = instant_ms_to_naive_s(
-            state.getCurrentWatermarkMs(), _tz
-        )
+        wins = _load_windows(st)
+        if not ctx.timed_out:
+            secs = ts_series_to_epoch_s(rows[ts_col])
+            vals = rows[val_col].astype(float).tolist()
+            for t, v in zip(secs, vals):
+                w = (t // window_s) * window_s
+                d = wins.get(w)
+                if d is None:
+                    d = wins[w] = {
+                        "w": w,
+                        "nb": w + ((t - w) // interval_s + 1) * interval_s,
+                        "fired": 0,
+                        "el": [],
+                    }
+                elif d["fired"] == 0:
+                    # an earlier element (still above the watermark)
+                    # can pull the first boundary back — sound only
+                    # before any firing
+                    d["nb"] = min(
+                        d["nb"],
+                        w + ((t - w) // interval_s + 1) * interval_s,
+                    )
+                d["el"].append([t, v])
+        wm = ctx.wm_s
         out = []
         next_fire = None
         for w in sorted(wins):
@@ -292,37 +237,20 @@ def continuous_trigger_stream(
                     t_next if next_fire is None
                     else min(next_fire, t_next)
                 )
-        _store_windows(state, wins, next_fire, _tz)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "key": [o[0] for o in out],
-                    "w_start": epoch_s_to_timestamps(
-                        [o[1] for o in out]
-                    ),
-                    "fire_at": epoch_s_to_timestamps(
-                        [o[2] for o in out]
-                    ),
-                    "firing": [o[3] for o in out],
-                    "n_elems": [o[4] for o in out],
-                    "sum_v": [o[5] for o in out],
-                }
-            )
+        return _result(
+            wins, next_fire, ctx, out,
+            ("key", "w_start", "fire_at", "firing", "n_elems", "sum_v"),
+            ("w_start", "fire_at"),
+        )
 
-    return (
+    return keyed_process(
         events.select(
             F.col(key_col).cast("string").alias(key_col),
             ts_col,
             val_col,
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=_CONT_OUT,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        ),
+        [key_col], _step, out_schema=_CONT_OUT,
+        state_schema=_STATE_SCHEMA, event_time=ts_col,
     )
 
 
@@ -375,49 +303,36 @@ def allowed_lateness_stream(
         )
     shift_s = window_s + lateness_s
     wm_delay = delay_s + shift_s
-    # the watermark classifies rows here (late vs dropped), so the
-    # instant-vs-wall-clock alignment (epoch.py helpers) is
-    # correctness-critical, not just firing-time
-    _tz = wallclock_tz(events, ts_col)
 
-    def _fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def _step(key, st, rows, ctx):
         (key_value,) = key
-        wins = _load_windows(state)
-        flink_wm = (
-            instant_ms_to_naive_s(
-                state.getCurrentWatermarkMs(), _tz
-            )
-            + shift_s
-        )
+        wins = _load_windows(st)
+        # the watermark classifies rows here (late vs dropped), so the
+        # harness's instant-vs-wall-clock alignment is
+        # correctness-critical, not just firing-time
+        flink_wm = ctx.wm_s + shift_s
         dirty: set = set()
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                secs = ts_series_to_epoch_s(pdf[ts_col])
-                vals = pdf[val_col].astype(float).tolist()
-                for t, v in zip(secs, vals):
-                    w = (t // window_s) * window_s
-                    w_end = w + window_s
-                    if flink_wm >= w_end + lateness_s:
-                        continue  # past the lateness horizon: drop
-                    d = wins.get(w)
-                    if d is None:
-                        d = wins[w] = {
-                            "w": w, "no": 0, "so": 0.0,
-                            "nl": 0, "sl": 0.0, "lf": 0, "ot": 0,
-                        }
-                    if flink_wm < w_end:
-                        d["no"] += 1
-                        d["so"] += v
-                    else:
-                        d["nl"] += 1
-                        d["sl"] += v
-                        dirty.add(w)
+        if not ctx.timed_out:
+            secs = ts_series_to_epoch_s(rows[ts_col])
+            vals = rows[val_col].astype(float).tolist()
+            for t, v in zip(secs, vals):
+                w = (t // window_s) * window_s
+                w_end = w + window_s
+                if flink_wm >= w_end + lateness_s:
+                    continue  # past the lateness horizon: drop
+                d = wins.get(w)
+                if d is None:
+                    d = wins[w] = {
+                        "w": w, "no": 0, "so": 0.0,
+                        "nl": 0, "sl": 0.0, "lf": 0, "ot": 0,
+                    }
+                if flink_wm < w_end:
+                    d["no"] += 1
+                    d["so"] += v
+                else:
+                    d["nl"] += 1
+                    d["sl"] += v
+                    dirty.add(w)
         out = []
         next_fire = None
         for w in sorted(wins):
@@ -450,36 +365,21 @@ def allowed_lateness_stream(
                     t_next if next_fire is None
                     else min(next_fire, t_next)
                 )
-        _store_windows(state, wins, next_fire, _tz)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "key": [o[0] for o in out],
-                    "w_start": epoch_s_to_timestamps(
-                        [o[1] for o in out]
-                    ),
-                    "firing": [o[2] for o in out],
-                    "fire_seq": [o[3] for o in out],
-                    "n_elems": [o[4] for o in out],
-                    "sum_v": [o[5] for o in out],
-                }
-            )
+        return _result(
+            wins, next_fire, ctx, out,
+            ("key", "w_start", "firing", "fire_seq", "n_elems", "sum_v"),
+            ("w_start",),
+        )
 
     src = events.withWatermark(
         ts_col, f"{int(round(wm_delay))} seconds"
     )
-    return (
+    return keyed_process(
         src.select(
             F.col(key_col).cast("string").alias("__k"),
             F.col(ts_col),
             F.col(val_col),
-        )
-        .groupBy("__k")
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=_LATE_OUT,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        ),
+        ["__k"], _step, out_schema=_LATE_OUT, state_schema=_STATE_SCHEMA,
+        event_time=ts_col,
     )

@@ -284,10 +284,10 @@ def test_skip_strategies_distinguish_duplicate_timestamp_matches(spark):
 def test_sequence_fn_guards_absent_in_steps():
     """absent= naming one of the chain steps means the event would be
     both negated and chained — must raise loudly."""
-    from flink_framework_spark.streaming.stateful import make_sequence_fn
+    from flink_framework_spark.streaming.stateful import make_sequence_step
 
     with pytest.raises(ValueError, match="absent"):
-        make_sequence_fn(["view", "click"], 100.0, absent="click")
+        make_sequence_step(["view", "click"], 100.0, absent="click")
 
 
 def test_sequence_fn_trims_state_on_unrelated_events():
@@ -296,25 +296,11 @@ def test_sequence_fn_trims_state_on_unrelated_events():
     horizon bound (state size contract)."""
     import pandas as pd
 
-    from flink_framework_spark.streaming.stateful import make_sequence_fn
+    from flink_framework_spark.streaming.stateful import make_sequence_step
+    from tests.fake_state import FakeState, call
 
-    class ScriptedState:
-        def __init__(self):
-            self._val, self.exists = None, False
-            self.hasTimedOut = False
-
-        @property
-        def get(self):
-            return self._val
-
-        def update(self, v):
-            self._val, self.exists = v, True
-
-        def remove(self):
-            self._val, self.exists = None, False
-
-    fn = make_sequence_fn(["view", "click"], horizon_s=100.0)
-    st = ScriptedState()
+    step = make_sequence_step(["view", "click"], horizon_s=100.0)
+    st = FakeState()
     T = 1_700_000_000
     # batch 1: a 'view' opens a partial
     p1 = pd.DataFrame(
@@ -324,7 +310,7 @@ def test_sequence_fn_trims_state_on_unrelated_events():
             "event_type": ["view"],
         }
     )
-    list(fn((1,), [p1], st))
+    call(step, st, (1,), [p1])
     assert len(st.get[0]) == 1  # one partial in state
     # batch 2: only UNRELATED events, 500s past the horizon
     p2 = pd.DataFrame(
@@ -334,7 +320,7 @@ def test_sequence_fn_trims_state_on_unrelated_events():
             "event_type": ["error"],
         }
     )
-    list(fn((1,), [p2], st))
+    call(step, st, (1,), [p2])
     assert st.get[0] == []  # partial trimmed despite no step events
 
 

@@ -1,9 +1,9 @@
-"""The quantifier reorder buffer (streaming.stateful.make_disorder_fn),
-driven directly without a Spark session.
+"""The quantifier reorder buffer (streaming.stateful.make_disorder_step),
+driven through the keyed-state harness without a Spark session.
 
-A fake GroupState carries the packed state between calls, so every
-multi-call test also exercises the pack/unpack round trip of both the
-buffer's fields and its core's fields.
+The shared fake GroupState carries the packed state between calls, so
+every multi-call test also exercises the pack/unpack round trip of
+both the buffer's fields and its core's fields.
 """
 
 from __future__ import annotations
@@ -17,34 +17,14 @@ import pytest
 from flink_framework_spark.streaming.stateful import (
     _GreedyCore,
     _TimesCore,
-    make_disorder_fn,
-    make_greedy_fn,
-    make_times_fn,
+    make_disorder_step,
+    make_greedy_step,
+    make_times_step,
 )
+from tests.fake_state import FakeState, call
 
 T0 = pd.Timestamp("2024-03-01 12:00:00")
 SEC0 = T0.timestamp()
-
-
-class FakeState:
-    """The slice of ``GroupState`` the quantifier drivers touch. Lists
-    are copied on update so the driver cannot lean on aliasing."""
-
-    def __init__(self):
-        self._packed = None
-
-    @property
-    def exists(self):
-        return self._packed is not None
-
-    @property
-    def get(self):
-        return self._packed
-
-    def update(self, packed):
-        self._packed = tuple(
-            list(v) if isinstance(v, list) else v for v in packed
-        )
 
 
 class RecordingCore:
@@ -76,9 +56,11 @@ def batch(events):
     )
 
 
-def run(fn, state, batches):
-    """Feed ``batches`` through ``fn`` one call each; collect output."""
-    frames = [f for b in batches for f in fn((7,), [batch(b)], state)]
+def run(step, state, batches):
+    """Feed ``batches`` through ``step`` one call each; collect output."""
+    frames = [
+        f for b in batches for f in call(step, state, (7,), [batch(b)])
+    ]
     if not frames:
         return []
     out = pd.concat(frames)
@@ -105,7 +87,7 @@ def test_shuffled_arrival_releases_in_ts_id_order():
     batches = [arrival[i:i + 13] for i in range(0, 60, 13)]
     batches.append([(1000, 1, "click")])  # far-future flush
     state = FakeState()
-    run(make_disorder_fn(RecordingCore, 10.0), state, batches)
+    run(make_disorder_step(RecordingCore, 10.0), state, batches)
     assert fed_log(state) == sorted(events, key=lambda e: (e[0], e[1]))
     pend_ts, pend_id, pend_type, hi, done = state.get[3:]
     assert (pend_id, pend_type) == ([1], ["click"])
@@ -115,7 +97,7 @@ def test_shuffled_arrival_releases_in_ts_id_order():
 
 def test_frontier_ties_and_late_events():
     state = FakeState()
-    fn = make_disorder_fn(RecordingCore, 10.0)
+    fn = make_disorder_step(RecordingCore, 10.0)
     # hi=20 releases the two sec-0 events (a same-batch tie: both feed)
     run(fn, state, [[(0, 5, "click"), (20, 2, "click"), (0, 1, "click")]])
     assert fed_log(state) == [(0, 1, "click"), (0, 5, "click")]
@@ -135,20 +117,20 @@ def test_frontier_ties_and_late_events():
 
 
 def _times_in_order():
-    return make_times_fn(2, 3, 60.0)
+    return make_times_step(2, 3, 60.0)
 
 
 def _times_disorder(d):
-    return make_disorder_fn(partial(_TimesCore, 2, 3, 60.0, "click",
+    return make_disorder_step(partial(_TimesCore, 2, 3, 60.0, "click",
                                     "purchase"), d)
 
 
 def _greedy_in_order():
-    return make_greedy_fn(5.0, 60.0)
+    return make_greedy_step(5.0, 60.0)
 
 
 def _greedy_disorder(d):
-    return make_disorder_fn(partial(_GreedyCore, 5.0, 60.0, "click",
+    return make_disorder_step(partial(_GreedyCore, 5.0, 60.0, "click",
                                     "purchase"), d)
 
 

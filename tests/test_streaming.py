@@ -440,6 +440,43 @@ def test_negated_funnel_multibatch_late_purchase(spark, tmp_path):
     assert batch_users == [1]
 
 
+def test_funnel_sorts_the_whole_call_across_arrow_chunks(spark, tmp_path):
+    """Spark hands a key's micro-batch to the state function in Arrow
+    chunks of at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    rows. One user's purchase row arrives BEFORE its view inside one
+    micro-batch: sorting chunk by chunk would feed the purchase first
+    and miss the conversion under one-row chunks. The funnel must
+    emit the same rows under both chunkings."""
+    src = tmp_path / "src"
+    spark.createDataFrame(
+        [(1, 1, "2024-01-01 10:10:00", "purchase"),
+         (1, 2, "2024-01-01 10:00:00", "view"),
+         (1, 3, "2024-01-01 10:20:00", "purchase")],
+        "user_id long, event_id long, ts string, event_type string",
+    ).selectExpr(
+        "user_id", "event_id", "CAST(ts AS timestamp) AS ts", "event_type"
+    ).coalesce(1).write.parquet(str(src))
+    schema = spark.read.parquet(str(src)).schema
+
+    def drain(name):
+        sdf = spark.readStream.schema(schema).parquet(str(src))
+        out = run_to_memory(
+            funnel_conversions(sdf), query_name=name, output_mode="update"
+        )
+        return sorted(map(tuple, out.collect()))
+
+    default = drain("t_funnel_chunks_default")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        one_row_chunks = drain("t_funnel_chunks_one")
+    finally:
+        spark.conf.set(conf, old)
+    assert len(default) == 2
+    assert one_row_chunks == default
+
+
 def test_stateful_times_matches_batch(spark, sf_dir):
     """applyInPandasWithState quantifier twin == batch match_times:
     identical (user, run, n_reps) match sets, compared at microsecond
@@ -1093,41 +1130,20 @@ def test_over_flush_strictly_below_watermark():
     timestamp, and a same-ts row with a smaller event_id sorts
     BEFORE the already-emitted one — emitting early would break the
     batch (ts, event_id) ordinal order. Driven directly through the
-    state function with a scripted GroupState."""
-    from flink_framework_spark.streaming.stateful import make_over_window_fn
+    step through the harness with the shared fake GroupState."""
+    from flink_framework_spark.streaming.stateful import (
+        make_over_window_step,
+    )
+    from tests.fake_state import FakeState, call
 
-    class ScriptedState:
-        def __init__(self, wm_ms):
-            self.wm_ms = wm_ms
-            self._val = None
-            self.exists = False
-            self.hasTimedOut = False
-            self.timer = None
-
-        @property
-        def get(self):
-            return self._val
-
-        def getCurrentWatermarkMs(self):
-            return self.wm_ms
-
-        def update(self, v):
-            self._val, self.exists = v, True
-
-        def remove(self):
-            self._val, self.exists = None, False
-
-        def setTimeoutTimestamp(self, t):
-            self.timer = t
-
-    fn = make_over_window_fn()
+    step = make_over_window_step()
     T = 1_700_000_000
-    st = ScriptedState(T * 1000)
+    st = FakeState(T * 1000)
     pdf = pd.DataFrame(
         {"ts": pd.to_datetime([T], unit="s"), "event_id": [2],
          "value": [5.0]}
     )
-    out = list(fn((1,), [pdf], st))
+    out = call(step, st, (1,), [pdf], timed=True)
     assert out == [] and st.exists  # ts == wm: buffered, not emitted
     assert st.timer is not None and st.timer > T * 1000
 
@@ -1137,7 +1153,7 @@ def test_over_flush_strictly_below_watermark():
         {"ts": pd.to_datetime([T], unit="s"), "event_id": [1],
          "value": [7.0]}
     )
-    (rows,) = list(fn((1,), [pdf2], st))
+    (rows,) = call(step, st, (1,), [pdf2], timed=True)
     assert list(rows.event_id) == [1, 2]
     assert list(rows.run_n) == [1, 2]
     assert list(rows.run_sum) == [7.0, 12.0]
