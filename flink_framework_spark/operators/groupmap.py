@@ -26,20 +26,33 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def bucket_count(parallelism: int) -> int:
+    """Hash buckets for a session with ``parallelism`` default task
+    slots: four per slot, never fewer than 64 (local[<=16] keeps 64)."""
+    return max(64, 4 * parallelism)
+
+
 def bucketed_map(
     df: DataFrame,
     key_cols: list[str] | str,
     bucket_fn,
     schema,
-    buckets: int = 64,
 ) -> DataFrame:
-    """Dispatch ``bucket_fn`` over ``buckets`` deterministic hash
-    buckets of ``key_cols``: the function receives each bucket's WHOLE
-    pandas frame (every row of every key hashing to the bucket) and
-    returns that bucket's output rows. Use it when the per-key work
-    can be amortized bucket-wide (one sort / one scan per bucket
-    instead of per key)."""
+    """Dispatch ``bucket_fn`` over deterministic hash buckets of
+    ``key_cols``: the function receives each bucket's WHOLE pandas
+    frame (every row of every key hashing to the bucket) and returns
+    that bucket's output rows. Use it when the per-key work can be
+    amortized bucket-wide (one sort / one scan per bucket instead of
+    per key).
+
+    The bucket count is ``bucket_count(defaultParallelism)``, so the
+    dispatch keeps every task slot busy on a large cluster. Frame-size
+    ceiling: one bucket's frame holds about ``rows / buckets`` rows
+    (at 64 buckets, 1.6 M of a 100 M-row frame), all in one Python
+    worker's memory at once; a key is never split, so one hot key puts
+    all of its rows in a single frame."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    buckets = bucket_count(df.sparkSession.sparkContext.defaultParallelism)
 
     def run(pdf):
         return bucket_fn(pdf.drop(columns="__gb"))

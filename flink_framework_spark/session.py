@@ -11,6 +11,31 @@ re-planning (skew-join splitting, partition coalescing), shuffle
 partitions sized for the local harness but overridable via env for a
 real cluster, Arrow enabled so the few pandas-UDF operators use
 vectorized transfer.
+
+Generated-code reuse. Spark compiles every whole-stage pipeline and
+expression projection it generates with Janino and keeps the classes
+in a per-JVM cache keyed by (context class loader, source). Each miss
+costs a Janino compile and a fresh ``Class`` that HotSpot must
+JIT-compile again: on ``perfbench``'s pipelines (4-core VM) the misses
+cost 18% of the process CPU per pass, three quarters of it in the C1/C2
+compiler threads. Two confs make identical code hit:
+
+- ``spark.sql.codegen.useIdInClassName=false`` (runtime, in
+  ``RUNTIME_CONFS``): by default the whole-stage stage id is part of
+  the class name (``GeneratedIteratorForCodegenStage68``), and AQE
+  numbers stages differently from run to run, so the same pipeline
+  could get a new cache key on every run. Plans, ``explain`` output and the
+  ``*(N)`` stage ids are unchanged; only the class name is.
+- ``spark.sql.codegen.cache.maxEntries`` (static, in ``STATIC_CONFS``):
+  Spark's default of 100 entries is below one heavy query's working
+  set, and in local mode every class is stored twice (once for the
+  driver thread's class loader, once for the executor's).
+
+Static confs are read once per JVM or SparkContext, so only sessions
+built here (``get_spark``, and the test fixture, which applies
+``STATIC_CONFS`` itself) get them; a session the driver hands us keeps
+Spark's 100-entry cache and only gains the runtime conf through
+``configure_session``.
 """
 
 from __future__ import annotations
@@ -30,6 +55,22 @@ from pyspark.sql import SparkSession
 RUNTIME_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
+    # one cache entry per distinct pipeline, whatever its stage id
+    "spark.sql.codegen.useIdInClassName": "false",
+}
+
+# Generated-class cache entries per JVM. Working sets measured with both
+# codegen confs at sf0.01 on local[4] (tools/jvm_profile.py): q_cep_suite,
+# the largest single query, holds 246 entries; the seven heaviest bench
+# queries together hold 492. The cache is a Guava cache that evicts per
+# segment before it is full, so the cap keeps about 2x headroom.
+CODEGEN_CACHE_ENTRIES = 1000
+
+# Confs that cannot change once the JVM or SparkContext exists; every
+# builder of an engine-owned session applies them.
+STATIC_CONFS = {
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+    "spark.ui.enabled": "false",
 }
 
 
@@ -89,6 +130,9 @@ def get_spark(
       high initial count).
     - UTC session timezone: queries themselves are tz-independent, but
       UTC keeps any ad-hoc exploration deterministic.
+    - ``STATIC_CONFS`` take effect only if this call creates the
+      session. The codegen cache is sized once per JVM, when code is
+      first generated, so it holds only for the JVM's first session.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -111,9 +155,9 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=STATIC_CONFS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
@@ -123,7 +167,6 @@ def get_spark(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

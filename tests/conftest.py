@@ -81,16 +81,15 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from pyspark.sql import SparkSession
 
-    from flink_framework_spark.session import configure_session
+    from flink_framework_spark.session import STATIC_CONFS, configure_session
 
     s = (
         SparkSession.builder.master("local[4]")
         .appName("flink-framework-spark-tests")
+        .config(map=STATIC_CONFS)
         .config("spark.sql.session.timeZone", "America/New_York")
         .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     configure_session(s)

@@ -702,3 +702,34 @@ def test_greedy_disorder_drops_frontier_tie_event(spark, tmp_path):
     rows = [(r["user_id"], r["n_reps"]) for r in out.collect()]
     # the 10:30 tie click was dropped: run1 has ONE rep, not two
     assert rows == [(1, 1)]
+
+
+def test_bucketed_map_sizes_buckets_from_default_parallelism(
+    spark, monkeypatch
+):
+    """Four buckets per default task slot, never fewer than 64: a
+    large cluster is not capped at 64 grouped-map tasks."""
+    import re
+
+    from pyspark import SparkContext
+
+    from flink_framework_spark.operators.groupmap import (
+        bucket_count,
+        bucketed_map,
+    )
+
+    def buckets_in_plan() -> int:
+        df = spark.range(10).withColumnRenamed("id", "k")
+        out = bucketed_map(df, "k", lambda pdf: pdf, "k long")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return int(re.search(r"pmod\(xxhash64\([^)]*\), (\d+)\)", plan)[1])
+
+    assert [bucket_count(p) for p in (1, 4, 16, 17, 32)] == [
+        64, 64, 64, 68, 128,
+    ]
+    assert spark.sparkContext.defaultParallelism == 4
+    assert buckets_in_plan() == 64
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda sc: 32)
+    )
+    assert buckets_in_plan() == 128
