@@ -830,11 +830,23 @@ def _stream_stats(progresses) -> dict:
     ]
     if not rates:
         return {"rows_per_sec": 0.0, "batches": 0}
-    return {
+    # state-store totals over all stateful operators, per batch
+    states = [
+        p["stateOperators"] for p in progresses[1:]
+        if p.get("numInputRows", 0) > 0 and p.get("stateOperators")
+    ]
+    stats = {
         "rows_per_sec": round(statistics.median(rates), 1),
         "batch_ms_p50": round(statistics.median(durs), 1) if durs else None,
         "batches": len(rates),
     }
+    for key, field in (("state_memory_bytes", "memoryUsedBytes"),
+                       ("state_commit_ms", "commitTimeMs")):
+        if states:
+            stats[key] = statistics.median(
+                sum(op.get(field, 0) for op in ops) for ops in states
+            )
+    return stats
 
 
 if __name__ == "__main__":

@@ -1,10 +1,12 @@
-"""The keyed-state harness (streaming.keyed): per-call plumbing, the
-per-operator timer conventions, whole-call input order and the state
-type map — driven without a streaming query through the shared fake
-GroupState."""
+"""The keyed-state harness (streaming.keyed): per-call plumbing, key
+buckets, the per-operator timer conventions, whole-call input order
+and the state type map — driven without a streaming query through
+the shared fake GroupState. tests/test_keyed_shared.py re-runs every
+pin here with a neighbour key sharing each bucket."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -12,8 +14,15 @@ from pyspark.sql import functions as F
 
 from flink_framework_spark.streaming import mr, stateful, temporal, triggers
 from flink_framework_spark.streaming.epoch import wallclock_tz
-from flink_framework_spark.streaming.keyed import keyed_fn, state_array
-from tests.fake_state import FakeState, call
+from flink_framework_spark.streaming.keyed import state_array
+from tests import fake_state
+from tests.fake_state import (
+    FakeGroupState,
+    FakeState,
+    call,
+    call_bucket,
+    key_states,
+)
 
 NY = "America/New_York"
 T = int(pd.Timestamp("2024-03-01 12:00", tz="UTC").timestamp())
@@ -21,10 +30,12 @@ T_NY = pd.Timestamp("2024-03-01 07:00")  # T on the New York wall clock
 
 
 def _recording_step(result=(("s",), None, None)):
+    """A step returning ``result``; records key 1's calls."""
     seen = []
 
     def step(key, st, rows, ctx):
-        seen.append((rows, ctx))
+        if key[0] == 1:
+            seen.append((rows, ctx))
         return result
 
     return step, seen
@@ -43,16 +54,26 @@ def test_none_state_removes_the_key():
 
 
 def test_rows_are_the_whole_call_and_none_when_timed_out():
-    step, seen = _recording_step()
+    step, seen = _recording_step((("s",), None, 5))
     a, b = pd.DataFrame({"x": [1, 2]}), pd.DataFrame({"x": [3]})
     call(step, FakeState(0), (1,), [a], timed=True)
-    call(step, FakeState(0), (1,), [a, b], timed=True)
-    call(step, FakeState(0), (1,), [], timed=True, timed_out=True)
+    st = FakeState(0)
+    call(step, st, (1,), [a, b], timed=True)
+    st.wm_ms = 10  # past the key's timer at 5
+    call(step, st, (1,), [], timed=True, timed_out=True)
     (one, ctx1), (two, _), (none, ctx3) = seen
-    assert one is a  # a single chunk is passed on without a copy
+    assert list(one["x"]) == [1, 2]
     assert list(two["x"]) == [1, 2, 3] and list(two.index) == [0, 1, 2]
     assert none is None
     assert (ctx1.timed_out, ctx3.timed_out) == (False, True)
+
+
+def test_a_bucket_of_one_key_and_one_chunk_is_passed_on_uncopied():
+    step, seen = _recording_step()
+    a = pd.DataFrame({"k": [1, 1], "x": [1, 2]})
+    call_bucket(step, FakeGroupState(), [a], ["k"], {"k": "bigint"})
+    ((one, _),) = seen
+    assert one is a and list(a.columns) == ["k", "x"]
 
 
 @pytest.mark.parametrize(
@@ -83,6 +104,138 @@ def test_untimed_call_reads_no_watermark():
     call(step, st, (1,), [pd.DataFrame({"x": [1]})])
     (_, ctx), = seen
     assert (ctx.wm_ms, ctx.wm_s, st.timer) == (None, None, None)
+
+
+# -- key buckets --------------------------------------------------------
+
+
+def _bucket_rows(keys, **cols):
+    """One bucket's chunk: key column ``k`` plus ``cols``."""
+    return pd.DataFrame({"k": keys, **cols})
+
+
+def _per_key_step(timers=None, drop=()):
+    """A step counting each key's rows in its state; arms
+    ``timers[key]`` and removes the keys in ``drop``. Records
+    ``(key, rows, timed_out)`` per call."""
+    calls = []
+
+    def step(key, st, rows, ctx):
+        calls.append((key, rows, ctx.timed_out))
+        if key[0] in drop:
+            return None, None, None
+        n = (st[0] if st else 0) + (0 if rows is None else len(rows))
+        return (n,), None, (timers or {}).get(key[0])
+
+    return step, calls
+
+
+def test_keys_sharing_a_bucket_keep_their_own_state():
+    st = FakeGroupState()
+    step, calls = _per_key_step()
+    call_bucket(step, st, [_bucket_rows([1, 2, 1, 3], x=[10, 20, 11, 30])],
+                ["k"], {"k": "bigint"})
+    assert [(k, list(r["x"]), list(r.index)) for k, r, _ in calls] == [
+        ((1,), [10, 11], [0, 1]), ((2,), [20], [0]), ((3,), [30], [0]),
+    ]
+    call_bucket(step, st, [_bucket_rows([2], x=[21])], ["k"],
+                {"k": "bigint"})
+    assert {k: s for k, (_, s) in key_states(st).items()} == {
+        (1,): (2,), (2,): (2,), (3,): (1,),
+    }
+
+
+def test_a_key_returning_none_leaves_the_bucket_and_the_rest_stay():
+    st = FakeGroupState()
+    call_bucket(_per_key_step()[0], st, [_bucket_rows([1, 2, 3])], ["k"],
+                {"k": "bigint"})
+    call_bucket(_per_key_step(drop={2})[0], st, [_bucket_rows([2, 3])],
+                ["k"], {"k": "bigint"})
+    assert {k: s for k, (_, s) in key_states(st).items()} == {
+        (1,): (1,), (3,): (2,),
+    }
+
+
+def test_a_bucket_left_empty_is_removed():
+    st = FakeGroupState()
+    call_bucket(_per_key_step()[0], st, [_bucket_rows([1, 2])], ["k"],
+                {"k": "bigint"})
+    assert st.exists
+    call_bucket(_per_key_step(drop={1, 2})[0], st, [_bucket_rows([1, 2])],
+                ["k"], {"k": "bigint"})
+    assert not st.exists
+
+
+def test_an_expired_key_without_rows_runs_timed_out_in_a_data_call():
+    """Key 2's timer is below the watermark: it runs timed out
+    although the call is a data call; key 3's timer equals the
+    watermark, so it does not fire and keeps its timer."""
+    st = FakeGroupState(0)
+    arm, _ = _per_key_step(timers={1: 100, 2: 100, 3: 150})
+    call_bucket(arm, st, [_bucket_rows([1, 2, 3])], ["k"],
+                {"k": "bigint"}, timed=True)
+    st.wm_ms = 150
+    step, calls = _per_key_step()
+    call_bucket(step, st, [_bucket_rows([1])], ["k"], {"k": "bigint"},
+                timed=True)
+    assert [(k, r is None, t) for k, r, t in calls] == [
+        ((1,), False, False), ((2,), True, True),
+    ]
+    (key, _, _), = [c for c in calls if c[2]]
+    assert type(key[0]) is np.int64  # as a row's key would arrive
+    assert {k: t for k, (t, _) in key_states(st).items()} == {
+        (1,): None, (2,): None, (3,): 150,
+    }
+    assert st.timer == 150
+
+
+def test_the_bucket_is_armed_at_its_keys_earliest_timer():
+    st = FakeGroupState(0)
+    step, _ = _per_key_step(timers={1: 300, 2: 200})
+    call_bucket(step, st, [_bucket_rows([1, 2, 3])], ["k"],
+                {"k": "bigint"}, timed=True)
+    assert st.timer == 200
+    call_bucket(_per_key_step(timers={1: 300}, drop={2})[0], st,
+                [_bucket_rows([2])], ["k"], {"k": "bigint"}, timed=True)
+    assert st.timer == 300
+    call_bucket(_per_key_step()[0], st, [_bucket_rows([1])], ["k"],
+                {"k": "bigint"}, timed=True)
+    assert st.timer is None  # no key holds a timer: none armed
+
+
+def test_uncalled_keys_keep_their_timers():
+    st = FakeGroupState(0)
+    call_bucket(_per_key_step(timers={1: 500, 2: 700})[0], st,
+                [_bucket_rows([1, 2])], ["k"], {"k": "bigint"}, timed=True)
+    st.wm_ms = 100
+    call_bucket(_per_key_step()[0], st, [_bucket_rows([1])], ["k"],
+                {"k": "bigint"}, timed=True)
+    assert {k: t for k, (t, _) in key_states(st).items()} == {
+        (1,): None, (2,): 700,
+    }
+    assert st.timer == 700
+
+
+@pytest.mark.parametrize(
+    "typ, keys, null, value",
+    [
+        ("bigint", [np.nan, 5.0, np.nan], None, np.int64(5)),
+        ("string", [None, "a", None], None, "a"),
+    ],
+)
+def test_a_null_key_is_one_group(typ, keys, null, value):
+    """Null keys form one group; a key column a null widened (bigint
+    -> float64) is narrowed back for the other keys."""
+    st = FakeGroupState()
+    step, calls = _per_key_step()
+    call_bucket(step, st, [_bucket_rows(keys, x=[1, 2, 3])], ["k"],
+                {"k": typ})
+    (k0, r0, _), (k1, r1, _) = calls
+    assert k0[0] is None or np.isnan(k0[0])
+    assert list(r0["x"]) == [1, 3]
+    assert k1 == (value,) and type(k1[0]) is type(value)
+    assert type(r1["k"].iat[0]) is type(value)
+    assert set(key_states(st)) == {(null,), (value,)}
 
 
 # -- whole-call input order -------------------------------------------
@@ -147,30 +300,38 @@ def _ms(wall: str) -> int:
 
 def _capture(monkeypatch, module, build):
     """Build an operator with its ``keyed_process`` call captured:
-    returns the per-call function the harness would run, the grouped
-    frame as pandas (the rows the step would see) and the key
+    returns the ``call_bucket`` arguments that run its step, the
+    grouped frame as pandas (the rows the step would see) and the key
     columns."""
     seen = {}
 
     def capture(df, keys, step, *, out_schema, state_schema,
                 event_time=None):
+        types = {f.name: f.dataType.simpleString() for f in df.schema}
         tz = wallclock_tz(df, event_time) if event_time else None
-        seen.update(df=df, keys=keys,
-                    fn=keyed_fn(step, event_time is not None, tz))
+        seen.update(df=df, keys=keys, args=(step, types, event_time, tz))
         return df
 
     monkeypatch.setattr(module, "keyed_process", capture)
     build()
-    return seen["fn"], seen["df"].toPandas(), seen["keys"]
+    return seen["args"], seen["df"].toPandas(), seen["keys"]
 
 
-def _arm(fn, pdf, keys, wm_ms):
-    """One call per key of ``pdf``; the one armed timer."""
+def _arm(args, pdf, keys, wm_ms):
+    """One data call per key bucket of ``pdf`` (one key per bucket,
+    or one bucket for the key and its neighbour); the one armed
+    timer among the keys."""
+    step, types, event_time, tz = args
+    pdf = fake_state.neighboured(pdf, keys)
+    buckets = (
+        [pdf] if fake_state.SHARED else [g for _, g in pdf.groupby(keys)]
+    )
     timers = set()
-    for key, rows in pdf.groupby(keys):
-        st = FakeState(wm_ms)
-        list(fn(key, iter([rows.reset_index(drop=True)]), st))
-        timers.add(st.timer)
+    for rows in buckets:
+        st = FakeGroupState(wm_ms)
+        call_bucket(step, st, [rows.reset_index(drop=True)], keys, types,
+                    timed=event_time is not None, tz=tz)
+        timers |= {t for t, _ in key_states(st, len(keys)).values()}
     (timer,) = timers
     return timer
 
@@ -191,36 +352,36 @@ def test_count_trigger_arms_one_ms_past_the_next_element(
 ):
     ev = _stream_events(spark, [(1, 10, 1, "click", 1.0),
                                 (1, 20, 2, "click", 2.0)])
-    fn, pdf, keys = _capture(
+    args, pdf, keys = _capture(
         monkeypatch, triggers,
         lambda: triggers.count_trigger_stream(ev, n=2),
     )
-    assert _arm(fn, pdf, keys, T * 1000) == (T + 10) * 1000 + 1
+    assert _arm(args, pdf, keys, T * 1000) == (T + 10) * 1000 + 1
 
 
 def test_continuous_trigger_arms_one_ms_past_the_boundary(
     spark, monkeypatch
 ):
     ev = _stream_events(spark, [(1, 0, 1, "click", 1.0)])
-    fn, pdf, keys = _capture(
+    args, pdf, keys = _capture(
         monkeypatch, triggers,
         lambda: triggers.continuous_trigger_stream(ev),
     )
     # 07:00 New York: the first 6 h boundary of its day is 12:00
-    assert _arm(fn, pdf, keys, (T - 60) * 1000) == (
+    assert _arm(args, pdf, keys, (T - 60) * 1000) == (
         _ms("2024-03-01 12:00") + 1
     )
 
 
 def test_lateness_trigger_arms_on_the_unshifted_clock(spark, monkeypatch):
     ev = _stream_events(spark, [(1, 0, 1, "click", 1.0)])
-    fn, pdf, keys = _capture(
+    args, pdf, keys = _capture(
         monkeypatch, triggers,
         lambda: triggers.allowed_lateness_stream(ev),
     )
     # on-time firing at the window end (03-02 00:00 New York), moved
     # back by window + lateness (25 h) onto the Spark watermark
-    assert _arm(fn, pdf, keys, (T - 2 * 86400) * 1000) == (
+    assert _arm(args, pdf, keys, (T - 2 * 86400) * 1000) == (
         _ms("2024-02-29 23:00") + 1
     )
 
@@ -236,11 +397,11 @@ def test_mr_arms_one_ms_past_the_open_anchor_window(spark, monkeypatch):
         WITHIN INTERVAL '30' MINUTE
         DEFINE A AS A.event_type = 'view',
                B AS B.event_type = 'purchase'"""
-    fn, pdf, keys = _capture(
+    args, pdf, keys = _capture(
         monkeypatch, mr,
         lambda: mr.match_recognize_stream(ev, clause, engine="nfa"),
     )
-    assert _arm(fn, pdf, keys, (T - 60) * 1000) == (T + 1800) * 1000 + 1
+    assert _arm(args, pdf, keys, (T - 60) * 1000) == (T + 1800) * 1000 + 1
 
 
 def test_temporal_join_arms_one_ms_past_the_watermark(spark, monkeypatch):
@@ -250,14 +411,14 @@ def test_temporal_join_arms_one_ms_past_the_watermark(spark, monkeypatch):
     dim = _stream_events(spark, [(1, -60, 2, "gold", 0.0)]).select(
         "user_id", F.col("ts").alias("dts"), F.col("event_type").alias("tier")
     )
-    fn, pdf, keys = _capture(
+    args, pdf, keys = _capture(
         monkeypatch, temporal,
         lambda: temporal.temporal_join_changelog_stream(
             facts, dim, "user_id", "ts", "dts"
         ),
     )
     # the fact stays pending until the watermark passes it
-    assert _arm(fn, pdf, keys, (T - 600) * 1000) == (T - 600) * 1000 + 1
+    assert _arm(args, pdf, keys, (T - 600) * 1000) == (T - 600) * 1000 + 1
 
 
 def test_greedy_timer_arms_at_the_gap_end():

@@ -20,8 +20,10 @@ Scenarios (both the keyed Arrow-state family):
   BOTH steps — the r10 pre-filter lowering ahead of the quantifier
   machine (operators/pattern.py _stream_where_prefilter).
 
-Usage: python tools/stream_scale_bench.py   (prints one JSON line;
-rows recorded in SCALING.md's streaming section)
+Usage: python tools/stream_scale_bench.py [ROWS_PER_BATCH ...]
+(prints one JSON line; rows recorded in SCALING.md's streaming
+section). Naming tiles runs only those; alpha needs the default three.
+Each tile also reports the median state-store memory and commit time.
 """
 
 from __future__ import annotations
@@ -102,18 +104,21 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)) + "/..")
     from bench import _run_stream_scenario
 
+    sizes = tuple(int(a) for a in sys.argv[1:]) or TILES
     out: dict = {}
     for name, build in (
         ("cep_times_disorder", disorder_scenario),
         ("cep_where_quant", where_quant_scenario),
     ):
         tiles = {}
-        for rpb in TILES:
+        for rpb in sizes:
             df, mode = build(spark, rpb)
             tiles[str(rpb)] = _run_stream_scenario(
                 df, mode, seconds=16.0, runs=2, min_batches=6
             )
         out[name] = tiles
+        if sizes != TILES:
+            continue
         a, b, c = (tiles[str(t)]["batch_ms_p50"] for t in TILES)
         out[name]["alpha_1x_10x"] = round(math.log(b / a) / math.log(10), 2)
         out[name]["alpha_10x_30x"] = round(math.log(c / b) / math.log(3), 2)
