@@ -737,14 +737,11 @@ def match_combinations(
         key_col, "ts_first", "ts_last", "n_reps",
         "id_first", "id_last", "ids",
     )
-    if persisted:
+    if n_max is None:
         # materialize the (output-sized) final frame once, then drop
-        # the per-level caches — repeated calls must not pin up to
-        # level_cap DataFrames each in executor storage. The single
-        # persisted result is the only cache handed to the caller.
-        # (The fast unbounded path keeps ONLY the tiny persisted step
-        # frame cached, consumed lazily by every level — reclaimed by
-        # the caller's clearCache, the _staged discipline.)
+        # the step frame and any per-level caches — repeated calls
+        # must not pin them in executor storage. The single persisted
+        # result is the only cache handed to the caller.
         result = result.persist()
         result.count()
         for p in persisted:

@@ -143,12 +143,11 @@ def kmeans_lloyd(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     return_centroids: bool = False,
-    vectorized_assign: bool | None = None,
 ) -> DataFrame | tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Distributed Lloyd's k-means over a vector column — the classic
     dataset-iteration example, in Spark's model: per round one narrow
-    assignment map (literal-centroid distances, no join/shuffle — the
-    same ``_cell_dists`` expression the IVF index uses) plus one
+    assignment map (literal centroids, no join/shuffle — the same
+    nearest-centroid kernel the IVF index uses) plus one
     shuffle aggregate of k*dim partial sums; the k*dim centroid
     update is the only driver round-trip (bounded, independent of
     corpus size).
@@ -169,31 +168,18 @@ def kmeans_lloyd(
     - the final division happens driver-side in ``decimal.Decimal``.
 
     Returns (id, cluster, d2) — final assignment and its squared L2
-    distance, rounded.
-
-    ``vectorized_assign``: assignment via the Arrow/numpy argmin
-    kernel (``similarity._cell_assign_vec``) instead of the
-    literal-centroid expression. The expression form is interpreted
-    per (row, centroid, dim) — fine at the default k=8, measured
-    unusable past a few hundred centroids (the same wall
-    ``ivf_topk`` documents), and the nested-array literal itself
-    grows with k*dim toward expression-size limits. Default None =
-    auto: the numpy kernel kicks in at k > 64. The two paths agree
-    up to the documented 1-ulp pairwise-vs-sequential summation
-    caveat (agreement-tested at k=256 in tests/test_iterative.py);
-    the frozen q_kmeans golden pins the expression form at k=8, which
-    auto never reroutes.
+    distance, rounded. Every distance — seeding, rounds, final pass —
+    is ``similarity._seq_d2``'s sequential fold, bit-identical to the
+    ``_cell_dists`` expression at any k.
     """
     from flink_framework_spark.operators.similarity import (
-        _cell_assign_vec,
-        _cell_assign_vec_d,
-        _cell_assign_vec_seq,
+        _nearest_cell,
+        _seq_d2,
         to_double_array,
     )
 
     import numpy as np
 
-    use_vec = vectorized_assign if vectorized_assign is not None else k > 64
     init_cap = 4096
     # every Lloyd round re-reads this narrow (id, vector) projection —
     # n_iter + 2 passes total (init sample, per-round assignment, the
@@ -211,11 +197,11 @@ def kmeans_lloyd(
         raise ValueError("cannot run k-means on an empty input")
     X = np.array([r["__v"] for r in sample], dtype=np.float64)
     picked = [0]
-    dmin = ((X - X[0]) ** 2).sum(axis=1)
+    dmin = _seq_d2(X, X[:1])[:, 0]
     while len(picked) < min(k, len(X)):
         nxt = int(dmin.argmax())  # ties: numpy argmax -> lowest index
         picked.append(nxt)
-        dmin = np.minimum(dmin, ((X - X[nxt]) ** 2).sum(axis=1))
+        dmin = np.minimum(dmin, _seq_d2(X, X[nxt : nxt + 1])[:, 0])
     centroids = [
         (i, [float(x) for x in X[p]]) for i, p in enumerate(picked)
     ]
@@ -228,23 +214,9 @@ def kmeans_lloyd(
     ctx = _shuffle_sized_to(df.sparkSession, k * dim)
     with ctx:
         for _ in range(n_iter):
-            if use_vec:
-                assigned = staged.withColumn(
-                    "__c", _cell_assign_vec(centroids)(F.col("__v"))
-                )
-            else:
-                # BIT-IDENTICAL Arrow kernel for the expression form
-                # (r11, guide §4.2): _seq_d2 reproduces the fold-left
-                # summation order exactly (bitwise-verified on all
-                # three fixture SFs), so the frozen trajectory and
-                # every oracle hash are unchanged while the ~1 µs/
-                # element interpreted HOF cost is gone.
-                assigned = staged.withColumn(
-                    "__c",
-                    _cell_assign_vec_seq(centroids)(F.col("__v")).getField(
-                        "cell"
-                    ).cast("int"),
-                )
+            assigned = staged.withColumn(
+                "__c", _nearest_cell(centroids)(F.col("__v")).getField("cell")
+            )
             stats = (
                 assigned.select(
                     "__c", F.posexplode("__v").alias("__pos", "__val")
@@ -271,19 +243,10 @@ def kmeans_lloyd(
                 for c, old in centroids
             ]
 
-    # two-step select so the distance array is evaluated once per row
-    if use_vec:
-        best = staged.select(
-            F.col(id_col),
-            _cell_assign_vec_d(centroids)(F.col("__v")).alias("__best"),
-        )
-    else:
-        # same bit-identical kernel as the loop (downstream reads the
-        # struct fields by name, so the (cell, d) field order is fine)
-        best = staged.select(
-            F.col(id_col),
-            _cell_assign_vec_seq(centroids)(F.col("__v")).alias("__best"),
-        )
+    # two-step select so the kernel is evaluated once per row
+    best = staged.select(
+        F.col(id_col), _nearest_cell(centroids)(F.col("__v")).alias("__best")
+    )
     result = best.select(
         F.col(id_col),
         F.col("__best.cell").cast("long").alias("cluster"),

@@ -1529,7 +1529,7 @@ def _dispatch(
     sorted_parts = flagged.repartition(spec.partition_by).sortWithinPartitions(
         spec.partition_by, *[F.asc_nulls_last(c) for c in order_by]
     )
-    return sorted_parts.mapInPandas(matcher.batched, schema=out_schema)
+    return sorted_parts.mapInPandas(matcher, schema=out_schema)
 
 
 def route_info(clause: str, events: DataFrame | None = None) -> dict:
@@ -3019,48 +3019,54 @@ def scan_rows(
     return out_rows, i, match_no
 
 
+def _sorted_runs(it, key_col: str):
+    """The contiguous key runs of a stream of pandas batches that are
+    sorted by ``key_col`` (a JVM repartition + sortWithinPartitions
+    upstream): per input batch, the list of its complete runs. A
+    batch's last run may continue into the next batch, so it is
+    carried and yielded with the next one (or alone at the end).
+    NULL keys form one run."""
+    tail: pd.DataFrame | None = None
+    for pdf in it:
+        if tail is not None:
+            pdf = pd.concat([tail, pdf], ignore_index=True)
+            tail = None
+        if not len(pdf):
+            continue
+        keys = pdf[key_col]
+        prev = keys.shift()
+        change = (
+            (keys != prev) & ~(keys.isna() & prev.isna())
+        ).to_numpy().nonzero()[0]
+        starts = change if len(change) and change[0] == 0 else (
+            _np.concatenate(([0], change))
+        )
+        tail = pdf.iloc[starts[-1]:].reset_index(drop=True)
+        runs = [pdf.iloc[s:e] for s, e in zip(starts[:-1], starts[1:])]
+        if runs:
+            yield runs
+    if tail is not None and len(tail):
+        yield [tail]
+
+
 def _pick_sorted_groups(
     df: DataFrame, key_col: str, sort_col: str, pick_fn, schema
 ) -> DataFrame:
     """``groupBy(key).applyInPandas(pick_fn)`` with the per-key
     Python overhead amortized (same strategy as the batched NFA
     dispatch): one JVM repartition + sortWithinPartitions on
-    ``(key, sort_col)``, then a single mapInPandas stage that
-    iterates contiguous key runs per Arrow batch, carrying a
-    possibly-split tail group into the next batch. ``pick_fn``
-    receives each group ALREADY sorted by ``sort_col`` ascending
-    (the call sites' row-number columns are unique per key, so the
-    order is total) and returns the kept rows, columns unchanged."""
+    ``(key, sort_col)``, then a single mapInPandas stage over the
+    key runs of :func:`_sorted_runs`. ``pick_fn`` receives each group
+    ALREADY sorted by ``sort_col`` ascending (the call sites'
+    row-number columns are unique per key, so the order is total)
+    and returns the kept rows, columns unchanged."""
     out_cols = df.columns
 
     def batched(it):
-        tail: pd.DataFrame | None = None
-        for pdf in it:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if not len(pdf):
-                continue
-            keys = pdf[key_col]
-            prev = keys.shift()
-            change = (
-                (keys != prev) & ~(keys.isna() & prev.isna())
-            ).to_numpy().nonzero()[0]
-            starts = change if len(change) and change[0] == 0 else (
-                _np.concatenate(([0], change))
-            )
-            tail = pdf.iloc[starts[-1]:].reset_index(drop=True)
-            outs = [
-                pick_fn(pdf.iloc[s:e])
-                for s, e in zip(starts[:-1], starts[1:])
-            ]
-            outs = [o for o in outs if len(o)]
+        for runs in _sorted_runs(it, key_col):
+            outs = [o for o in map(pick_fn, runs) if len(o)]
             if outs:
                 yield pd.concat(outs, ignore_index=True)[out_cols]
-        if tail is not None and len(tail):
-            o = pick_fn(tail)
-            if len(o):
-                yield o[out_cols]
 
     srt = df.repartition(key_col).sortWithinPartitions(key_col, sort_col)
     return srt.mapInPandas(batched, schema=schema)
@@ -3118,52 +3124,19 @@ def _make_matcher(spec: MRSpec, order_by: list[str], ts_col: str):
         )
         return out_rows
 
-    def _match_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by, kind="mergesort").reset_index(
-            drop=True
-        )
-        return rows_to_frame(
-            _scan_group(pdf, pdf[partition_by].iloc[0]), names
-        )
-
-    def _match_sorted_batches(it):
-        """mapInPandas twin of the grouped matcher: the input is
-        JVM-sorted by (partition key, total order) within each task
-        (``_dispatch`` arranges the repartition + sortWithinPartitions),
-        so groups are contiguous runs — iterate boundaries with numpy
-        and carry a possibly-split tail group into the next Arrow
-        batch. One Python call per ~10k-row batch instead of one per
-        key: the per-group pandas overhead (sort, Arrow framing) that
-        dominated the grouped form disappears."""
-        tail: pd.DataFrame | None = None
-        for pdf in it:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if not len(pdf):
-                continue
-            keys = pdf[partition_by]
-            kn = keys.to_numpy()
-            prev = keys.shift()
-            change = (
-                (keys != prev) & ~(keys.isna() & prev.isna())
-            ).to_numpy().nonzero()[0]
-            starts = change if len(change) and change[0] == 0 else (
-                _np.concatenate(([0], change))
-            )
-            # the last run may continue into the next batch: buffer it
-            tail = pdf.iloc[starts[-1]:].reset_index(drop=True)
+    def match_sorted_batches(it):
+        """mapInPandas matcher: the input is JVM-sorted by (partition
+        key, total order) within each task (``_dispatch`` arranges the
+        repartition + sortWithinPartitions), so groups are the key
+        runs of :func:`_sorted_runs`: one Python call per ~10k-row
+        batch, not one per key."""
+        for runs in _sorted_runs(it, partition_by):
             out_rows: list[list] = []
             # plain positional slices: scan_rows reads columns via
             # to_numpy()/positional iloc, so the index need not reset
-            for s, e in zip(starts[:-1], starts[1:]):
-                out_rows.extend(_scan_group(pdf.iloc[s:e], kn[s]))
+            for run in runs:
+                out_rows.extend(_scan_group(run, run[partition_by].iloc[0]))
             if out_rows:
                 yield rows_to_frame(out_rows, names)
-        if tail is not None and len(tail):
-            rows = _scan_group(tail, tail[partition_by].iloc[0])
-            if rows:
-                yield rows_to_frame(rows, names)
 
-    _match_partition.batched = _match_sorted_batches
-    return _match_partition
+    return match_sorted_batches

@@ -56,6 +56,8 @@ from flink_framework_spark.functions.helpers import (
 from flink_framework_spark.operators.similarity import (
     _cell_assign,
     _cell_dists,
+    _nearest,
+    _seq_d2,
 )
 
 Codebooks = list[list[list[float]]]  # [subspace][code][component]
@@ -74,9 +76,9 @@ def _unit(vec: Column) -> Column:
 
 def _unit_vec(col: Column) -> Column:
     """Arrow-vectorized L2 normalization (float64; zero vectors pass
-    through unscaled). Same 1-ulp pairwise-vs-sequential summation
-    caveat as ``pq_codes_vec`` — don't assert bit-equality with the
-    expression form; rounded outputs (4 dp cosines) are unaffected.
+    through unscaled). ``np.linalg.norm`` does not fold in the
+    expression's order, so don't assert bit-equality with ``_unit``;
+    rounded outputs (4 dp cosines) are unaffected.
     (The udf is built per call: pandas_udf parses its DDL return type
     against the ACTIVE session, so a module-level decorator would
     fail at import time in session-less contexts.)"""
@@ -105,7 +107,7 @@ def pq_train(
 ) -> Codebooks:
     """Per-subspace k-means codebooks from a bounded sample of
     L2-normalized vectors. Same deterministic scheme as
-    ``train_ivf_centroids`` (seeded init, argmin assignment), one
+    ``train_ivf_centroids`` (seeded init, ``_nearest`` assignment), one
     independent quantizer per subspace (seed offset by subspace).
     ``normalize=False`` trains in the raw space — used by the IMI
     coarse quantizer (``similarity.train_imi``), which must quantize
@@ -142,8 +144,7 @@ def pq_train(
         rng = np.random.RandomState(seed + s)
         cents = Xs[rng.choice(len(Xs), size=k, replace=False)]
         for _ in range(max_iter):
-            d2 = ((Xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
+            assign, _ = _nearest(Xs, cents)
             for c in range(k):
                 members = Xs[assign == c]
                 if len(members):
@@ -175,15 +176,10 @@ def pq_codes(vec: Column, books: Codebooks) -> Column:
 
 def pq_codes_vec(books: Codebooks):
     """Arrow-vectorized twin of ``pq_codes`` (same discipline as
-    ``dedup.minhash_signature_vec``): per batch, one numpy
-    distance-matrix argmin per subspace. Ties go to the lowest code
-    (numpy argmin), matching the struct-(d, cell) ordering of the
-    expression form; all math in float64. NOTE: numpy's pairwise
-    summation can differ from the expression form's sequential fold
-    by 1 ulp, so on sub-ulp distance ties the two forms may pick
-    different codes — each form is individually deterministic (this
-    vec form is the one the goldens pin), but do not assert
-    bit-equality between them."""
+    ``dedup.minhash_signature_vec``): per batch, one
+    ``similarity._nearest`` per subspace — the expression form's
+    struct-(d, cell) pick on its own summation order, so the two forms
+    agree code for code."""
     mats = [np.asarray(b, dtype=np.float64) for b in books]
     dsub = mats[0].shape[1]
 
@@ -194,9 +190,7 @@ def pq_codes_vec(books: Codebooks):
             return pd.Series([], dtype=object)
         out = np.empty((len(X), len(mats)), dtype=np.int32)
         for s, m in enumerate(mats):
-            Xs = X[:, s * dsub : (s + 1) * dsub]
-            d2 = ((Xs[:, None, :] - m[None, :, :]) ** 2).sum(axis=2)
-            out[:, s] = d2.argmin(axis=1)
+            out[:, s], _ = _nearest(X[:, s * dsub : (s + 1) * dsub], m)
         return pd.Series(list(out))
 
     return codes
@@ -206,25 +200,21 @@ def _adc_lut_vec(books: Codebooks):
     """Arrow-vectorized twin of ``_adc_lut``: the per-query
     m x n_codes squared-L2 table in one numpy pass (the expression
     form pays ~2.8 s of plan analysis for the 4096-double literal
-    tree alone). Same 1-ulp pairwise-vs-sequential summation caveat
-    as ``pq_codes_vec``: don't assert bit-equality across forms."""
+    tree alone), bit-identical to it (``similarity._seq_d2``) except
+    that Arrow's pandas conversion returns a NaN entry as null."""
     mats = [np.asarray(b, dtype=np.float64) for b in books]
     dsub = mats[0].shape[1]
 
     @F.pandas_udf("array<array<double>>")
     def lut(vs: pd.Series) -> pd.Series:
-        out = []
-        for v in vs:
-            q = np.asarray(v, dtype=np.float64)
-            out.append(
-                [
-                    ((q[s * dsub : (s + 1) * dsub][None, :] - m) ** 2).sum(
-                        axis=1
-                    )
-                    for s, m in enumerate(mats)
-                ]
-            )
-        return pd.Series(out)
+        X = np.array([np.asarray(v, dtype=np.float64) for v in vs])
+        if len(X) == 0:
+            return pd.Series([], dtype=object)
+        d2 = [
+            _seq_d2(X[:, s * dsub : (s + 1) * dsub], m)
+            for s, m in enumerate(mats)
+        ]
+        return pd.Series([[d[r] for d in d2] for r in range(len(X))])
 
     return lut
 

@@ -329,7 +329,9 @@ def semantic_dedup(
     # exactly what the n_cells sizing discipline controls.
     assigned = df.select(
         F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("__v")
-    ).withColumn("cell", _cell_assign_vec(centroids)(F.col("__v")))
+    ).withColumn(
+        "cell", _nearest_cell(centroids)(F.col("__v")).getField("cell")
+    )
     return _semantic_prune(assigned, eps)
 
 
@@ -425,10 +427,10 @@ def train_imi(
 
 
 def imi_assign_vec(books):
-    """Arrow-vectorized IMI cell assignment: per batch, one chunked
-    numpy distance-matrix argmin per HALF (ties to the lowest code,
-    float64 — the same determinism contract as ``_cell_assign_vec``);
-    cell id = code0 * len(books[1]) + code1."""
+    """Arrow-vectorized IMI cell assignment: per batch, one
+    :func:`_nearest` per HALF (the struct-min of ``_cell_dists`` over
+    that half's codebook, bit-identical); cell id =
+    code0 * len(books[1]) + code1."""
     mats = [np.asarray(b, dtype=np.float64) for b in books]
     assert len(mats) == 2, "IMI uses exactly two half-codebooks"
     dsub = mats[0].shape[1]
@@ -439,8 +441,8 @@ def imi_assign_vec(books):
         X = np.array([np.asarray(v, dtype=np.float64) for v in vs])
         if len(X) == 0:
             return pd.Series([], dtype="int32")
-        c0 = _pairwise_d2(X[:, :dsub], mats[0]).argmin(axis=1)
-        c1 = _pairwise_d2(X[:, dsub:], mats[1]).argmin(axis=1)
+        c0, _ = _nearest(X[:, :dsub], mats[0])
+        c1, _ = _nearest(X[:, dsub:], mats[1])
         return pd.Series((c0 * k1 + c1).astype(np.int32))
 
     return assign
@@ -464,26 +466,6 @@ def semantic_dedup_imi(
         F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("__v")
     ).withColumn("cell", imi_assign_vec(books)(F.col("__v")))
     return _semantic_prune(assigned, eps)
-
-
-def _pairwise_d2(X, C, row_chunk: int = 2048):
-    """Squared-L2 distance matrix (n, k) via the explicit-difference
-    broadcast, evaluated in row chunks. The one-shot broadcast
-    materializes an (n, k, dim) float64 temp — 15 GB at
-    n=16384, k=240 — which turned the k-means training loop into an
-    allocator benchmark (measured 50 s of a 65 s query at the 30x
-    tile). Chunking bounds the temp at row_chunk*k*dim while keeping
-    the arithmetic ELEMENTWISE IDENTICAL to the unchunked form (same
-    per-element ops, same axis-2 summation order), so assignments —
-    and therefore every centroid trajectory and frozen golden — are
-    bit-stable. The GEMM identity |x|^2+|c|^2-2x.c would be faster
-    still but changes the floating-point result; training is not the
-    bottleneck once the temp fits in cache."""
-    out = np.empty((len(X), len(C)), dtype=np.float64)
-    for s in range(0, len(X), row_chunk):
-        e = min(s + row_chunk, len(X))
-        out[s:e] = ((X[s:e, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    return out
 
 
 def semantic_dedup_incremental(
@@ -521,7 +503,7 @@ def semantic_dedup_incremental(
         ).withColumn("is_new", F.lit(0))
     )
     assigned = tagged.withColumn(
-        "cell", _cell_assign_vec(centroids)(F.col("__v"))
+        "cell", _nearest_cell(centroids)(F.col("__v")).getField("cell")
     )
     eps_f = float(eps)
 
@@ -562,24 +544,6 @@ def semantic_dedup_incremental(
     )
 
 
-def _argmin_cells(vs: pd.Series, centroids):
-    """Shared numpy core of the vectorized assignment kernels: one
-    distance-matrix argmin per Arrow batch, float64, ties to the
-    lowest cell id — matching the (d, cell) struct-min of the
-    expression form up to the documented 1-ulp pairwise-vs-sequential
-    summation caveat. Returns (cell_ids[n], d2[n]) or (None, None)
-    for an empty batch. ONE place owns the tie/NaN discipline so the
-    cell-only and cell+distance kernels cannot drift apart."""
-    mat = np.array([c for _, c in centroids], dtype=np.float64)
-    cell_ids = np.array([int(i) for i, _ in centroids], dtype=np.int32)
-    X = np.array([np.asarray(v, dtype=np.float64) for v in vs])
-    if len(X) == 0:
-        return None, None
-    d2 = _pairwise_d2(X, mat)
-    best = d2.argmin(axis=1)
-    return cell_ids[best], d2[np.arange(len(X)), best]
-
-
 def _seq_d2(X, C, row_chunk: int = 2048):
     """Squared-L2 distance matrix (n, k) with the EXACT summation
     order of the ``_cell_dists`` expression form: per element,
@@ -588,114 +552,83 @@ def _seq_d2(X, C, row_chunk: int = 2048):
     step from a 0.0 accumulator, exactly the fold-left of
     ``aggregate(zip_with(v, c, (a,b) -> (a-b)*(a-b)), 0.0, acc+x)``
     (0.0 + t_0 is bit-exact because squared diffs are never -0.0).
-    Unlike :func:`_pairwise_d2` (numpy pairwise summation, the
-    documented 1-ulp caveat), results here are BIT-IDENTICAL to the
-    interpreted expression, so the frozen goldens and live oracles
-    that pin the expression form hold unchanged. Row chunks bound the
-    (chunk, k) temp; the per-dim loop never materializes (n, k, dim).
+    Results are BIT-IDENTICAL to the interpreted expression, so the
+    frozen goldens and live oracles that pin the expression form hold
+    for every numpy distance in the package. Row chunks bound the
+    (chunk, k) temp; the per-dim loop never materializes (n, k, dim)
+    (the one-shot broadcast's (n, k, dim) temp was 15 GB at n=16384,
+    k=240). Overflow to inf and NaN inputs are values here, not
+    warnings: the tie/NaN rules live in :func:`_nearest`.
     """
     n, k = len(X), len(C)
     out = np.empty((n, k), dtype=np.float64)
     dim = X.shape[1] if n else 0
-    for s in range(0, n, row_chunk):
-        e = min(s + row_chunk, n)
-        acc = np.zeros((e - s, k), dtype=np.float64)
-        for j in range(dim):
-            diff = X[s:e, j, None] - C[None, :, j]
-            acc += diff * diff
-        out[s:e] = acc
+    with np.errstate(over="ignore", invalid="ignore"):
+        for s in range(0, n, row_chunk):
+            e = min(s + row_chunk, n)
+            acc = np.zeros((e - s, k), dtype=np.float64)
+            for j in range(dim):
+                diff = X[s:e, j, None] - C[None, :, j]
+                acc += diff * diff
+            out[s:e] = acc
     return out
 
 
-def _argmin_cells_seq(vs: pd.Series, centroids):
-    """Like :func:`_argmin_cells` but on :func:`_seq_d2` distances and
-    with the expression form's exact tie/NaN discipline: centroids are
-    ordered by cell id so first-argmin == the (d, cell) struct-min's
-    lowest-id tiebreak, and NaN distances sort last (Spark's NaN
-    ordering — a row mixing inf and NaN picks the inf), an all-NaN row
-    picking the lowest id with d = NaN. NULL vectors (ADVICE r11) take
-    the lowest cell id with d = NaN, mirroring the expression form's
-    null-sorts-first array_min behaviour instead of crashing."""
+def _nearest(X, C):
+    """The package's one nearest-centroid kernel: for every row of
+    ``X`` the row of ``C`` (k >= 1, in cell-id order) that the
+    expression form's ``array_min`` of ``struct(d, cell)`` picks, on
+    :func:`_seq_d2` distances. Returns (index[n], d[n]).
+
+    Struct-min order: smallest d, ties to the lowest index; NaN sorts
+    after every number, +inf included, so a row mixing inf and NaN
+    picks its first real inf and an all-NaN row picks index 0 with
+    d = NaN."""
+    d2 = _seq_d2(X, C)
+    best = np.where(np.isnan(d2), np.inf, d2).argmin(axis=1)
+    rows = np.arange(len(d2))
+    # a row whose minimum reads inf holds only inf and NaN: its first
+    # real inf if any (argmax of an all-False row is 0, the NaN case)
+    tail = np.flatnonzero(~np.isfinite(d2[rows, best]))
+    if tail.size:
+        best[tail] = np.isinf(d2[tail]).argmax(axis=1)
+    return best, d2[rows, best]
+
+
+def _nearest_cell(centroids):
+    """Arrow-vectorized, BIT-IDENTICAL twin of
+    ``array_min(_cell_dists(v, centroids))``: a pandas UDF returning
+    ``struct<cell int, d double>`` from :func:`_nearest`. Every Spark
+    assignment in the package (IVF cells, k-means rounds, SemDeDup)
+    calls it; the interpreted higher-order functions it replaces cost
+    ~1 µs per (row, cell, dim) element.
+
+    A NULL vector's distances are all null and null sorts first, so
+    it takes the lowest cell id with d = null, as the expression
+    does. (The udf is built per call: pandas_udf parses its DDL return
+    type against the active session.)"""
     order = sorted(range(len(centroids)), key=lambda i: int(centroids[i][0]))
-    mat = np.array(
-        [centroids[i][1] for i in order], dtype=np.float64
-    )
-    cell_ids = np.array(
-        [int(centroids[i][0]) for i in order], dtype=np.int32
-    )
-    vals = vs.tolist()
-    n = len(vals)
-    if n == 0:
-        return None, None
-    mask = np.array([v is not None for v in vals])
-    lowest = np.int32(cell_ids[0]) if len(cell_ids) else np.int32(-1)
-    cells = np.full(n, lowest, dtype=np.int32)
-    d_out = np.full(n, np.nan, dtype=np.float64)
-    X = np.array([np.asarray(v, dtype=np.float64) for v, m in zip(vals, mask) if m])
-    if len(X) and len(cell_ids):
-        d2 = _seq_d2(X, mat)
-        isn = np.isnan(d2)
-        cand = np.where(isn, np.inf, d2)
-        m = cand.min(axis=1, keepdims=True)
-        is_min = cand == m
-        # struct-min ordering: non-NaN beats NaN at equal masked value
-        # (inf < NaN), then lowest index (== lowest cell id)
-        pref = is_min & ~isn
-        best = np.where(
-            pref.any(axis=1), pref.argmax(axis=1), is_min.argmax(axis=1)
+    mat = np.array([centroids[i][1] for i in order], dtype=np.float64)
+    cell_ids = np.array([int(centroids[i][0]) for i in order], dtype=np.int32)
+    lowest = cell_ids[0] if len(cell_ids) else np.int32(-1)
+
+    @F.pandas_udf("cell int, d double")
+    def nearest(vs: pd.Series) -> pd.DataFrame:
+        vals = vs.tolist()
+        mask = np.array([v is not None for v in vals], dtype=bool)
+        cells = np.full(len(vals), lowest, dtype=np.int32)
+        d = np.full(len(vals), np.nan)
+        if mask.any() and len(cell_ids):
+            X = np.array(
+                [np.asarray(v, dtype=np.float64) for v in vals if v is not None]
+            )
+            best, d[mask] = _nearest(X, mat)
+            cells[mask] = cell_ids[best]
+        return pd.DataFrame(
+            {"cell": cells, "d": pd.arrays.FloatingArray(d, ~mask)}
         )
-        cells[mask] = cell_ids[best]
-        d_out[mask] = d2[np.arange(len(X)), best]
-    return cells, d_out
 
-
-def _cell_assign_vec_seq(centroids):
-    """Arrow-vectorized, BIT-IDENTICAL replacement for the
-    ``array_min(_cell_dists(...))`` expression form (see
-    :func:`_seq_d2`): the interpreted higher-order functions cost
-    ~1 µs per (row, cell, dim) element — measured ~1 s per k-means
-    round at n=2000, k=8, dim=64 — where this kernel is memory-bound
-    numpy. Returns ``struct<cell int, d double>``."""
-
-    @F.pandas_udf("cell int, d double")
-    def assign(vs: pd.Series) -> pd.DataFrame:
-        cells, d2 = _argmin_cells_seq(vs, centroids)
-        if cells is None:
-            return pd.DataFrame({"cell": pd.Series([], dtype="int32"),
-                                 "d": pd.Series([], dtype="float64")})
-        return pd.DataFrame({"cell": cells, "d": d2})
-
-    return assign
-
-
-def _cell_assign_vec(centroids):
-    """Arrow-vectorized twin of ``_cell_assign`` (same discipline as
-    ``pq.pq_codes_vec``) — see :func:`_argmin_cells` for the kernel."""
-
-    @F.pandas_udf("int")
-    def assign(vs: pd.Series) -> pd.Series:
-        cells, _d2 = _argmin_cells(vs, centroids)
-        if cells is None:
-            return pd.Series([], dtype="int32")
-        return pd.Series(cells)
-
-    return assign
-
-
-def _cell_assign_vec_d(centroids):
-    """Like :func:`_cell_assign_vec` but returning the assignment AND
-    its squared distance (``struct<cell int, d double>``) — the shape
-    ``kmeans_lloyd``'s final pass needs."""
-
-    @F.pandas_udf("cell int, d double")
-    def assign(vs: pd.Series) -> pd.DataFrame:
-        cells, d2 = _argmin_cells(vs, centroids)
-        if cells is None:
-            return pd.DataFrame({"cell": pd.Series([], dtype="int32"),
-                                 "d": pd.Series([], dtype="float64")})
-        return pd.DataFrame({"cell": cells, "d": d2})
-
-    return assign
+    return nearest
 
 
 def cell_near_dup_pairs(
@@ -879,11 +812,12 @@ def _imi_probes_vec(books, nprobe: int):
 
     @F.pandas_udf("array<int>")
     def probes(vs: pd.Series) -> pd.Series:
+        X = np.array([np.asarray(v, dtype=np.float64) for v in vs])
+        if len(X) == 0:
+            return pd.Series([], dtype=object)
         out = []
-        for v in vs:
-            q = np.asarray(v, dtype=np.float64)
-            d0 = ((q[None, :dsub] - mats[0]) ** 2).sum(axis=1)
-            d1 = ((q[None, dsub:] - mats[1]) ** 2).sum(axis=1)
+        for d0, d1 in zip(_seq_d2(X[:, :dsub], mats[0]),
+                          _seq_d2(X[:, dsub:], mats[1])):
             s = (d0[:, None] + d1[None, :]).ravel()
             ids = np.arange(len(s))
             order = np.lexsort((ids, s))[:nprobe]
@@ -989,12 +923,8 @@ def train_ivf_centroids(
     rng = np.random.RandomState(seed)
     cents = X[rng.choice(len(X), size=n_cells, replace=False)]
     for _ in range(max_iter):
-        # squared-L2 assignment, ties to the lowest cell id (argmin)
-        # chunked: bit-identical to the full broadcast, bounded temp
-        # (see _pairwise_d2 — the full (n, k, dim) temp was 15 GB at
-        # k=240 and dominated wall clock)
-        d2 = _pairwise_d2(X, cents)
-        assign = d2.argmin(axis=1)
+        # the same kernel _cell_assign runs on the corpus
+        assign, _ = _nearest(X, cents)
         for c in range(n_cells):
             members = X[assign == c]
             if len(members):
@@ -1028,44 +958,12 @@ def _cell_dists(vec_col: Column, centroids) -> Column:
     )
 
 
-def _cell_only_vec_seq(centroids):
-    """Cell-only variant of :func:`_cell_assign_vec_seq` replicating
-    the expression form's EXACT semantics incl. its null corner: a
-    NULL vector's distances are all null, null struct fields sort
-    first in array_min, so the expression assigned the LOWEST cell id
-    (empirically pinned) — the kernel does the same, as it does for
-    all-NaN rows (NaN sorts last)."""
-    order = sorted(range(len(centroids)), key=lambda i: int(centroids[i][0]))
-    mat = np.array([centroids[i][1] for i in order], dtype=np.float64)
-    cell_ids = np.array(
-        [int(centroids[i][0]) for i in order], dtype=np.int64
-    )
-    lowest = int(cell_ids[0]) if len(cell_ids) else -1
-
-    @F.pandas_udf("long")
-    def assign(vs: pd.Series) -> pd.Series:
-        vals = vs.tolist()
-        mask = [v is not None for v in vals]
-        X = np.array(
-            [np.asarray(v, dtype=np.float64) for v, m in zip(vals, mask) if m]
-        )
-        out = np.full(len(vals), lowest, dtype=np.int64)
-        if len(X) and len(cell_ids):
-            d2 = _seq_d2(X, mat)
-            best = np.where(np.isnan(d2), np.inf, d2).argmin(axis=1)
-            out[np.array(mask)] = cell_ids[best]
-        return pd.Series(out)
-
-    return assign
-
-
 def _cell_assign(df: DataFrame, centroids, vec_col: str, out: str) -> DataFrame:
     """Assign each vector to its nearest centroid (min by (d, cell)
-    struct order — deterministic tiebreak), as a narrow map. r11: the
-    interpreted ``array_min(_cell_dists(...))`` expression became the
-    bit-identical sequential-summation Arrow kernel (see
-    :func:`_seq_d2`); same values, same lowest-id ties, same null/NaN
-    corners (pinned by tests)."""
+    struct order — deterministic tiebreak), as a narrow map through
+    :func:`_nearest_cell`, the bit-identical kernel of
+    ``array_min(_cell_dists(...))``: same values, same lowest-id ties,
+    same null/NaN corners (pinned by tests). ``out`` is a bigint."""
     staged = df.withColumn("__v", to_double_array(vec_col))
     # coalesce: provably non-null cell id, else the candidate join's
     # inferred isnotnull(cell) re-evaluates the kernel a second time
@@ -1073,7 +971,9 @@ def _cell_assign(df: DataFrame, centroids, vec_col: str, out: str) -> DataFrame:
     return staged.withColumn(
         out,
         F.coalesce(
-            _cell_only_vec_seq(centroids)(F.col("__v")),
+            _nearest_cell(centroids)(F.col("__v"))
+            .getField("cell")
+            .cast("long"),
             F.lit(-1),
         ),
     ).drop("__v")
@@ -1087,31 +987,15 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized_assign: bool = False,
 ) -> DataFrame:
     """IVF approximate kNN: corpus vectors live in their nearest cell;
     each query probes its ``nprobe`` nearest cells. Candidate
     generation is an equi-join on cell id — the 100 TB plan — and
     recall grows with nprobe (property-tested against brute force).
-
-    ``vectorized_assign``: corpus cell assignment via the Arrow/numpy
-    kernel (``_cell_assign_vec``) instead of the literal-centroid
-    expression. The expression form is interpreted per (row, cell), so
-    its cost is O(N * k * dim) in SLOW per-element lambda dispatches —
-    measured unusable past a few hundred cells (the n_cells ∝ N
-    deployment discipline reaches thousands); the numpy kernel does
-    the same argmin at memory bandwidth. Default OFF because the two
-    forms may differ on sub-ulp distance ties (the documented 1-ulp
-    pairwise-vs-sequential summation caveat), and the frozen golden
-    pins the expression form at n_cells=8; property tests assert the
-    two paths agree cell-for-cell on the fixtures."""
-    if vectorized_assign:
-        corpus_cells = corpus.withColumn(
-            "__cell",
-            _cell_assign_vec(centroids)(to_double_array(vec_col)),
-        )
-    else:
-        corpus_cells = _cell_assign(corpus, centroids, vec_col, "__cell")
+    Corpus cells come from ``_cell_assign`` (numpy at memory bandwidth,
+    bit-identical to the literal-centroid expression); query probes
+    sort the expression's per-cell distances."""
+    corpus_cells = _cell_assign(corpus, centroids, vec_col, "__cell")
 
     probes = (
         queries.select(

@@ -21,12 +21,11 @@ Cross-engine float discipline:
 - cosine: DuckDB ``list_cosine_similarity`` vs Spark's dot/norm fold —
   the established suite-wide pairing, exact at the ROUND(...,4)
   output grid;
-- the numpy assignment kernels (``_cell_assign_vec``,
-  ``imi_assign_vec``) sum with pairwise summation while list_sum is
-  sequential; equality of the resulting ARGMIN is asserted for the
-  frozen corpus by the oracle suite itself (a flip would hash-mismatch
-  loudly), and the pruning threshold carries a documented 4.7e-4
-  margin at sf0.01 — far beyond ulp noise.
+- every numpy distance kernel (``similarity._seq_d2``: assignment,
+  training, IMI halves and probes, PQ codes and ADC tables) is the
+  same sequential fold, so its argmin is the (d2, cell) pick of both
+  engines; the pruning threshold carries a documented 4.7e-4 margin
+  at sf0.01 — far beyond ulp noise.
 
 Round 11 de-pinning: the VALUES constants are trained per corpus, so
 every builder takes an ``sf`` tag and reads the matching frozen

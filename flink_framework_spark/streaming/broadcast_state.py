@@ -24,7 +24,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from flink_framework_spark.streaming.drain import await_drain
+from flink_framework_spark.streaming.drain import run_available_now
 
 RULES_SCHEMA = "event_type string, min_value double, tag string"
 
@@ -81,15 +81,7 @@ def run_broadcast_rules(
 ) -> BroadcastRulesProcessor:
     """Run the stream to completion (availableNow) through the
     processor; returns it with outputs + the rules audit populated."""
-    q = (
-        stream_df.writeStream.foreachBatch(processor)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream_df.writeStream.foreachBatch(processor), query_name, timeout_sec
     )
-    try:
-        await_drain(q, query_name, timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
     return processor

@@ -16,6 +16,9 @@ query's ``lastProgress.batchId`` advances), so a slow-but-progressing
 drain is never killed, while a stuck one still raises within
 ``timeout_sec`` of its last completed batch. ``hard_timeout_sec``
 bounds total wall-clock regardless of progress as a runaway backstop.
+
+``run_available_now`` is the one start -> drain -> stop body those
+helpers share; each passes its configured writer.
 """
 
 from __future__ import annotations
@@ -62,3 +65,18 @@ def await_drain(
                 f"streaming query {query_name!r} still active after "
                 f"{hard}s hard cap"
             )
+
+
+def run_available_now(
+    writer, query_name: str, timeout_sec: float = 120
+) -> None:
+    """Start ``writer`` (a configured ``DataStreamWriter``) as an
+    availableNow query named ``query_name`` and block until it has
+    drained (:func:`await_drain`, ``timeout_sec`` an idle budget);
+    the query is stopped on the way out if it is still active."""
+    q = writer.queryName(query_name).trigger(availableNow=True).start()
+    try:
+        await_drain(q, query_name, timeout_sec)
+    finally:
+        if q.isActive:
+            q.stop()

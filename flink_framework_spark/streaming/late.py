@@ -29,7 +29,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from flink_framework_spark.streaming.drain import await_drain
+from flink_framework_spark.streaming.drain import run_available_now
 
 
 class LateSideOutputProcessor:
@@ -99,15 +99,7 @@ def run_with_late_side_output(
 ) -> LateSideOutputProcessor:
     """Run the stream to completion (availableNow) through the
     processor; returns it with both side outputs populated."""
-    q = (
-        stream_df.writeStream.foreachBatch(processor)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream_df.writeStream.foreachBatch(processor), query_name, timeout_sec
     )
-    try:
-        await_drain(q, query_name, timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
     return processor

@@ -28,7 +28,7 @@ from typing import Callable, Mapping, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from flink_framework_spark.streaming.drain import await_drain
+from flink_framework_spark.streaming.drain import run_available_now
 
 Sink = Callable[[DataFrame, int], None]
 
@@ -100,15 +100,7 @@ def run_with_side_outputs(
     timeout_sec: int = 120,
 ) -> SideOutputRouter:
     """Run the stream to completion (availableNow) through the router."""
-    q = (
-        stream_df.writeStream.foreachBatch(router)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream_df.writeStream.foreachBatch(router), query_name, timeout_sec
     )
-    try:
-        await_drain(q, query_name, timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
     return router

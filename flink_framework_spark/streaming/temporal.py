@@ -136,25 +136,27 @@ def _wm_side(df: DataFrame, ts: str, watermark: str) -> DataFrame:
     return df.withWatermark(ts, watermark)
 
 
-def _cell(v, typ):
-    """Pandas cell -> state-schema-faithful Python value. A column
-    that is int64 on the wire arrives as float64 in pandas whenever
-    the OTHER side's null padding touches the batch, so integral
-    state slots must re-int their values."""
-    if v is None or (
-        not isinstance(v, (str, bytes)) and pd.isna(v)
-    ):
-        return None
-    if typ in ("bigint", "int"):
-        return int(v)
-    if typ in ("double", "float"):
-        return float(v)
-    if typ == "boolean":
-        return bool(v)
+_TO_STATE = {
+    "bigint": int, "int": int, "double": float, "float": float,
+    "boolean": bool,
+}
+
+
+def _state_values(col: pd.Series, typ: str) -> list:
+    """A batch column -> state-schema-faithful Python values, NULL
+    (None, NaN, NaT) as None, one ``tolist`` per column. A column that
+    is int64 on the wire arrives as float64 in pandas whenever the
+    OTHER side's null padding touches the batch, so integral state
+    slots re-int their values."""
+    vals = col.tolist()
     if typ == "timestamp":
         # carried as epoch seconds in state (micros-exact)
-        return v.to_datetime64().astype("int64").item() / 1e9
-    return v
+        return [None if v is None or v is pd.NaT else v.value / 1e9
+                for v in vals]
+    conv = _TO_STATE.get(typ)
+    if conv is None:
+        return [None if v is None or v != v else v for v in vals]
+    return [None if v is None or v != v else conv(v) for v in vals]
 
 
 def _out_series(values: list, typ: str):
@@ -232,7 +234,8 @@ def temporal_join_changelog_stream(
     keys, f_types, d_types, payload, attrs = _preflight(
         facts, dim_updates, on, fact_ts, dim_ts, how
     )
-    # _cell encodes instants only: a TIMESTAMP_NTZ payload is refused
+    # _state_values encodes instants only: a TIMESTAMP_NTZ payload is
+    # refused
     arr = {
         c: state_array(f"{side} column {c!r}", types[c], "temporal-join",
                        ntz=False)
@@ -287,20 +290,15 @@ def temporal_join_changelog_stream(
         new_dim: list[tuple] = []
         if pdf is not None and len(pdf):
             ts_us = [round(s * 1e6) for s in ts_series_to_epoch_s(pdf["__ts"])]
-            sides = pdf["__side"].tolist()
-            a_cols = [pdf[a] for a in attrs]
-            p_cols = [pdf[p] for p in payload]
-            for r in range(len(pdf)):
-                if sides[r] == 0:
-                    new_dim.append(
-                        (ts_us[r],
-                         tuple(_cell(c.iloc[r], t)
-                               for c, t in zip(a_cols, a_typ)))
-                    )
+            a_vals = [_state_values(pdf[a], t) for a, t in zip(attrs, a_typ)]
+            p_vals = [_state_values(pdf[p], t) for p, t in zip(payload, p_typ)]
+            for r, side in enumerate(pdf["__side"].tolist()):
+                if side == 0:
+                    new_dim.append((ts_us[r], tuple(c[r] for c in a_vals)))
                 else:
                     f_us.append(ts_us[r])
-                    for i, (c, t) in enumerate(zip(p_cols, p_typ)):
-                        f_pl[i].append(_cell(c.iloc[r], t))
+                    for i, c in enumerate(p_vals):
+                        f_pl[i].append(c[r])
         if new_dim:
             # merge updates into the version history; an exact-ts
             # re-update overwrites (last writer wins, arrival order)

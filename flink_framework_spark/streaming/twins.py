@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_framework_spark.io import _normalize_events_ts
 from flink_framework_spark.session import configure_session
-from flink_framework_spark.streaming.drain import await_drain
+from flink_framework_spark.streaming.drain import run_available_now
 
 
 def read_events_stream(
@@ -71,16 +71,9 @@ def run_to_memory(
     slow-but-progressing drain under suite contention is never killed.
     A partially-processed memory table is never returned.
     """
-    q = (
-        df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        df.writeStream.format("memory").outputMode(output_mode),
+        query_name,
+        timeout_sec,
     )
-    try:
-        await_drain(q, query_name, timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
     return df.sparkSession.table(query_name)

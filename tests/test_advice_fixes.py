@@ -635,6 +635,40 @@ def test_match_combinations_unbounded_unpersists_levels(spark):
     out.unpersist()
 
 
+def test_match_combinations_fast_path_releases_steps(spark):
+    """The fast unbounded path (window bound within level_cap) hands
+    back a persisted, counted result and releases its step frame: two
+    calls grow the persistent RDDs by exactly one each — the result."""
+    from flink_framework_spark.operators.cep import match_combinations
+
+    ev = spark.createDataFrame(
+        [
+            (1, "2024-01-01 00:01:00", 0, "click"),
+            (1, "2024-01-01 00:02:00", 1, "click"),
+            (1, "2024-01-01 00:04:00", 5, "purchase"),
+            (2, "2024-01-01 00:01:00", 6, "click"),
+            (2, "2024-01-01 00:05:00", 7, "purchase"),
+        ],
+        "user_id long, ts string, event_id long, event_type string",
+    ).selectExpr("user_id", "CAST(ts AS TIMESTAMP) ts", "event_id", "event_type")
+    jsc = spark.sparkContext._jsc.sc()
+    sizes = [jsc.getPersistentRDDs().size()]
+    outs = []
+    # two horizons: an identical plan would hit the first call's cache
+    for within in ("30 MINUTES", "20 MINUTES"):
+        outs.append(
+            match_combinations(
+                ev, step="click", then_step="purchase", within=within
+            )
+        )
+        sizes.append(jsc.getPersistentRDDs().size())
+    assert [b - a for a, b in zip(sizes, sizes[1:])] == [1, 1], sizes
+    for out in outs:
+        assert out.is_cached
+        assert out.count() == 4  # user 1: 2^2 - 1, user 2: 1
+        out.unpersist()
+
+
 # --------------------------------------------- r11 advice regressions
 
 def test_where_conflict_reported_for_group_member(spark):

@@ -1,8 +1,9 @@
 """Inverted multi-index (IMI) coarse quantizer for SemDeDup.
 
 The cell id is pure structure (code0 * k1 + code1), so the strongest
-check is independent recomputation: rebuild both half-argmins in numpy
-from the returned codebooks and require every assigned cell to match.
+check is independent recomputation: rebuild both half-argmins with the
+literal-codebook expression form (``_cell_dists`` over each half) from
+the returned codebooks and require every assigned cell to match.
 The pruning stage is ``_semantic_prune`` — the exact code path the
 flat-IVF SemDeDup golden and its DuckDB recheck already pin — so the
 tests here focus on the quantizer and the end-to-end dedup contract
@@ -18,12 +19,12 @@ from pyspark.sql import functions as F
 
 from flink_framework_spark.io import table
 from flink_framework_spark.operators.similarity import (
+    _cell_dists,
     imi_assign_vec,
     semantic_dedup,
     semantic_dedup_imi,
     train_imi,
     train_ivf_centroids,
-    _pairwise_d2,
 )
 
 
@@ -37,26 +38,28 @@ def test_train_imi_deterministic_and_shaped(spark, sf_dir):
     assert train_imi(em, k_per_half=3) == books
 
 
-def test_imi_cells_match_numpy_argmin(spark, sf_dir):
+def test_imi_cells_match_expression_form(spark, sf_dir):
     em = table(spark, sf_dir, "embeddings")
     books = train_imi(em, k_per_half=4)
+    dsub = len(books[0][0])
+
+    def half(s):
+        return F.array_min(
+            _cell_dists(
+                F.slice("v", s * dsub + 1, dsub), list(enumerate(books[s]))
+            )
+        ).getField("cell")
+
     rows = (
         em.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("v"),
         )
         .withColumn("cell", imi_assign_vec(books)(F.col("v")))
+        .withColumn("want", half(0) * len(books[1]) + half(1))
         .collect()
     )
-    m0 = np.asarray(books[0], dtype=np.float64)
-    m1 = np.asarray(books[1], dtype=np.float64)
-    dsub = m0.shape[1]
-    X = np.array([r.v for r in rows], dtype=np.float64)
-    c0 = _pairwise_d2(X[:, :dsub], m0).argmin(axis=1)
-    c1 = _pairwise_d2(X[:, dsub:], m1).argmin(axis=1)
-    want = c0 * len(m1) + c1
-    got = np.array([r.cell for r in rows])
-    assert (got == want).all()
+    assert rows and all(r.cell == r.want for r in rows)
 
 
 def test_semantic_dedup_imi_drops_planted_duplicates(spark, sf_dir):
@@ -80,46 +83,41 @@ def test_semantic_dedup_imi_drops_planted_duplicates(spark, sf_dir):
         assert rows[i].cell == r.cell
 
 
-def test_ivf_vectorized_assign_agrees_with_expression_form(spark, sf_dir):
-    """The numpy cell-assignment kernel must agree with the
-    literal-centroid expression form cell-for-cell on the fixtures
-    (differences are only possible on sub-ulp distance ties), and
-    ivf_topk must return identical results under either path."""
+def test_ivf_cells_bitwise_match_expression_form(spark, sf_dir):
+    """IVF corpus cells at n_cells 8 and 64 are the literal-centroid
+    expression's struct-min bit for bit: the kernel's (cell, d) equals
+    ``array_min(_cell_dists(...))`` and ``_cell_assign`` (the cells
+    ``ivf_topk`` joins on) returns that cell."""
+    import struct as st
+
+    from flink_framework_spark.functions.helpers import to_double_array
     from flink_framework_spark.io import table as t
     from flink_framework_spark.operators.similarity import (
         _cell_assign,
-        _cell_assign_vec,
-        ivf_topk,
+        _nearest_cell,
     )
-    from flink_framework_spark.functions.helpers import to_double_array
 
     em = t(spark, sf_dir, "embeddings")
+    v = to_double_array("embedding")
     for n_cells in (8, 64):
         cents = train_ivf_centroids(em, n_cells=n_cells)
-        expr = {
-            r.vec_id: r.__getattr__("c")
+        assert len(cents) == n_cells
+        rows = em.select(
+            "vec_id",
+            F.array_min(_cell_dists(v, cents)).alias("e"),
+            _nearest_cell(cents)(v).alias("k"),
+        ).collect()
+        expr = {r.vec_id: r.e.cell for r in rows}
+        for r in rows:
+            assert r.e.cell == r.k.cell, (n_cells, r.vec_id)
+            assert st.pack("<d", r.e.d) == st.pack("<d", r.k.d), r.vec_id
+        assigned = {
+            r.vec_id: r.c
             for r in _cell_assign(em, cents, "embedding", "c")
             .select("vec_id", "c")
             .collect()
         }
-        vec = {
-            r.vec_id: r.c
-            for r in em.select(
-                "vec_id",
-                _cell_assign_vec(cents)(
-                    to_double_array("embedding")
-                ).alias("c"),
-            ).collect()
-        }
-        assert expr == vec, n_cells
-    cents = train_ivf_centroids(em, n_cells=8)
-    q = em.filter(F.col("vec_id") < 10)
-    a = sorted(tuple(r) for r in ivf_topk(q, em, cents).collect())
-    b = sorted(
-        tuple(r)
-        for r in ivf_topk(q, em, cents, vectorized_assign=True).collect()
-    )
-    assert a == b
+        assert assigned == expr, n_cells
 
 
 def test_imi_topk_recall_vs_brute_force(spark, sf_dir):

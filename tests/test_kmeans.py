@@ -74,52 +74,61 @@ def test_kmeans_empty_input_raises(spark):
         kmeans_lloyd(df, k=2, n_iter=1)
 
 
-def test_kmeans_vectorized_assign_agrees_at_large_k(spark, sf_dir):
-    """Large-k safety (the literal-centroid expression is interpreted
-    per (row, centroid, dim) and its nested-array literal grows with
-    k*dim): the Arrow/numpy assignment kernel must produce the same
-    clustering as the expression form. k=256 over the 500-vector
-    embeddings fixture — more centroids than the expression form is
-    meant for, small enough that forcing it through stays fast. Auto
-    mode (vectorized_assign=None) must route k=256 through the numpy
-    kernel and k=8 through the expression (the golden-pinned form)."""
+def test_kmeans_kernel_bitwise_matches_expression_at_large_k(spark, sf_dir):
+    """Large-k safety: at k=256 over the embeddings fixture (more
+    centroids than the literal-centroid expression is meant for,
+    small enough to run it) every k-means pass is the expression
+    form's struct-min bit for bit — the kernel's (cell, d) on the
+    final centroids equals ``array_min(_cell_dists(...))``, and the
+    operator's (cluster, d2) output is that pick. Both k=256 and the
+    golden-pinned k=8 plan the kernel as an ArrowEvalPython stage,
+    never BatchEvalPython."""
+    import struct as st
+
+    from pyspark.sql import functions as F
+
+    from flink_framework_spark.functions.helpers import round_duck
     from flink_framework_spark.io import table
+    from flink_framework_spark.operators.similarity import (
+        _cell_dists,
+        _nearest_cell,
+        to_double_array,
+    )
 
     emb = table(spark, sf_dir, "embeddings")
-    a = (
-        kmeans_lloyd(emb, k=256, n_iter=2, vectorized_assign=False)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
+    out, cents = kmeans_lloyd(emb, k=256, n_iter=2, return_centroids=True)
+    assert len(cents) == 256
+    staged = emb.select("vec_id", to_double_array("embedding").alias("__v"))
+    expr = staged.select(
+        "vec_id", F.array_min(_cell_dists(F.col("__v"), cents)).alias("b")
     )
-    b = (
-        kmeans_lloyd(emb, k=256, n_iter=2, vectorized_assign=True)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    assert a["cluster"].tolist() == b["cluster"].tolist()
-    # d2 is rounded to 4 decimals on both paths; the 1-ulp summation
-    # caveat sits far below that
-    assert a["d2"].tolist() == b["d2"].tolist()
-    # auto threshold: k=256 -> numpy kernel plan (BatchEvalPython is
-    # forbidden; the kernel is an ArrowEvalPython stage)
-    auto_plan = kmeans_lloyd(
-        emb, k=256, n_iter=1
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in auto_plan
-    # r11: the small-k path now also runs an Arrow kernel — but the
-    # BIT-IDENTICAL sequential-summation one (_cell_assign_vec_seq),
-    # never the pairwise-sum kernel; BatchEvalPython stays forbidden.
-    small_plan = kmeans_lloyd(
-        emb, k=8, n_iter=1
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in small_plan
-    assert "BatchEvalPython" not in small_plan
+    kern = staged.select("vec_id", _nearest_cell(cents)(F.col("__v")).alias("b"))
+    e = {r["vec_id"]: r["b"] for r in expr.collect()}
+    kv = {r["vec_id"]: r["b"] for r in kern.collect()}
+    assert set(e) == set(kv)
+    for i in e:
+        assert e[i]["cell"] == kv[i]["cell"], i
+        assert st.pack("<d", e[i]["d"]) == st.pack("<d", kv[i]["d"]), i
+    want = {
+        r["vec_id"]: (r["c"], r["d"])
+        for r in expr.select(
+            "vec_id",
+            F.col("b.cell").cast("long").alias("c"),
+            round_duck(F.col("b.d"), 4).alias("d"),
+        ).collect()
+    }
+    got = {r["vec_id"]: (r["cluster"], r["d2"]) for r in out.collect()}
+    assert got == want
+    for k in (256, 8):
+        plan = kmeans_lloyd(
+            emb, k=k, n_iter=1
+        )._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" in plan, k
+        assert "BatchEvalPython" not in plan, k
 
 
 def test_seq_kernel_bitwise_matches_expression(spark, sf_dir):
-    """The r11 Arrow replacement for the literal-centroid expression
+    """The Arrow replacement for the literal-centroid expression
     must be BIT-IDENTICAL, not merely close: _seq_d2 reproduces the
     expression's fold-left summation order, so (cell, d) agree
     bitwise on real fixture vectors — the invariant that lets the
@@ -131,8 +140,8 @@ def test_seq_kernel_bitwise_matches_expression(spark, sf_dir):
 
     from flink_framework_spark.io import table
     from flink_framework_spark.operators.similarity import (
-        _cell_assign_vec_seq,
         _cell_dists,
+        _nearest_cell,
         to_double_array,
     )
 
@@ -151,7 +160,7 @@ def test_seq_kernel_bitwise_matches_expression(spark, sf_dir):
         r["vec_id"]: (r["__b"]["cell"], r["__b"]["d"])
         for r in staged.select(
             "vec_id",
-            _cell_assign_vec_seq(cents)(F.col("__v")).alias("__b"),
+            _nearest_cell(cents)(F.col("__v")).alias("__b"),
         ).collect()
     }
     assert set(expr) == set(kern)
@@ -161,42 +170,44 @@ def test_seq_kernel_bitwise_matches_expression(spark, sf_dir):
 
 
 def test_cell_only_kernel_matches_expression_corners(spark):
-    """_cell_only_vec_seq (the r11 _cell_assign kernel) must replicate
-    the expression form on the corners too: NULL vector -> lowest cell
-    id (null d sorts first in array_min), NaN vector -> lowest cell id
-    (NaN sorts last, all-NaN picks position 0), ties -> lowest id."""
+    """_cell_assign (the cell-only use of the _nearest_cell kernel)
+    must replicate the expression form on the corners too: NULL
+    vector -> lowest cell id (null d sorts first in array_min), NaN
+    vector -> lowest cell id (NaN sorts last, all-NaN picks position
+    0), ties -> lowest id; with a NaN centroid, a number or an inf
+    distance beats its NaN distance."""
     from pyspark.sql import functions as F
 
     from flink_framework_spark.operators.similarity import (
+        _cell_assign,
         _cell_dists,
-        _cell_only_vec_seq,
     )
 
-    cents = [(0, [1.0, 2.0]), (1, [0.0, 0.0]), (2, [5.0, 5.0])]
+    nan = float("nan")
     df = spark.createDataFrame(
-        [(1, [0.1, 0.2]), (2, None), (3, [float("nan"), 1.0]),
-         (4, [5.0, 4.9]), (5, [0.5, 1.0])],
+        [(1, [0.1, 0.2]), (2, None), (3, [nan, 1.0]),
+         (4, [5.0, 4.9]), (5, [0.5, 1.0]), (6, [1.0, 0.0]),
+         (7, [1e200, 0.0])],
         "id long, v array<double>",
     )
-    expr = {
-        r["id"]: r["cell"]
-        for r in df.select(
-            "id",
-            F.coalesce(
-                F.array_min(_cell_dists(F.col("v"), cents)).getField("cell"),
-                F.lit(-1),
-            ).alias("cell"),
-        ).collect()
-    }
-    kern = {
-        r["id"]: r["cell"]
-        for r in df.select(
-            "id",
-            F.coalesce(
-                _cell_only_vec_seq(cents)(F.col("v")), F.lit(-1)
-            ).alias("cell"),
-        ).collect()
-    }
-    assert {k: int(v) for k, v in expr.items()} == {
-        k: int(v) for k, v in kern.items()
-    }
+    for cents in (
+        [(0, [1.0, 2.0]), (1, [0.0, 0.0]), (2, [5.0, 5.0])],
+        [(0, [nan, 0.0]), (1, [0.0, 0.0]), (2, [5.0, 5.0])],
+    ):
+        expr = {
+            r["id"]: r["cell"]
+            for r in df.select(
+                "id",
+                F.coalesce(
+                    F.array_min(_cell_dists(F.col("v"), cents)).getField(
+                        "cell"
+                    ),
+                    F.lit(-1),
+                ).alias("cell"),
+            ).collect()
+        }
+        kern = {
+            r["id"]: r["cell"]
+            for r in _cell_assign(df, cents, "v", "cell").collect()
+        }
+        assert expr == kern, cents

@@ -108,7 +108,6 @@ def _ivf_scaled(spark, sf_dir: str, tiles: int):
         cents,
         k=5,
         nprobe=2,
-        vectorized_assign=True,
     )
 
 
