@@ -199,9 +199,13 @@ def kmeans_lloyd(
     picked = [0]
     dmin = _seq_d2(X, X[:1])[:, 0]
     while len(picked) < min(k, len(X)):
-        nxt = int(dmin.argmax())  # ties: numpy argmax -> lowest index
+        dmin[picked[-1]] = -np.inf  # a seed is never picked again
+        # argmax: a NaN distance (a NaN vector) is the farthest, and
+        # ties go to the lowest index
+        nxt = int(dmin.argmax())
         picked.append(nxt)
-        dmin = np.minimum(dmin, _seq_d2(X, X[nxt : nxt + 1])[:, 0])
+        # fmin: a NaN seed's distances must not erase everyone else's
+        dmin = np.fmin(dmin, _seq_d2(X, X[nxt : nxt + 1])[:, 0])
     centroids = [
         (i, [float(x) for x in X[p]]) for i, p in enumerate(picked)
     ]

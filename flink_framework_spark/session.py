@@ -31,6 +31,29 @@ compiler threads. Two confs make identical code hit:
   set, and in local mode every class is stored twice (once for the
   driver thread's class loader, once for the executor's).
 
+Cached-plan partitioning. ``persist``/``cache`` plans the cached
+query when it builds the ``InMemoryRelation``, and by default Spark
+turns AQE's final-stage partition coalescing off for that plan so the
+cache keeps the output partitioning of its last exchange. Every staged
+frame whose plan ends in a shuffle (``dedup._staged`` and the other
+persist sites) was then stored in ``spark.sql.shuffle.partitions``
+partitions, and every stage that scanned it ran that many tasks,
+however small the frame. ``spark.sql.optimizer.
+canChangeCachedPlanOutputPartitioning=true`` (runtime, in
+``RUNTIME_CONFS``) lets AQE coalesce the cached plan like any other:
+on ``perfbench``'s pipelines (sf0.01, local[4], 32 shuffle partitions)
+a traced pass ran 100 tasks instead of 568, and process CPU fell by a
+fifth. The conf is read when ``persist`` is called, not when the
+frame is first computed, so it must be set before a frame is staged.
+Coalescing aims at ``defaultParallelism`` partitions under
+``parallelismFirst=true``, but never at partitions smaller than
+``coalescePartitions.minPartitionSize`` (1 MB), so an MB-scale staged
+frame shrinks to a few partitions even at ``local[32]``: at sf0.1,
+q_curation_pipeline ran 188 tasks instead of 656 there. A staged
+frame no longer promises the hash partitioning of its last exchange,
+so a consumer keyed on the same column may plan one more exchange.
+Handed-in sessions gain the conf through ``configure_session``.
+
 Static confs are read once per JVM or SparkContext, so only sessions
 built here (``get_spark``, and the test fixture, which applies
 ``STATIC_CONFS`` itself) get them; a session the driver hands us keeps
@@ -57,6 +80,8 @@ RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     # one cache entry per distinct pipeline, whatever its stage id
     "spark.sql.codegen.useIdInClassName": "false",
+    # AQE may coalesce a persisted frame's last shuffle (see docstring)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 # Generated-class cache entries per JVM. Working sets measured with both

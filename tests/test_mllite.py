@@ -2,9 +2,16 @@
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import functions as F
 
-from flink_framework_spark.operators.mllite import logreg_score, logreg_train
+from flink_framework_spark.operators.mllite import (
+    _exp,
+    logreg_score,
+    logreg_train,
+)
 from flink_framework_spark.registry import all_queries
 
 
@@ -35,6 +42,18 @@ def test_logreg_weights_deterministic(spark):
     w1 = logreg_train(df, ["f1", "f2"], "label", "id")
     w2 = logreg_train(df, ["f1", "f2"], "label", "id")
     assert w1 == w2  # bit-identical floats
+
+
+def test_training_exp_tracks_libm_and_saturates():
+    """The training's CPU-independent ``e**x`` stays within about an
+    ulp of libm's, and saturates like it: inf past the double range,
+    0 below the smallest subnormal, NaN for NaN."""
+    xs = np.linspace(-708.0, 709.0, 100_001)  # normal results
+    want = np.array([math.exp(v) for v in xs.tolist()])
+    assert np.max(np.abs(_exp(xs) - want) / want) < 3e-16
+    edge = _exp(np.array([0.0, 710.0, np.inf, -746.0, -np.inf, np.nan]))
+    assert edge[:5].tolist() == [1.0, math.inf, math.inf, 0.0, 0.0]
+    assert math.isnan(edge[5])
 
 
 def test_train_cap_bounds_sample(spark):

@@ -90,14 +90,9 @@ def test_semantic_dedup_cells_match_expression_on_nan_centroids(spark):
     assert got == want
 
 
-@pytest.mark.parametrize("k", [8, 256])
-def test_kmeans_pass_matches_expression_on_nan_frame(spark, sf_dir, k):
-    """A NaN vector in the init sample becomes a NaN centroid (the
-    farthest-first seeding picks it second), so every round and the
-    final pass assign against it; the output must be the expression
-    form's pick on the final centroids."""
+def _nan_frame(spark, sf_dir):
+    """The embeddings fixture plus one all-NaN copy of vector 0."""
     from flink_framework_spark.io import table
-    from flink_framework_spark.operators.iterative import kmeans_lloyd
 
     em = table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array("embedding").alias("embedding")
@@ -106,7 +101,33 @@ def test_kmeans_pass_matches_expression_on_nan_frame(spark, sf_dir, k):
         (F.col("vec_id") + 10**6).alias("vec_id"),
         F.transform("embedding", lambda x: x * F.lit(NAN)).alias("embedding"),
     )
-    df = em.unionByName(poisoned)
+    return em.unionByName(poisoned)
+
+
+def test_kmeans_seeding_on_nan_frame_picks_distinct_rows(spark, sf_dir):
+    """Farthest-first seeding over a sample with a NaN vector: the NaN
+    row is picked once, and its NaN distances do not hide every other
+    row's (which made every later seed a copy of row 0)."""
+    from flink_framework_spark.operators.iterative import kmeans_lloyd
+
+    _, seeds = kmeans_lloyd(
+        _nan_frame(spark, sf_dir), k=8, n_iter=0, return_centroids=True
+    )
+    vecs = [tuple(_bits(x) for x in c) for _, c in seeds]
+    assert len(vecs) == 8
+    assert len(set(vecs)) == 8
+    assert sum(any(math.isnan(x) for x in c) for _, c in seeds) == 1
+
+
+@pytest.mark.parametrize("k", [8, 256])
+def test_kmeans_pass_matches_expression_on_nan_frame(spark, sf_dir, k):
+    """A NaN vector in the init sample becomes a NaN centroid (the
+    farthest-first seeding picks it second), so every round and the
+    final pass assign against it; the output must be the expression
+    form's pick on the final centroids."""
+    from flink_framework_spark.operators.iterative import kmeans_lloyd
+
+    df = _nan_frame(spark, sf_dir)
     out, cents = kmeans_lloyd(df, k=k, n_iter=2, return_centroids=True)
     assert any(math.isnan(x) for _, c in cents for x in c)
     b = F.array_min(_cell_dists(F.col("embedding"), cents))

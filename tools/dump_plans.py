@@ -1,16 +1,18 @@
 """Dump `.explain("formatted")` plans for registered queries into
-plans/r12/<query>_<tag>.txt — the before/after evidence the
+<out_dir>/<query>_<tag>.txt — the before/after evidence the
 optimization-round deliverables require.
 
 Usage:
-    python tools/dump_plans.py <tag> [q_name ...]
+    python tools/dump_plans.py <out_dir> <tag> [q_name ...]
 
-With no names, dumps every registered bench query. Tag is typically
-"before" or "after". Data dir from $SPARK_GRAFT_SF_DIR (default
-sf0.1); plans are CONSTRUCTED only (no action runs), so this is cheap
-— but note operators with eager probes (guarded dedup/similarity
-paths, iterative loops) do execute their setup jobs during plan
-construction.
+e.g. ``python tools/dump_plans.py plans/r13 after q_kmeans``. Each
+round writes its own directory, so a new pair never overwrites an
+earlier round's evidence. With no names, dumps every registered bench
+query. Tag is typically "before" or "after". Data dir from
+$SPARK_GRAFT_SF_DIR (default sf0.1); plans are CONSTRUCTED only (no
+action runs), so this is cheap — but note operators with eager probes
+(guarded dedup/similarity paths, iterative loops) do execute their
+setup jobs during plan construction.
 """
 
 from __future__ import annotations
@@ -26,14 +28,10 @@ from flink_framework_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        raise SystemExit(__doc__)
+    out_dir, tag, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r12",
-    )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
