@@ -4,16 +4,24 @@ driver-coordinated loop of declarative steps with a convergence check,
 lineage cut per round (``localCheckpoint``) so plans don't grow
 unboundedly — the standard Pregel-lite shape on Spark.
 
+Every per-round join pairs the static edge frame with a node-sized
+frame (ranks, labels, h-index state). A checkpointed frame keeps
+Catalyst's pre-execution size estimate, which for these loops is
+terabytes, so the joins would plan as sort-merge joins and shuffle the
+edge frame every round. Each loop therefore counts its node set once
+and sizes its node-sized join sides from that exact count
+(``_broadcast_if_fits``): while they fit the session's broadcast
+threshold they are broadcast and the edge frame never moves.
+
 ``connected_components``: min-label propagation over an undirected
-edge list. Per round: one shuffle join (labels ⋈ edges) + one
-aggregation; rounds ≤ graph diameter. At 100 TB-scale graphs one adds
-large-star/small-star optimizations, but the loop skeleton is the
-same.
+edge list. Per round: the edges joined to the broadcast labels, one
+aggregation to the neighbour minimum, and a join of the labels with
+the broadcast minima; rounds ≤ graph diameter. At 100 TB-scale graphs
+one adds large-star/small-star optimizations, but the loop skeleton
+is the same.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -21,34 +29,20 @@ from pyspark.sql import functions as F
 from flink_framework_spark.functions.helpers import round_duck
 
 
-@contextmanager
-def _shuffle_sized_to(spark, n_rows: int, rows_per_task: int = 150_000):
-    """Temporarily size ``spark.sql.shuffle.partitions`` to the loop's
-    measured per-round data volume (never above the session setting),
-    restoring it on exit.
+def _broadcast_if_fits(df: DataFrame, rows: int) -> DataFrame:
+    """``F.broadcast(df)`` when ``rows`` rows of ``df`` fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, each row sized the way
+    Catalyst sizes one (8 bytes plus each field's default size); ``df``
+    unchanged otherwise, and always when the threshold is 0 or less.
 
-    Iterative loops here eagerly materialize every round inside the
-    operator (``localCheckpoint``), so all sized shuffles happen while
-    the override is active; the escaping result frame is a narrow
-    projection. Why this exists: the per-round frames are usually tiny
-    (node/label tables), and AQE's default
-    ``coalescePartitions.parallelismFirst=true`` deliberately keeps
-    tiny shuffles at full parallelism — 32 near-empty tasks per
-    exchange, several exchanges per round, which at local[32]/sf0.1
-    made fixed task-scheduling latency ~half of PageRank's wall clock
-    (measured 6.8 s -> 3.7 s with sized shuffles, bit-identical
-    output). On a 100 TB graph ``n_rows`` is huge, the cap at the
-    session setting wins, and this is a no-op — the knob only ever
-    *removes* empty tasks, mirroring how a cluster deployment sizes
-    shuffle partitions to data volume.
-    """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    p = max(1, min(int(old), (n_rows + rows_per_task - 1) // rows_per_task))
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        yield p
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    ``rows`` is an exact count (or a bound) the caller already has, so
+    the hint is the choice Catalyst itself would make from true
+    statistics: a graph too large to broadcast keeps the sort-merge
+    plan."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    threshold = conf.autoBroadcastJoinThreshold()
+    width = 8 + df._jdf.schema().defaultSize()
+    return F.broadcast(df) if 0 < threshold and rows * width <= threshold else df
 
 
 def connected_components(
@@ -85,52 +79,52 @@ def connected_components(
     if vertices is not None:
         seeds = seeds.unionByName(vertices.select(F.col(vertex_id).alias("id")))
     und = und.filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
+    labels = (
+        seeds.distinct()
+        .withColumn("component", F.col("id"))
+        .localCheckpoint()
+    )
+    # both consumers of the staged edge frame (und, labels) are
+    # checkpointed now — drop the cache so repeated calls in a
+    # long-lived session don't accumulate dead storage
+    e.unpersist()
+    n = labels.count()
 
-    with _shuffle_sized_to(edges.sparkSession, und.count()):
-        labels = (
-            seeds.distinct()
-            .withColumn("component", F.col("id"))
+    # NOTE (r12): batching two rounds per probe — the move that
+    # helped coreness — was A/B'd here and measured SLOWER (min-of-4
+    # on the q_dedup_clusters edge set: 1.89 s per-round vs 2.32 s
+    # batched): min-label propagation converges in very few rounds
+    # on near-dup graphs, so block overshoot wastes proportionally
+    # more than the probe it saves. Keep per-round probes.
+    for _ in range(max_iter):
+        lab = _broadcast_if_fits(labels, n)
+        neighbor_min = (
+            und.join(lab, und.b == lab.id)
+            .groupBy(F.col("a").alias("id"))
+            .agg(F.min("component").alias("nbr_min"))
+        )
+        # Carry the previous label alongside the new one so the
+        # convergence check is a narrow filter-count over the already
+        # checkpointed rows (1 tiny job) instead of a second shuffle
+        # join against the old labels (which doubled per-round cost).
+        stepped = (
+            labels.join(_broadcast_if_fits(neighbor_min, n), "id", "left")
+            .select(
+                "id",
+                F.col("component").alias("__prev"),
+                F.least(
+                    F.col("component"),
+                    F.coalesce("nbr_min", F.col("component")),
+                ).alias("component"),
+            )
             .localCheckpoint()
         )
-        # both consumers of the staged edge frame (und, labels) are
-        # checkpointed now — drop the cache so repeated calls in a
-        # long-lived session don't accumulate dead storage
-        e.unpersist()
-
-        # NOTE (r12): batching two rounds per probe — the move that
-        # helped coreness — was A/B'd here and measured SLOWER (min-of-4
-        # on the q_dedup_clusters edge set: 1.89 s per-round vs 2.32 s
-        # batched): min-label propagation converges in very few rounds
-        # on near-dup graphs, so block overshoot wastes proportionally
-        # more than the probe it saves. Keep per-round probes.
-        for _ in range(max_iter):
-            neighbor_min = (
-                und.join(labels, und.b == labels.id)
-                .groupBy(F.col("a").alias("id"))
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            # Carry the previous label alongside the new one so the
-            # convergence check is a narrow filter-count over the already
-            # checkpointed rows (1 tiny job) instead of a second shuffle
-            # join against the old labels (which doubled per-round cost).
-            stepped = (
-                labels.join(neighbor_min, "id", "left")
-                .select(
-                    "id",
-                    F.col("component").alias("__prev"),
-                    F.least(
-                        F.col("component"),
-                        F.coalesce("nbr_min", F.col("component")),
-                    ).alias("component"),
-                )
-                .localCheckpoint()
-            )
-            changed = stepped.filter(
-                F.col("component") != F.col("__prev")
-            ).count()
-            labels = stepped.drop("__prev")
-            if changed == 0:
-                return labels
+        changed = stepped.filter(
+            F.col("component") != F.col("__prev")
+        ).count()
+        labels = stepped.drop("__prev")
+        if changed == 0:
+            return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
     )
@@ -210,42 +204,35 @@ def kmeans_lloyd(
         (i, [float(x) for x in X[p]]) for i, p in enumerate(picked)
     ]
 
-    # the per-round stats shuffle carries k*dim partially-aggregated
-    # rows per map task — size its reduce side to that volume, not the
-    # session default (r11; same rationale as _shuffle_sized_to's
-    # docstring: the override only ever removes near-empty tasks)
-    dim = len(centroids[0][1]) if centroids else 1
-    ctx = _shuffle_sized_to(df.sparkSession, k * dim)
-    with ctx:
-        for _ in range(n_iter):
-            assigned = staged.withColumn(
-                "__c", _nearest_cell(centroids)(F.col("__v")).getField("cell")
+    for _ in range(n_iter):
+        assigned = staged.withColumn(
+            "__c", _nearest_cell(centroids)(F.col("__v")).getField("cell")
+        )
+        stats = (
+            assigned.select(
+                "__c", F.posexplode("__v").alias("__pos", "__val")
             )
-            stats = (
-                assigned.select(
-                    "__c", F.posexplode("__v").alias("__pos", "__val")
-                )
-                .groupBy("__c", "__pos")
-                .agg(
-                    F.sum(F.col("__val").cast("decimal(28,14)")).alias("__s"),
-                    F.count(F.lit(1)).alias("__n"),
-                )
-                .collect()
+            .groupBy("__c", "__pos")
+            .agg(
+                F.sum(F.col("__val").cast("decimal(28,14)")).alias("__s"),
+                F.count(F.lit(1)).alias("__n"),
             )
-            dims: dict[int, dict[int, float]] = {}
-            for r in stats:
-                dims.setdefault(r["__c"], {})[r["__pos"]] = float(
-                    r["__s"] / r["__n"]
-                )
-            centroids = [
-                (
-                    c,
-                    [dims[c][p] for p in range(len(old))]
-                    if c in dims  # empty cluster keeps its old centroid
-                    else old,
-                )
-                for c, old in centroids
-            ]
+            .collect()
+        )
+        dims: dict[int, dict[int, float]] = {}
+        for r in stats:
+            dims.setdefault(r["__c"], {})[r["__pos"]] = float(
+                r["__s"] / r["__n"]
+            )
+        centroids = [
+            (
+                c,
+                [dims[c][p] for p in range(len(old))]
+                if c in dims  # empty cluster keeps its old centroid
+                else old,
+            )
+            for c, old in centroids
+        ]
 
     # two-step select so the kernel is evaluated once per row
     best = staged.select(
@@ -283,14 +270,20 @@ def pagerank(
     but (unlike double summation) identical on every run.
 
     Per round: one join of the static (src, dst, outdeg) edge frame
-    against the current ranks (Catalyst broadcasts the small rank
-    side; the big edge frame never moves), a partial-aggregated sum
-    per destination, and a lineage-cut ``localCheckpoint``. With
+    against the current ranks, and one aggregate that sums each node's
+    in-contributions, then a lineage-cut ``localCheckpoint``. The rank
+    frame has exactly one row per node, and the node count is known,
+    so it is broadcast whenever it fits the session's broadcast
+    threshold (``_broadcast_if_fits``): the big edge frame never moves,
+    and the aggregate over the contributions plus one zero row per
+    node is the round's only shuffle. With
     ``handle_dangling`` the mass of nodes without out-edges is
     redistributed uniformly (one extra 1-row aggregate per round);
     pass ``False`` for graphs where every node has an out-edge (e.g.
     bidirectional edge lists) to skip that job AND derive the node
-    set from sources only (halves the node-dedup shuffle).
+    set from sources only (halves the node-dedup shuffle). The node
+    set is then the sources, and edges into a node without out-edges
+    are dropped once at setup, so such a node gets no rank row.
     ``assume_distinct`` skips the defensive edge dedup for callers
     whose edge list is already distinct.
 
@@ -308,59 +301,71 @@ def pagerank(
     # of the query) executed once PER consumer; measured ~4 full
     # recomputations inside the setup at sf0.1.
     e = e.localCheckpoint()
-    outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
-    e2 = e.join(outdeg, "s").localCheckpoint()
+    outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od")).localCheckpoint()
     # handle_dangling=False asserts every node has an out-edge, so the
     # node set is exactly outdeg's key column — already distinct by
     # construction, no dedup shuffle at all (r11; previously a
     # distinct over the full source column).
-    node_src = (
+    nodes = (
         outdeg.select(F.col("s").alias("id"))
         if not handle_dangling
         else e.select(F.col("s").alias("id"))
         .unionByName(e.select(F.col("d").alias("id")))
         .distinct()
+        .localCheckpoint()
     )
-    with _shuffle_sized_to(edges.sparkSession, e2.count()):
-        nodes = node_src.localCheckpoint()
-        n = nodes.count()
-        if n == 0:
-            raise ValueError("cannot run pagerank on an empty edge list")
-        base = ((100 - damping) * SCALE) // (100 * n)
-        ranks = nodes.withColumn("r", F.lit(SCALE // n).cast("long"))
+    n = nodes.count()
+    if n == 0:
+        raise ValueError("cannot run pagerank on an empty edge list")
+    od = _broadcast_if_fits(outdeg, n)  # at most one row per node
+    e2 = e.join(od, "s")
+    if not handle_dangling:
+        # every destination must be a node, so each round's sum
+        # yields exactly the node set's rows
+        nd = _broadcast_if_fits(nodes, n)
+        e2 = e2.join(nd, e2.d == nd.id, "left_semi")
+    e2 = e2.localCheckpoint()
+    base = ((100 - damping) * SCALE) // (100 * n)
+    ranks = nodes.withColumn("r", F.lit(SCALE // n).cast("long"))
+    # one zero contribution per node: a node without in-edges keeps
+    # its row (rank ``base``) in the grouped sum
+    zero = nodes.select("id", F.lit(0).cast("long").alias("c"))
 
-        for _ in range(n_iter):
-            if handle_dangling:
-                dang = (
-                    ranks.join(outdeg, ranks.id == outdeg.s, "left_anti")
-                    .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long"))
-                    .collect()[0][0]
-                )
-            else:
-                dang = 0
-            contrib = e2.join(ranks, e2.s == ranks.id).select(
-                F.col("d").alias("id"), F.expr("r div od").alias("c")
+    for _ in range(n_iter):
+        if handle_dangling:
+            dang = (
+                ranks.join(od, ranks.id == od.s, "left_anti")
+                .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long"))
+                .collect()[0][0]
             )
-            in_sum = contrib.groupBy("id").agg(F.sum("c").alias("s_in"))
-            ranks = nodes.join(in_sum, "id", "left").select(
+        else:
+            dang = 0
+        rk = _broadcast_if_fits(ranks, n)
+        contrib = e2.join(rk, e2.s == rk.id).select(
+            F.col("d").alias("id"), F.expr("r div od").alias("c")
+        )
+        ranks = (
+            contrib.unionByName(zero)
+            .groupBy("id")
+            .agg(F.sum("c").alias("s_in"))
+            .select(
                 "id",
                 F.expr(
-                    f"{base}L + (({damping}L * (coalesce(s_in, 0L)"
-                    f" + {dang // n}L)) div 100)"
+                    f"{base}L + (({damping}L * (s_in + {dang // n}L)) div 100)"
                 ).alias("r"),
             )
-            # Lineage policy (r12, reverting r11's lazy 8-round
-            # chaining on MEASUREMENT): cut per round. The r11 chain
-            # (one lazy plan over all rounds) was guide-conformant on
-            # paper but measured SLOWER in every run — q_pagerank
-            # 5.28 s chained vs 3.63 s eager in the same-session A/B
-            # (min of 3, this machine; VERDICT r11 flagged the same
-            # regression across three independent runs). With eager
-            # per-round checkpoints each round's rank side carries
-            # accurate materialized stats, so every round's join
-            # plans broadcast immediately instead of making AQE
-            # re-derive the whole multi-round pipeline's stages.
-            ranks = ranks.localCheckpoint()
+        )
+        # Lineage policy (r12, reverting r11's lazy 8-round
+        # chaining on MEASUREMENT): cut per round. The r11 chain
+        # (one lazy plan over all rounds) was guide-conformant on
+        # paper but measured SLOWER in every run — q_pagerank
+        # 5.28 s chained vs 3.63 s eager in the same-session A/B
+        # (min of 3, this machine; VERDICT r11 flagged the same
+        # regression across three independent runs). A checkpoint
+        # keeps Catalyst's pre-execution estimate, though, so the
+        # next round's join is broadcast from the exact node count,
+        # not from these statistics.
+        ranks = ranks.localCheckpoint()
     return ranks.select(
         "id", round_duck(F.col("r").cast("double") / SCALE, 6).alias("rank")
     )
@@ -380,8 +385,10 @@ def coreness(
     repeatedly replace each node's value with the H-index of its
     neighbors' values; the fixpoint is exactly the core number. Unlike
     sequential peeling (inherently serial: one minimum-degree node at
-    a time), every round here is two shuffles — neighbor-value join +
-    per-node H-index — and all nodes update in parallel; values are
+    a time), every round here is one shuffle of the edge frame — the
+    per-node H-index window — with the node-sized state and H-index
+    broadcast into the round's two joins while they fit
+    (``_broadcast_if_fits``), and all nodes update in parallel; values are
     monotone non-increasing integers, so convergence is a changed==0
     count and the result is deterministic under any partitioning
     (golden-snapshot safe; no floating point anywhere).
@@ -414,55 +421,52 @@ def coreness(
     from pyspark.sql import Window
 
     changed = -1  # sentinel for max_iter == 0 (warning path below)
-    with _shuffle_sized_to(edges.sparkSession, und.count()):
-        deg = und.groupBy(F.col("a").alias("id")).agg(
-            F.count(F.lit(1)).alias("h")
+    deg = und.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("h"))
+    state = deg.localCheckpoint()
+    n = state.count()
+    degrees = state.select("id", F.col("h").alias("degree"))
+
+    w = Window.partitionBy("a").orderBy(F.desc("nh"), "b")
+
+    def step(st: DataFrame) -> DataFrame:
+        sb = _broadcast_if_fits(st, n)
+        nbr = und.join(sb, und.b == sb.id).select("a", "b", F.col("h").alias("nh"))
+        hindex = (
+            nbr.withColumn("rn", F.row_number().over(w))
+            .groupBy(F.col("a").alias("id"))
+            .agg(
+                F.coalesce(
+                    F.max(F.when(F.col("nh") >= F.col("rn"), F.col("rn"))),
+                    F.lit(0),
+                ).alias("h_new")
+            )
         )
-        state = deg.localCheckpoint()
-        degrees = state.select("id", F.col("h").alias("degree"))
+        return st.join(_broadcast_if_fits(hindex, n), "id").select(
+            "id",
+            F.coalesce("__prev", F.col("h")).alias("__prev"),
+            F.least("h", "h_new").alias("h"),
+        )
 
-        w = Window.partitionBy("a").orderBy(F.desc("nh"), "b")
-
-        def step(st: DataFrame) -> DataFrame:
-            nbr = und.join(st, und.b == st.id).select(
-                "a", "b", F.col("h").alias("nh")
-            )
-            hindex = (
-                nbr.withColumn("rn", F.row_number().over(w))
-                .groupBy(F.col("a").alias("id"))
-                .agg(
-                    F.coalesce(
-                        F.max(F.when(F.col("nh") >= F.col("rn"), F.col("rn"))),
-                        F.lit(0),
-                    ).alias("h_new")
-                )
-            )
-            return st.join(hindex, "id").select(
-                "id",
-                F.coalesce("__prev", F.col("h")).alias("__prev"),
-                F.least("h", "h_new").alias("h"),
-            )
-
-        # r12 (guide §1.2/§2.4 — fewer driver round-trips dominate at
-        # small per-round volume): run TWO rounds per materialization/
-        # convergence probe instead of one. The iteration is monotone
-        # and stationary at the fixpoint, so probing every other round
-        # at worst runs one extra (no-op) round — output identical —
-        # while halving the per-round fixed cost (checkpoint job +
-        # count job) that dominates when rounds are tiny. Same-session
-        # A/B (q_kcore, min of 3): 4.94 s per-round probes -> 4.41 s.
-        it = 0
-        while it < max_iter:
-            block = min(2, max_iter - it)
-            stepped = state.withColumn("__prev", F.lit(None).cast("long"))
-            for _ in range(block):
-                stepped = step(stepped)
-            stepped = stepped.localCheckpoint()
-            it += block
-            changed = stepped.filter(F.col("h") != F.col("__prev")).count()
-            state = stepped.drop("__prev")
-            if changed == 0:
-                break
+    # r12 (guide §1.2/§2.4 — fewer driver round-trips dominate at
+    # small per-round volume): run TWO rounds per materialization/
+    # convergence probe instead of one. The iteration is monotone
+    # and stationary at the fixpoint, so probing every other round
+    # at worst runs one extra (no-op) round — output identical —
+    # while halving the per-round fixed cost (checkpoint job +
+    # count job) that dominates when rounds are tiny. Same-session
+    # A/B (q_kcore, min of 3): 4.94 s per-round probes -> 4.41 s.
+    it = 0
+    while it < max_iter:
+        block = min(2, max_iter - it)
+        stepped = state.withColumn("__prev", F.lit(None).cast("long"))
+        for _ in range(block):
+            stepped = step(stepped)
+        stepped = stepped.localCheckpoint()
+        it += block
+        changed = stepped.filter(F.col("h") != F.col("__prev")).count()
+        state = stepped.drop("__prev")
+        if changed == 0:
+            break
     if changed != 0:
         # The h-index sequence is a monotone non-increasing upper
         # bound on the true core number at every round, so a
@@ -482,7 +486,7 @@ def coreness(
             RuntimeWarning,
             stacklevel=2,
         )
-    return degrees.join(state, "id").select(
+    return degrees.join(_broadcast_if_fits(state, n), "id").select(
         F.col("id").alias("node"),
         "degree",
         F.col("h").cast("long").alias("core"),
@@ -507,38 +511,25 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     Returns (node, degree, tri, lcc): triangles through the node and
     2*tri / (deg*(deg-1)) rounded to 4 dp (0.0 for degree-1 nodes).
 
-    r12 (guide §2.2/§1.2): the whole computation runs under a shuffle
-    sizing derived from the edge count — the wedge stage's work is
-    bounded by O(m^1.5) (the orientation's arboricity bound), so
-    partitions are sized to that, never above the session setting (a
-    100 TB graph keeps the cluster's own sizing; locally this removes
-    the ~30 near-empty tasks per exchange that dominated wall clock —
-    measured 3.24 s -> 1.75 s interleaved min-of-3 at sf0.1). The
-    result is eagerly staged (persist + count, pure-SQL plan) so the
-    sized setting is in force when the shuffles actually run.
+    The degree table is counted once, and both its joins onto the edge
+    list and the final per-node join broadcast the node-sized side
+    while it fits (``_broadcast_if_fits``). Staging uses ``persist``,
+    so the returned plan stays pure SQL.
     """
     from flink_framework_spark.operators.dedup import _staged
 
     e = _staged(edges.select(F.col("u").cast("long"), F.col("v").cast("long")))
-    m = e.count()
-    ctx = _shuffle_sized_to(edges.sparkSession, int(m**1.5) + 1)
-    with ctx:
-        result = _staged(_triangle_counts_body(e))
-        result.count()
-    return result
-
-
-def _triangle_counts_body(e: DataFrame) -> DataFrame:
-    from flink_framework_spark.operators.dedup import _staged
     deg = _staged(
         e.select(F.col("u").alias("n"))
         .unionAll(e.select(F.col("v").alias("n")))
         .groupBy("n")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
+    n = deg.count()
+    db = _broadcast_if_fits(deg, n)
     ke = (
-        e.join(deg.select(F.col("n").alias("u"), F.col("deg").alias("du")), "u")
-        .join(deg.select(F.col("n").alias("v"), F.col("deg").alias("dv")), "v")
+        e.join(db.select(F.col("n").alias("u"), F.col("deg").alias("du")), "u")
+        .join(db.select(F.col("n").alias("v"), F.col("deg").alias("dv")), "v")
     )
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
@@ -572,7 +563,7 @@ def _triangle_counts_body(e: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tri"))
     )
     return (
-        deg.join(per_node, "n", "left")
+        deg.join(_broadcast_if_fits(per_node, n), "n", "left")
         .select(
             F.col("n").alias("node"),
             F.col("deg").alias("degree"),

@@ -181,31 +181,6 @@ def test_await_drain_tolerates_slow_progress(spark, tmp_path):
     assert out.count() == 8
 
 
-def test_shuffle_sized_to_restores_conf_on_error(spark):
-    """The iterative loops' shuffle-sizing context must restore the
-    session conf on every exit path — a leaked tiny setting would
-    silently degrade every later query in the session."""
-    import pytest
-
-    from flink_framework_spark.operators.iterative import _shuffle_sized_to
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with _shuffle_sized_to(spark, 10) as p:
-        assert p == 1
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-    with pytest.raises(RuntimeError):
-        with _shuffle_sized_to(spark, 10):
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-    # never above the session setting, even for huge inputs
-    with _shuffle_sized_to(spark, 10**12) as p:
-        assert p == int(before)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 # ------------------------------------------- round-4 advice regressions
 
 
