@@ -4,21 +4,26 @@ driver-coordinated loop of declarative steps with a convergence check,
 lineage cut per round (``localCheckpoint``) so plans don't grow
 unboundedly — the standard Pregel-lite shape on Spark.
 
-Every per-round join pairs the static edge frame with a node-sized
-frame (ranks, labels, h-index state). A checkpointed frame keeps
+The graph loops shuffle their edge frame once: it is hash-partitioned
+by the node each round aggregates on, and persisted (a persisted frame
+keeps its partitioning, a checkpoint does not). Every per-round join
+of that frame with a node-sized frame (ranks, labels, h-index state)
+would still plan as a sort-merge join: a checkpointed frame keeps
 Catalyst's pre-execution size estimate, which for these loops is
-terabytes, so the joins would plan as sort-merge joins and shuffle the
-edge frame every round. Each loop therefore counts its node set once
-and sizes its node-sized join sides from that exact count
-(``_broadcast_if_fits``): while they fit the session's broadcast
-threshold they are broadcast and the edge frame never moves.
+terabytes, and AQE turns the join into a broadcast only after both
+sides have been shuffled. Each loop therefore counts its node set once
+and broadcasts the node-sized side while that exact count fits the
+session's broadcast threshold (``_broadcast_if_fits``). A round then
+runs no shuffle at all: the broadcast join keeps the edge frame's
+partitioning, and the aggregate by node reads it in place. The few
+joins of two node-sized frames are left to AQE.
 
 ``connected_components``: min-label propagation over an undirected
-edge list. Per round: the edges joined to the broadcast labels, one
-aggregation to the neighbour minimum, and a join of the labels with
-the broadcast minima; rounds ≤ graph diameter. At 100 TB-scale graphs
-one adds large-star/small-star optimizations, but the loop skeleton
-is the same.
+edge list with a self pair per node. Per round: the edges joined to
+the broadcast labels and one minimum per node; the labels have
+converged when their sum stops falling; rounds ≤ graph diameter. At
+100 TB-scale graphs one adds large-star/small-star optimizations, but
+the loop skeleton is the same.
 """
 
 from __future__ import annotations
@@ -31,14 +36,15 @@ from flink_framework_spark.functions.helpers import round_duck
 
 def _broadcast_if_fits(df: DataFrame, rows: int) -> DataFrame:
     """``F.broadcast(df)`` when ``rows`` rows of ``df`` fit the session's
-    ``spark.sql.autoBroadcastJoinThreshold``, each row sized the way
-    Catalyst sizes one (8 bytes plus each field's default size); ``df``
-    unchanged otherwise, and always when the threshold is 0 or less.
+    ``spark.sql.autoBroadcastJoinThreshold``, each row sized at 8 bytes
+    plus each field's default size (a string field counts 20 bytes,
+    whatever its length); ``df`` unchanged otherwise, and always when
+    the threshold is 0 or less.
 
-    ``rows`` is an exact count (or a bound) the caller already has, so
-    the hint is the choice Catalyst itself would make from true
-    statistics: a graph too large to broadcast keeps the sort-merge
-    plan."""
+    ``rows`` is an exact count (or a bound) the caller already has. The
+    rule sizes this side only: callers apply it where the other side
+    is the edge frame, which holds at least as many rows of the same
+    width. A graph too large to broadcast keeps the sort-merge plan."""
     conf = df.sparkSession._jsparkSession.sessionState().conf()
     threshold = conf.autoBroadcastJoinThreshold()
     width = 8 + df._jdf.schema().defaultSize()
@@ -63,32 +69,46 @@ def connected_components(
     whose only edges are self-loops (singleton components). Nodes with
     no edges at all cannot be discovered from the edge list; pass the
     optional ``vertices`` DataFrame to label isolated nodes as
-    singleton components too.
+    singleton components too. They are attached after the loop, so the
+    per-round label frame holds edge endpoints only.
     """
     from flink_framework_spark.operators.dedup import _staged
 
-    # the union references `edges` in BOTH branches — without staging,
-    # Spark executes the caller's whole upstream pipeline twice (for
-    # dedup_clusters that is the full MinHash pass; measured ~2x at
-    # the 30x tile). Same branch-duplication rule as SCALING.md.
-    e = _staged(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
-    und = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # seed labels from BOTH endpoints before dropping self-loops, so
-    # self-loop-only nodes still appear (as singletons)
-    seeds = und.select(F.col("a").alias("id"))
-    if vertices is not None:
-        seeds = seeds.unionByName(vertices.select(F.col(vertex_id).alias("id")))
-    und = und.filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
+    # Both orientations plus a self pair per endpoint via ONE explode:
+    # a two-branch union would run the caller's upstream (for
+    # dedup_clusters the full MinHash pass) once per branch. With the
+    # self pairs a node's next label is one minimum over itself and its
+    # neighbours, and a node whose only edges are self-loops is still
+    # labeled (a singleton).
+    a, b = F.col(src), F.col(dst)
+    und = _staged(
+        edges.select(
+            F.explode(
+                F.array(
+                    *(
+                        F.struct(x.alias("a"), y.alias("b"))
+                        for x, y in ((a, b), (b, a), (a, a), (b, b))
+                    )
+                )
+            ).alias("__e")
+        )
+        .select("__e.a", "__e.b")
+        # the edge frame's one shuffle: the dedup, the seed labels and
+        # every round's minimum by ``a`` read it in this partitioning
+        # (a persisted frame keeps it, a checkpoint would not)
+        .repartition("a")
+        .distinct()
+    )
     labels = (
-        seeds.distinct()
+        und.select(F.col("a").alias("id"))
+        .distinct()
         .withColumn("component", F.col("id"))
         .localCheckpoint()
     )
-    # both consumers of the staged edge frame (und, labels) are
-    # checkpointed now — drop the cache so repeated calls in a
-    # long-lived session don't accumulate dead storage
-    e.unpersist()
-    n = labels.count()
+    # a label never rises, so the labels are unchanged exactly when
+    # their sum is (decimal: a sum of long ids may overflow a long)
+    total = F.sum(F.col("component").cast("decimal(38,0)"))
+    n, before = labels.agg(F.count(F.lit(1)), total).first()
 
     # NOTE (r12): batching two rounds per probe — the move that
     # helped coreness — was A/B'd here and measured SLOWER (min-of-4
@@ -97,34 +117,29 @@ def connected_components(
     # on near-dup graphs, so block overshoot wastes proportionally
     # more than the probe it saves. Keep per-round probes.
     for _ in range(max_iter):
+        # ``und`` holds every label's node at least once (its self pair)
         lab = _broadcast_if_fits(labels, n)
-        neighbor_min = (
+        labels = (
             und.join(lab, und.b == lab.id)
             .groupBy(F.col("a").alias("id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        # Carry the previous label alongside the new one so the
-        # convergence check is a narrow filter-count over the already
-        # checkpointed rows (1 tiny job) instead of a second shuffle
-        # join against the old labels (which doubled per-round cost).
-        stepped = (
-            labels.join(_broadcast_if_fits(neighbor_min, n), "id", "left")
-            .select(
-                "id",
-                F.col("component").alias("__prev"),
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_min", F.col("component")),
-                ).alias("component"),
-            )
+            .agg(F.min("component").alias("component"))
             .localCheckpoint()
         )
-        changed = stepped.filter(
-            F.col("component") != F.col("__prev")
-        ).count()
-        labels = stepped.drop("__prev")
-        if changed == 0:
-            return labels
+        after = labels.agg(total).first()[0]
+        if after == before:
+            und.unpersist()
+            if vertices is None:
+                return labels
+            isolated = (
+                vertices.select(F.col(vertex_id).alias("id"))
+                .distinct()
+                .join(labels, "id", "left_anti")
+            )
+            return labels.unionByName(
+                isolated.withColumn("component", F.col("id"))
+            )
+        before = after
+    und.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
     )
@@ -269,14 +284,17 @@ def pagerank(
     per-op bias is ~1e-12, invisible at the 6-decimal output rounding
     but (unlike double summation) identical on every run.
 
-    Per round: one join of the static (src, dst, outdeg) edge frame
-    against the current ranks, and one aggregate that sums each node's
-    in-contributions, then a lineage-cut ``localCheckpoint``. The rank
-    frame has exactly one row per node, and the node count is known,
-    so it is broadcast whenever it fits the session's broadcast
-    threshold (``_broadcast_if_fits``): the big edge frame never moves,
-    and the aggregate over the contributions plus one zero row per
-    node is the round's only shuffle. With
+    The static (src, dst, outdeg) edge frame is built once, with one
+    extra null-source row per node, hash-partitioned by destination and
+    persisted. Per round: a left join of that frame with the current
+    ranks, one aggregate that sums each destination's contributions
+    (the null-source row joins no rank and contributes 0, so a node
+    without in-edges keeps its row), then a lineage-cut
+    ``localCheckpoint``. The rank frame has exactly one row per node,
+    and the node count is known, so it is broadcast whenever it fits
+    the session's broadcast threshold (``_broadcast_if_fits``): the
+    edge frame never moves, and the aggregate reads it in its
+    destination partitioning, so a round runs no shuffle at all. With
     ``handle_dangling`` the mass of nodes without out-edges is
     redistributed uniformly (one extra 1-row aggregate per round);
     pass ``False`` for graphs where every node has an out-edge (e.g.
@@ -290,6 +308,8 @@ def pagerank(
     Returns (id, rank) with rank rounded to 6 decimals; ranks sum to
     ~1 over the node set.
     """
+    from flink_framework_spark.operators.dedup import _staged
+
     SCALE = 10**12
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     if not assume_distinct:  # callers that pre-deduped skip a full shuffle
@@ -324,30 +344,35 @@ def pagerank(
         # yields exactly the node set's rows
         nd = _broadcast_if_fits(nodes, n)
         e2 = e2.join(nd, e2.d == nd.id, "left_semi")
-    e2 = e2.localCheckpoint()
+    # the one shuffle of the edge frame: a persisted frame keeps its
+    # hash partitioning (a checkpoint would not), so each round's sum
+    # by destination needs no exchange
+    e2 = _staged(
+        e2.unionByName(
+            nodes.select(
+                F.lit(None).cast(e.schema["s"].dataType).alias("s"),
+                F.col("id").alias("d"),
+                F.lit(1).cast("long").alias("od"),
+            )
+        ).repartition("d")
+    )
     base = ((100 - damping) * SCALE) // (100 * n)
     ranks = nodes.withColumn("r", F.lit(SCALE // n).cast("long"))
-    # one zero contribution per node: a node without in-edges keeps
-    # its row (rank ``base``) in the grouped sum
-    zero = nodes.select("id", F.lit(0).cast("long").alias("c"))
 
     for _ in range(n_iter):
         if handle_dangling:
             dang = (
-                ranks.join(od, ranks.id == od.s, "left_anti")
+                ranks.join(outdeg, ranks.id == outdeg.s, "left_anti")
                 .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long"))
                 .collect()[0][0]
             )
         else:
             dang = 0
         rk = _broadcast_if_fits(ranks, n)
-        contrib = e2.join(rk, e2.s == rk.id).select(
-            F.col("d").alias("id"), F.expr("r div od").alias("c")
-        )
         ranks = (
-            contrib.unionByName(zero)
-            .groupBy("id")
-            .agg(F.sum("c").alias("s_in"))
+            e2.join(rk, e2.s == rk.id, "left")
+            .groupBy(F.col("d").alias("id"))
+            .agg(F.sum(F.coalesce(F.expr("r div od"), F.lit(0))).alias("s_in"))
             .select(
                 "id",
                 F.expr(
@@ -366,6 +391,7 @@ def pagerank(
         # next round's join is broadcast from the exact node count,
         # not from these statistics.
         ranks = ranks.localCheckpoint()
+    e2.unpersist()
     return ranks.select(
         "id", round_duck(F.col("r").cast("double") / SCALE, 6).alias("rank")
     )
@@ -385,13 +411,14 @@ def coreness(
     repeatedly replace each node's value with the H-index of its
     neighbors' values; the fixpoint is exactly the core number. Unlike
     sequential peeling (inherently serial: one minimum-degree node at
-    a time), every round here is one shuffle of the edge frame — the
-    per-node H-index window — with the node-sized state and H-index
-    broadcast into the round's two joins while they fit
-    (``_broadcast_if_fits``), and all nodes update in parallel; values are
-    monotone non-increasing integers, so convergence is a changed==0
-    count and the result is deterministic under any partitioning
-    (golden-snapshot safe; no floating point anywhere).
+    a time), all nodes update in parallel. The edge frame is shuffled
+    once, by node, and persisted; a round then runs no shuffle: the
+    node-sized state is broadcast into its join with the edges while it
+    fits (``_broadcast_if_fits``), and the H-index window and aggregate
+    read the edges where they are. Values are monotone non-increasing
+    integers, so convergence is an unchanged sum and the result is
+    deterministic under any partitioning (golden-snapshot safe; no
+    floating point anywhere).
 
     The per-node H-index is computed without collecting neighbor
     lists: rank neighbor values descending per node (window), then
@@ -401,10 +428,14 @@ def coreness(
     ``edges``: undirected distinct pairs (any orientation). Returns
     ``(node, degree, core)``.
     """
+    from pyspark.sql import Window
+
+    from flink_framework_spark.operators.dedup import _staged
+
     # both orientations via ONE explode — a two-branch union would
     # re-execute the caller's upstream (for q_kcore: the supplier
     # co-occurrence self-join) once per branch (r11, guide §2.4)
-    und = (
+    und = _staged(
         edges.select(
             F.explode(
                 F.array(
@@ -415,36 +446,41 @@ def coreness(
         )
         .select("__e.a", "__e.b")
         .filter(F.col("a") != F.col("b"))
+        # the edge frame's one shuffle: the dedup, the degrees and every
+        # round's window and H-index by ``a`` read it in this
+        # partitioning (a persisted frame keeps it, a checkpoint would
+        # not)
+        .repartition("a")
         .distinct()
-        .localCheckpoint()
     )
-    from pyspark.sql import Window
-
     changed = -1  # sentinel for max_iter == 0 (warning path below)
     deg = und.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("h"))
     state = deg.localCheckpoint()
-    n = state.count()
+    # every value is non-increasing, so the state is unchanged exactly
+    # when its sum is
+    total = F.coalesce(F.sum("h"), F.lit(0))
+    n, before = state.agg(F.count(F.lit(1)), total).first()
     degrees = state.select("id", F.col("h").alias("degree"))
 
     w = Window.partitionBy("a").orderBy(F.desc("nh"), "b")
 
     def step(st: DataFrame) -> DataFrame:
+        # Every node has a neighbour, so the H-index rows are the node
+        # set, and the H-index of values that never rose never rises:
+        # it is the node's next value, with no join back to ``st``.
         sb = _broadcast_if_fits(st, n)
         nbr = und.join(sb, und.b == sb.id).select("a", "b", F.col("h").alias("nh"))
-        hindex = (
+        return (
             nbr.withColumn("rn", F.row_number().over(w))
             .groupBy(F.col("a").alias("id"))
             .agg(
                 F.coalesce(
                     F.max(F.when(F.col("nh") >= F.col("rn"), F.col("rn"))),
                     F.lit(0),
-                ).alias("h_new")
+                )
+                .cast("long")
+                .alias("h")
             )
-        )
-        return st.join(_broadcast_if_fits(hindex, n), "id").select(
-            "id",
-            F.coalesce("__prev", F.col("h")).alias("__prev"),
-            F.least("h", "h_new").alias("h"),
         )
 
     # r12 (guide §1.2/§2.4 — fewer driver round-trips dominate at
@@ -458,15 +494,15 @@ def coreness(
     it = 0
     while it < max_iter:
         block = min(2, max_iter - it)
-        stepped = state.withColumn("__prev", F.lit(None).cast("long"))
         for _ in range(block):
-            stepped = step(stepped)
-        stepped = stepped.localCheckpoint()
+            state = step(state)
+        state = state.localCheckpoint()
         it += block
-        changed = stepped.filter(F.col("h") != F.col("__prev")).count()
-        state = stepped.drop("__prev")
+        after = state.agg(total).first()[0]
+        changed, before = before - after, after
         if changed == 0:
             break
+    und.unpersist()
     if changed != 0:
         # The h-index sequence is a monotone non-increasing upper
         # bound on the true core number at every round, so a
@@ -481,12 +517,12 @@ def coreness(
 
         warnings.warn(
             f"coreness: h-index iteration still changing after "
-            f"{max_iter} rounds ({changed} nodes); returning the "
-            "monotone upper-bound state",
+            f"{max_iter} rounds (values fell by {changed} in the last "
+            "probe); returning the monotone upper-bound state",
             RuntimeWarning,
             stacklevel=2,
         )
-    return degrees.join(_broadcast_if_fits(state, n), "id").select(
+    return degrees.join(state, "id").select(
         F.col("id").alias("node"),
         "degree",
         F.col("h").cast("long").alias("core"),
@@ -512,9 +548,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     2*tri / (deg*(deg-1)) rounded to 4 dp (0.0 for degree-1 nodes).
 
     The degree table is counted once, and both its joins onto the edge
-    list and the final per-node join broadcast the node-sized side
-    while it fits (``_broadcast_if_fits``). Staging uses ``persist``,
-    so the returned plan stays pure SQL.
+    list broadcast it while it fits (``_broadcast_if_fits``). Staging
+    uses ``persist``, so the returned plan stays pure SQL.
     """
     from flink_framework_spark.operators.dedup import _staged
 
@@ -563,7 +598,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tri"))
     )
     return (
-        deg.join(_broadcast_if_fits(per_node, n), "n", "left")
+        deg.join(per_node, "n", "left")
         .select(
             F.col("n").alias("node"),
             F.col("deg").alias("degree"),

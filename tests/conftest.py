@@ -103,6 +103,29 @@ def sf_dir():
 
 
 @pytest.fixture()
+def group_jobs(spark):
+    """``group_jobs(action)``: ids of the Spark jobs ``action`` runs,
+    counted under a job group of their own through ``statusTracker``."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(action) -> list[int]:
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture()
 def spark_session_holder(spark):
     """Ensures the shared session exists before hypothesis @given
     bodies run (they can't take fixtures directly)."""

@@ -7,7 +7,6 @@ large graph keeps must return the same rows."""
 from __future__ import annotations
 
 import random
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,37 +21,23 @@ from flink_framework_spark.operators.iterative import (
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
-# q_pagerank's build on the sf0.001 fixture: 9 SQL executions (edge,
-# out-degree and edge-with-degree checkpoints, the node count, five
-# rounds) in 27 jobs, 25 once the session has built it before; with
-# every node-sized join side planned as a sort-merge join it ran 50
-PAGERANK_BUILD_JOBS = 27
+# q_pagerank's build on the sf0.001 fixture: 8 SQL executions (edge and
+# out-degree checkpoints, the node count, five rounds, the first of
+# which also stages the partitioned edge frame) in 23 jobs, 21 once the
+# session has built it before; with every node-sized join side planned
+# as a sort-merge join and a shuffle per round it ran 50
+PAGERANK_BUILD_JOBS = 23
 
 
-def _jobs(spark, action) -> int:
-    """Spark jobs run by ``action``."""
-    sc = spark.sparkContext
-    group = f"graph-broadcast-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status store is fed asynchronously by the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_pagerank_build_jobs_pinned(spark, sf_dir):
+def test_pagerank_build_jobs_pinned(spark, sf_dir, group_jobs):
     from flink_framework_spark.registry import all_queries
 
     q = all_queries()["q_pagerank"]
     try:
-        jobs = _jobs(spark, lambda: q.fn(spark, sf_dir))
+        jobs = group_jobs(lambda: q.fn(spark, sf_dir))
     finally:
         spark.catalog.clearCache()
-    assert jobs <= PAGERANK_BUILD_JOBS
+    assert len(jobs) <= PAGERANK_BUILD_JOBS
 
 
 def _with_threshold(spark, value, fn):
@@ -106,11 +91,15 @@ def _rows(df):
         lambda g: connected_components(
             g.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         ),
+        lambda g: connected_components(
+            g.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+            vertices=g.sparkSession.range(70),
+        ),
         lambda g: coreness(g),
         lambda g: triangle_counts(g),
     ],
     ids=["pagerank", "pagerank_no_dangling", "connected_components",
-         "coreness", "triangle_counts"],
+         "connected_components_vertices", "coreness", "triangle_counts"],
 )
 def test_graph_loops_equal_without_broadcast(spark, graph, run):
     _, g = graph

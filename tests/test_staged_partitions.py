@@ -5,8 +5,6 @@ partition (see the ``session`` module docstring)."""
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 
 from flink_framework_spark.operators.dedup import _staged
@@ -15,28 +13,17 @@ from flink_framework_spark.session import configure_session
 CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
-def _stage_tasks(spark, action) -> list[int]:
-    """Tasks run by each stage of the jobs of ``action`` (0 for a
-    skipped stage)."""
-    sc = spark.sparkContext
-    group = f"staged-partitions-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status store is fed asynchronously by the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
+def _stage_tasks(spark, jobs: list[int]) -> list[int]:
+    """Tasks run by each stage of ``jobs`` (0 for a skipped stage)."""
+    tracker = spark.sparkContext.statusTracker()
     return [
         tracker.getStageInfo(stage).numCompletedTasks
-        for job in tracker.getJobIdsForGroup(group)
+        for job in jobs
         for stage in tracker.getJobInfo(job).stageIds
     ]
 
 
-def test_staged_aggregate_is_scanned_in_few_tasks(spark):
+def test_staged_aggregate_is_scanned_in_few_tasks(spark, group_jobs):
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     parallelism = spark.sparkContext.defaultParallelism
     # so a scan of every shuffle partition would break the bound below
@@ -49,7 +36,7 @@ def test_staged_aggregate_is_scanned_in_few_tasks(spark):
     )
     try:
         assert staged.count() == 50
-        tasks = _stage_tasks(spark, staged.collect)
+        tasks = _stage_tasks(spark, group_jobs(staged.collect))
         assert tasks
         assert max(tasks) <= parallelism
         assert sorted((r.k, r.n) for r in staged.collect()) == [

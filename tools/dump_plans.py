@@ -49,16 +49,6 @@ SQL_UPDATE = (
 WRAPPERS = ("InputAdapter", "WholeStageCodegen")
 
 
-def _enable_event_log(log_dir: Path) -> None:
-    """Have the session this process starts write one plain JSON-lines
-    event log into ``log_dir``."""
-    confs = {"enabled": "true", "dir": log_dir.as_uri(), "compress": "false",
-             "rolling.enabled": "false"}
-    args = " ".join(f"--conf spark.eventLog.{k}={v}" for k, v in confs.items())
-    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
-    os.environ["PYSPARK_SUBMIT_ARGS"] = f"{args} {submit}"
-
-
 def _key(node: dict) -> str:
     """A plan subtree (an event's ``sparkPlanInfo``) as one string."""
     return f"{node['simpleString']}({','.join(map(_key, node['children']))})"
@@ -86,6 +76,8 @@ def build_executions(log_dir: Path) -> dict[str, list[dict]]:
     in the event log, with its first and last plan."""
     execs: dict[int, dict] = {}
     for path in sorted(log_dir.iterdir()):
+        if path.name.startswith("."):  # checksum files
+            continue
         with open(path) as f:
             for line in f:
                 ev = json.loads(line)
@@ -136,10 +128,15 @@ def main() -> None:
     out_dir, tag, *names = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
-    log_dir = Path(tempfile.mkdtemp(prefix="dump-plans-events-"))
-    if build:
-        _enable_event_log(log_dir)
     spark = get_spark(app_name="dump-plans")
+    if build:
+        from run import set_event_log
+
+        # a new context writes the event log
+        log_dir = Path(tempfile.mkdtemp(prefix="dump-plans-events-"))
+        set_event_log(spark, log_dir)
+        spark.stop()
+        spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     registry = all_queries()
@@ -164,7 +161,7 @@ def main() -> None:
         for name in set(names) - failed:
             group = f"{name}#build"
             plans[name] = build_report(execs.get(group, []), totals.get(group, {}))
-    shutil.rmtree(log_dir, ignore_errors=True)
+        shutil.rmtree(log_dir, ignore_errors=True)
     for name in names:
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
