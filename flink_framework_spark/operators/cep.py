@@ -22,6 +22,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_framework_spark.staging import release, stage
+
 # A "step type" anywhere in this module is one concrete tag (str), a
 # SET of tags (tuple/list of str) — the Pattern builder's
 # subtype()/hierarchy desugaring (Flink `Pattern.subtype(Class)`,
@@ -654,28 +656,47 @@ def match_combinations(
             )
         )
 
+    def matched(levels: list[DataFrame]) -> DataFrame:
+        out = levels[0]
+        for lv in levels[1:]:
+            out = out.unionByName(lv)
+        out = out.filter(F.col("n_reps") >= n_min)
+        followers = events.filter(_type_pred(type_col, then_step)).select(
+            F.col(key_col).alias("__bk"), F.col(ts_col).alias("__bts")
+        )
+        return out.join(
+            followers,
+            (F.col(key_col) == F.col("__bk"))
+            & (F.col("__bts") > F.col("ts_last"))
+            & (F.col("__bts") <= F.col("ts_first") + horizon),
+            "left_semi",
+        ).select(
+            key_col, "ts_first", "ts_last", "n_reps",
+            "id_first", "id_last", "ids",
+        )
+
     levels = [level]
-    persisted: list[DataFrame] = []
     if n_max is not None:
         for _ in range(1, n_max):
             level = extend(level)
             levels.append(level)
-    else:
-        # unbounded (r12, guide §1.2/§5 — kill the per-level driver
-        # round-trips): the deepest non-empty level is bounded by the
-        # largest number of step events any anchor sees inside its
-        # horizon, which ONE range-frame window pass computes exactly
-        # (RANGE CURRENT ROW .. horizon FOLLOWING counts ties at the
-        # anchor's timestamp too, so it can only OVERCOUNT — a valid
-        # upper bound; levels past the true depth are provably empty
-        # and union nothing). Build that many levels lazily over the
-        # persisted step frame — one probe job + the final action,
-        # instead of r11's persist + isEmpty job PER level. Measured
-        # same-session (q_cep_combinations, min of 3): see
-        # OPTIMIZATION_r12.md. If the bound exceeds level_cap, fall
-        # back to the exact per-level probing loop so the cap error
-        # still fires only on genuinely over-deep corpora.
-        steps = steps.persist()
+        return matched(levels)
+    # unbounded (r12, guide §1.2/§5 — kill the per-level driver
+    # round-trips): the deepest non-empty level is bounded by the
+    # largest number of step events any anchor sees inside its
+    # horizon, which ONE range-frame window pass computes exactly
+    # (RANGE CURRENT ROW .. horizon FOLLOWING counts ties at the
+    # anchor's timestamp too, so it can only OVERCOUNT — a valid
+    # upper bound; levels past the true depth are provably empty
+    # and union nothing). Build that many levels lazily over the
+    # staged step frame — one probe job + the final action,
+    # instead of r11's persist + isEmpty job PER level. Measured
+    # same-session (q_cep_combinations, min of 3): see
+    # OPTIMIZATION_r12.md. If the bound exceeds level_cap, fall
+    # back to the exact per-level probing loop so the cap error
+    # still fires only on genuinely over-deep corpora.
+    steps = stage(steps)
+    try:
         bound = (
             steps.select(
                 F.expr(
@@ -694,59 +715,31 @@ def match_combinations(
                 level = extend(level)
                 levels.append(level)
         else:
-            # exact fallback: probe emptiness per level (the window
-            # bound overcounts timestamp ties, so only this loop may
-            # legitimately raise the cap error)
-            level = level.persist()
-            persisted.append(level)
-            depth = 1
+            # exact fallback: stage each level and probe it for
+            # emptiness (the window bound overcounts timestamp ties, so
+            # only this loop may legitimately raise the cap error); the
+            # last, empty level unions nothing
+            levels[0] = level = stage(level)
             while True:
-                nxt = extend(level).persist()
-                if nxt.isEmpty():
-                    nxt.unpersist()
+                level = stage(extend(level))
+                levels.append(level)
+                if level.isEmpty():
                     break
-                depth += 1
-                if depth > level_cap:
-                    for p in persisted:
-                        p.unpersist()
-                    nxt.unpersist()
-                    steps.unpersist()
+                if len(levels) > level_cap:
                     raise ValueError(
                         f"combination expansion exceeded {level_cap} "
                         "repetitions — a burst of b step events inside "
                         "one horizon yields 2^b matches; tighten within "
                         "or bound with times(m, n)"
                     )
-                persisted.append(nxt)
-                levels.append(nxt)
-                level = nxt
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    out = out.filter(F.col("n_reps") >= n_min)
-    followers = events.filter(_type_pred(type_col, then_step)).select(
-        F.col(key_col).alias("__bk"), F.col(ts_col).alias("__bts")
-    )
-    result = out.join(
-        followers,
-        (F.col(key_col) == F.col("__bk"))
-        & (F.col("__bts") > F.col("ts_last"))
-        & (F.col("__bts") <= F.col("ts_first") + horizon),
-        "left_semi",
-    ).select(
-        key_col, "ts_first", "ts_last", "n_reps",
-        "id_first", "id_last", "ids",
-    )
-    if n_max is None:
         # materialize the (output-sized) final frame once, then drop
-        # the step frame and any per-level caches — repeated calls
-        # must not pin them in executor storage. The single persisted
+        # the step frame and any per-level stages — repeated calls
+        # must not pin them in executor storage. The single staged
         # result is the only cache handed to the caller.
-        result = result.persist()
+        result = stage(matched(levels))
         result.count()
-        for p in persisted:
-            p.unpersist()
-        steps.unpersist()
+    finally:
+        release(steps, *levels)
     return result
 
 

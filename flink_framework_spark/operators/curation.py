@@ -17,7 +17,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_framework_spark.functions.helpers import round_duck
-from flink_framework_spark.operators.text import token_count
+from flink_framework_spark.operators.dedup import tokens
+from flink_framework_spark.operators.text import token_count, words
+from flink_framework_spark.staging import stage
 
 
 def hash_bucket(key: Column, n_buckets: int = 100) -> Column:
@@ -99,7 +101,7 @@ def shard_manifest(
     min/max id) — what a dataloader config consumes and what makes an
     export independently checkable (the whole computation is
     SQL-expressible, so the registered query carries a live oracle)."""
-    toks = F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+    toks = F.size(tokens(F.col(text_col)))
     return (
         assign_shards(df, n_shards, id_col)
         .groupBy("shard")
@@ -153,7 +155,7 @@ def _word_ngram_hashes(text: Column, n: int) -> Column:
     tokens come from a single-space split, so slice identity ==
     joined-string identity, and skipping the string build is ~2× on
     gram-heavy corpora. JVM higher-order expressions throughout."""
-    toks = F.split(F.lower(F.trim(text)), " ")
+    toks = words(text)
     count = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     idx = F.sequence(F.lit(0), count - 1)
     gram = lambda i: F.xxhash64(F.slice(toks, i + 1, n))  # noqa: E731
@@ -372,7 +374,6 @@ def curation_pipeline(
     staged (persisted) intermediates, so the chain executes once.
     """
     from flink_framework_spark.operators.dedup import (
-        _staged,
         ngram_near_dup_pairs,
         normalize_text,
     )
@@ -382,11 +383,11 @@ def curation_pipeline(
     corpus = docs.filter(did % bench_mod != 0)
     bench = docs.filter(did % bench_mod == 0)
     q = quality_score(F.col(text_col), F.col("n_chars"))["quality"]
-    base = _staged(
+    base = stage(
         corpus.select(
             id_col,
             text_col,
-            F.size(F.split(F.lower(F.trim(F.col(text_col))), " "))
+            F.size(words(F.col(text_col)))
             .cast("long")
             .alias("__ntok"),
             q.alias("__q"),
@@ -397,7 +398,7 @@ def curation_pipeline(
     )
     s_q = base.filter(F.col("__q") >= F.lit(float(quality_min)))
     w = Window.partitionBy("__fp").orderBy(did)
-    s_e = _staged(
+    s_e = stage(
         s_q.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
@@ -408,8 +409,8 @@ def curation_pipeline(
         .select(F.col("doc_b").alias(id_col))
         .distinct()
     )
-    s_n = _staged(s_e.join(near_drop, id_col, "left_anti"))
-    s_d = _staged(decontaminate(s_n, bench, id_col=id_col, text_col=text_col))
+    s_n = stage(s_e.join(near_drop, id_col, "left_anti"))
+    s_d = stage(decontaminate(s_n, bench, id_col=id_col, text_col=text_col))
     splits = (
         assign_split(s_d, id_col)
         .groupBy("split")
@@ -472,21 +473,19 @@ def dsir_importance(
     key — NO global single-partition window anywhere. Output one row
     per doc: (doc_id, logratio r4, score r6, selected 0/1).
     """
-    from flink_framework_spark.operators.dedup import _spread, _staged
+    from flink_framework_spark.operators.dedup import _spread
 
     toks = _spread(df).select(
         F.col(id_col).alias("doc_id"),
         target_pred.alias("__tgt"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("__tok"),
+        F.explode(tokens(F.col(text_col))).alias("__tok"),
     )
     bk = toks.select(
         "doc_id", "__tgt", hash_bucket(F.col("__tok"), n_buckets).alias("__bk")
     )
     # both models in ONE aggregation pass; the explode feeds the
     # bucket counts and the per-doc sum, so stage it
-    bk = _staged(bk)
+    bk = stage(bk)
     cnt = bk.groupBy("__bk").agg(
         F.count(F.lit(1)).alias("__cr"),
         F.count_if(F.col("__tgt")).alias("__ct"),
@@ -511,7 +510,7 @@ def dsir_importance(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("long")
     u = (h + F.lit(1.0)) / F.lit(float(16**8 + 1))  # (0, 1]
-    scored = _staged(
+    scored = stage(
         doc.select(
             "doc_id",
             round_duck("__logratio", 4).alias("logratio"),

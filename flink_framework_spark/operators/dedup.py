@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_framework_spark.functions.helpers import round_duck
+from flink_framework_spark.staging import stage
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -31,21 +32,6 @@ def _spread(df: DataFrame) -> DataFrame:
     core; at warehouse scale the input already has enough splits and
     this is a cheap round-robin of compact rows."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def _staged(df: DataFrame) -> DataFrame:
-    """Persist a stage that multiple plan branches consume (the
-    self-joins below reference their input twice — without this, the
-    whole upstream pipeline, including the signature UDF, executes
-    once PER BRANCH). ``persist`` keeps the plan pure SQL (branches
-    read an InMemoryTableScan; a localCheckpoint would insert an RDD
-    scan, which the plan guard forbids). The cached stage is compact —
-    ids + fixed-width hash arrays, not document text. A production
-    deployment materializes the same stage as a signature table in the
-    lake; memory-and-disk cache is the single-job equivalent."""
-    from pyspark import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def portable_hash64(col) -> Column:
@@ -82,7 +68,7 @@ def hashed_shingle_frame(
     corpus runs exactly once per pipeline. Portable (md5-derived, see
     :func:`portable_hash64`) so the oracles recompute it in DuckDB."""
     sh = _shingled(df, id_col, text_col, shingle_n)
-    return _staged(
+    return stage(
         sh.select("__id", F.transform("__sh", portable_hash64).alias("__shh"))
     )
 
@@ -182,14 +168,6 @@ def minhash_signature(hash_col: Column, num_hashes: int = 64) -> Column:
     )
 
 
-def shingle_hashes(shingle_col: Column) -> Column:
-    """One 2^31-bounded base hash per shingle (computed exactly once;
-    permutations derive from it arithmetically)."""
-    return F.transform(
-        shingle_col, lambda s: F.pmod(portable_hash64(s), F.lit(_MINHASH_P))
-    )
-
-
 def minhash_signature_vec(num_hashes: int = 64):
     """Arrow-vectorized twin of ``minhash_signature``: identical
     integer arithmetic ((a*h + b) mod P per permutation, min over
@@ -271,7 +249,7 @@ def _capped_band_pairs(
     # the self-join consumes the banding pipeline in both branches —
     # stage it once (compact: id + band/bucket longs); with a cap the
     # probe below also reads this frame, populating the cache
-    staged = _staged(banded)
+    staged = stage(banded)
     unguarded = (
         staged.select(F.col("__id").alias("__a"), *keys)
         .join(staged.select(F.col("__id").alias("__b"), *keys), keys)
@@ -300,7 +278,7 @@ def _capped_band_pairs(
     # super-buckets, and a bridge chain keeps each one connected. The
     # sizes side aggregates to bucket cardinality, so AQE broadcasts
     # it in the common case.
-    salted = _staged(
+    salted = stage(
         staged.join(sizes, keys).select(
             "__id",
             *keys,
@@ -535,7 +513,7 @@ def min_shingle_frame(
     several of them shares ONE tokenize+shingle+hash pass (the same
     discipline as ``hashed_shingle_frame`` for the signature
     family)."""
-    return _staged(_min_shingle_rep(df, id_col, text_col, shingle_n))
+    return stage(_min_shingle_rep(df, id_col, text_col, shingle_n))
 
 
 def ngram_near_dup_pairs(
@@ -576,7 +554,7 @@ def ngram_near_dup_pairs(
     #     each evaluation must be cheap; per-doc set sizes are also
     #     precomputed (per-vector, not per-pair — same discipline as
     #     the cosine norms in operators.similarity).
-    # _staged (inside min_shingle_frame): the blocking self-join
+    # stage (inside min_shingle_frame): the blocking self-join
     # consumes this in both branches — persist so the shingle pipeline
     # runs once, not per branch
     sh = (
@@ -749,9 +727,9 @@ def simhash_near_dup_pairs(
     # and pushes it below the _spread repartition, re-running it
     # single-threaded in the scan task (measured 3.4s at sf0.1; see
     # the same note in ngram_near_dup_pairs)
-    # _staged: the block self-join consumes the fingerprints in both
+    # stage: the block self-join consumes the fingerprints in both
     # branches — persist so the UDF runs once, not per branch
-    sh = _staged(
+    sh = stage(
         hashes.select(
             "__id",
             F.coalesce(simhash64_vec()(F.col("__shh")), F.lit(0)).alias("__sh"),
@@ -926,14 +904,14 @@ def simhash128_near_dup_pairs(
         if hashed is not None
         else hashed_shingle_frame(df, id_col, text_col, shingle_n)
     )
-    # coalesce + _staged: same two hazards as simhash_near_dup_pairs
+    # coalesce + stage: same two hazards as simhash_near_dup_pairs
     # (Catalyst can't prove UDF outputs non-null -> inferred isnotnull
     # re-inlines the pipeline below the repartition; the self-join
     # consumes the fingerprint in both branches)
     # the UDF output is persisted BEFORE the lo/hi projection so the
     # fingerprint pass runs exactly once (two element_at references to
     # an inline UDF column would re-evaluate it after CollapseProject)
-    fp = _staged(
+    fp = stage(
         hashes.select(
             "__id", simhash128_vec()(F.col("__shh")).alias("__fp")
         )
@@ -1056,7 +1034,7 @@ def duplicated_spans(
     )
     # the semi-join consumes grams on one side and its aggregate on
     # the other — stage so the tokenize+explode pass runs once
-    grams = _staged(grams)
+    grams = stage(grams)
     hot = (
         grams.groupBy("__k")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -1111,7 +1089,7 @@ def boilerplate_fraction(
     once."""
     # one tokenize pass: the staged token projection feeds BOTH the
     # spans pipeline and the per-doc token counts
-    toks = _staged(
+    toks = stage(
         _spread(df).select(
             F.col(id_col).alias("doc_id"),
             tokens(F.col(text_col)).alias("__toks"),
@@ -1222,7 +1200,7 @@ def edit_distance_pairs(
             F.substr(s, i + 1, F.length(s)),
         ),
     )
-    keyed = _staged(
+    keyed = stage(
         _spread(
             df.select(F.col(id_col), F.col(str_col).alias("__s"))
         ).select(

@@ -1,12 +1,14 @@
 """Iterative computation — the Flink ``iterate()`` surface (SURVEY.md
 §2 [F]: DataStream/DataSet iterations) in Spark's model: a
 driver-coordinated loop of declarative steps with a convergence check,
-lineage cut per round (``localCheckpoint``) so plans don't grow
-unboundedly — the standard Pregel-lite shape on Spark.
+lineage cut per round (``staging.cut``) so plans don't grow
+unboundedly — the standard Pregel-lite shape on Spark. Each round
+releases the previous round's cut; only the cuts the returned plan
+reads stay stored.
 
 The graph loops shuffle their edge frame once: it is hash-partitioned
-by the node each round aggregates on, and persisted (a persisted frame
-keeps its partitioning, a checkpoint does not). Every per-round join
+by the node each round aggregates on, and staged (a staged frame
+keeps its partitioning, a cut does not). Every per-round join
 of that frame with a node-sized frame (ranks, labels, h-index state)
 would still plan as a sort-merge join: a checkpointed frame keeps
 Catalyst's pre-execution size estimate, which for these loops is
@@ -32,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_framework_spark.functions.helpers import round_duck
+from flink_framework_spark.staging import cut, release, stage
 
 
 def _broadcast_if_fits(df: DataFrame, rows: int) -> DataFrame:
@@ -72,8 +75,6 @@ def connected_components(
     singleton components too. They are attached after the loop, so the
     per-round label frame holds edge endpoints only.
     """
-    from flink_framework_spark.operators.dedup import _staged
-
     # Both orientations plus a self pair per endpoint via ONE explode:
     # a two-branch union would run the caller's upstream (for
     # dedup_clusters the full MinHash pass) once per branch. With the
@@ -81,7 +82,7 @@ def connected_components(
     # neighbours, and a node whose only edges are self-loops is still
     # labeled (a singleton).
     a, b = F.col(src), F.col(dst)
-    und = _staged(
+    und = stage(
         edges.select(
             F.explode(
                 F.array(
@@ -95,54 +96,55 @@ def connected_components(
         .select("__e.a", "__e.b")
         # the edge frame's one shuffle: the dedup, the seed labels and
         # every round's minimum by ``a`` read it in this partitioning
-        # (a persisted frame keeps it, a checkpoint would not)
+        # (a staged frame keeps it, a cut would not)
         .repartition("a")
         .distinct()
     )
-    labels = (
-        und.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint()
-    )
-    # a label never rises, so the labels are unchanged exactly when
-    # their sum is (decimal: a sum of long ids may overflow a long)
-    total = F.sum(F.col("component").cast("decimal(38,0)"))
-    n, before = labels.agg(F.count(F.lit(1)), total).first()
-
-    # NOTE (r12): batching two rounds per probe — the move that
-    # helped coreness — was A/B'd here and measured SLOWER (min-of-4
-    # on the q_dedup_clusters edge set: 1.89 s per-round vs 2.32 s
-    # batched): min-label propagation converges in very few rounds
-    # on near-dup graphs, so block overshoot wastes proportionally
-    # more than the probe it saves. Keep per-round probes.
-    for _ in range(max_iter):
-        # ``und`` holds every label's node at least once (its self pair)
-        lab = _broadcast_if_fits(labels, n)
-        labels = (
-            und.join(lab, und.b == lab.id)
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()
+    labels = None
+    try:
+        labels = cut(
+            und.select(F.col("a").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id"))
         )
-        after = labels.agg(total).first()[0]
-        if after == before:
-            und.unpersist()
-            if vertices is None:
-                return labels
-            isolated = (
-                vertices.select(F.col(vertex_id).alias("id"))
-                .distinct()
-                .join(labels, "id", "left_anti")
+        # a label never rises, so the labels are unchanged exactly when
+        # their sum is (decimal: a sum of long ids may overflow a long)
+        total = F.sum(F.col("component").cast("decimal(38,0)"))
+        n, before = labels.agg(F.count(F.lit(1)), total).first()
+
+        # one probe per round: two rounds per probe measured slower on
+        # near-dup graphs (1.89 s vs 2.32 s, q_dedup_clusters edge set)
+        for _ in range(max_iter):
+            # ``und`` holds every label's node at least once (its self
+            # pair)
+            lab = _broadcast_if_fits(labels, n)
+            prev, labels = labels, cut(
+                und.join(lab, und.b == lab.id)
+                .groupBy(F.col("a").alias("id"))
+                .agg(F.min("component").alias("component"))
             )
-            return labels.unionByName(
-                isolated.withColumn("component", F.col("id"))
+            release(prev)
+            after = labels.agg(total).first()[0]
+            if after == before:
+                break
+            before = after
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
             )
-        before = after
-    und.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
+    except BaseException:
+        release(labels)
+        raise
+    finally:
+        release(und)
+    if vertices is None:
+        return labels
+    isolated = (
+        vertices.select(F.col(vertex_id).alias("id"))
+        .distinct()
+        .join(labels, "id", "left_anti")
     )
+    return labels.unionByName(isolated.withColumn("component", F.col("id")))
 
 
 def kmeans_lloyd(
@@ -192,17 +194,14 @@ def kmeans_lloyd(
     init_cap = 4096
     # every Lloyd round re-reads this narrow (id, vector) projection —
     # n_iter + 2 passes total (init sample, per-round assignment, the
-    # final assignment). Persist it so the parquet scan + array
+    # final assignment). Stage it so the parquet scan + array
     # conversion run once (r11, guide §5 caching: genuinely reused,
-    # compact — ids + fixed-width arrays; same discipline as
-    # operators.dedup._staged, reclaimed by the caller's clearCache).
-    from pyspark import StorageLevel
-
-    staged = df.select(
-        F.col(id_col), to_double_array(vec_col).alias("__v")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # compact — ids + fixed-width arrays). The result reads it, so it
+    # is the caller's clearCache that reclaims it.
+    staged = stage(df.select(F.col(id_col), to_double_array(vec_col).alias("__v")))
     sample = staged.orderBy(id_col).limit(init_cap).collect()
     if not sample:
+        release(staged)
         raise ValueError("cannot run k-means on an empty input")
     X = np.array([r["__v"] for r in sample], dtype=np.float64)
     picked = [0]
@@ -290,7 +289,7 @@ def pagerank(
     ranks, one aggregate that sums each destination's contributions
     (the null-source row joins no rank and contributes 0, so a node
     without in-edges keeps its row), then a lineage-cut
-    ``localCheckpoint``. The rank frame has exactly one row per node,
+    ``staging.cut``. The rank frame has exactly one row per node,
     and the node count is known, so it is broadcast whenever it fits
     the session's broadcast threshold (``_broadcast_if_fits``): the
     edge frame never moves, and the aggregate reads it in its
@@ -308,8 +307,6 @@ def pagerank(
     Returns (id, rank) with rank rounded to 6 decimals; ranks sum to
     ~1 over the node set.
     """
-    from flink_framework_spark.operators.dedup import _staged
-
     SCALE = 10**12
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     if not assume_distinct:  # callers that pre-deduped skip a full shuffle
@@ -320,78 +317,81 @@ def pagerank(
     # orders x lineitem -> distinct -> union, the most expensive part
     # of the query) executed once PER consumer; measured ~4 full
     # recomputations inside the setup at sf0.1.
-    e = e.localCheckpoint()
-    outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od")).localCheckpoint()
-    # handle_dangling=False asserts every node has an out-edge, so the
-    # node set is exactly outdeg's key column — already distinct by
-    # construction, no dedup shuffle at all (r11; previously a
-    # distinct over the full source column).
-    nodes = (
-        outdeg.select(F.col("s").alias("id"))
-        if not handle_dangling
-        else e.select(F.col("s").alias("id"))
-        .unionByName(e.select(F.col("d").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("cannot run pagerank on an empty edge list")
-    od = _broadcast_if_fits(outdeg, n)  # at most one row per node
-    e2 = e.join(od, "s")
-    if not handle_dangling:
-        # every destination must be a node, so each round's sum
-        # yields exactly the node set's rows
-        nd = _broadcast_if_fits(nodes, n)
-        e2 = e2.join(nd, e2.d == nd.id, "left_semi")
-    # the one shuffle of the edge frame: a persisted frame keeps its
-    # hash partitioning (a checkpoint would not), so each round's sum
-    # by destination needs no exchange
-    e2 = _staged(
-        e2.unionByName(
-            nodes.select(
-                F.lit(None).cast(e.schema["s"].dataType).alias("s"),
-                F.col("id").alias("d"),
-                F.lit(1).cast("long").alias("od"),
-            )
-        ).repartition("d")
-    )
-    base = ((100 - damping) * SCALE) // (100 * n)
-    ranks = nodes.withColumn("r", F.lit(SCALE // n).cast("long"))
-
-    for _ in range(n_iter):
-        if handle_dangling:
-            dang = (
-                ranks.join(outdeg, ranks.id == outdeg.s, "left_anti")
-                .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long"))
-                .collect()[0][0]
-            )
-        else:
-            dang = 0
-        rk = _broadcast_if_fits(ranks, n)
-        ranks = (
-            e2.join(rk, e2.s == rk.id, "left")
-            .groupBy(F.col("d").alias("id"))
-            .agg(F.sum(F.coalesce(F.expr("r div od"), F.lit(0))).alias("s_in"))
-            .select(
-                "id",
-                F.expr(
-                    f"{base}L + (({damping}L * (s_in + {dang // n}L)) div 100)"
-                ).alias("r"),
+    e = cut(e)
+    outdeg = nodes = e2 = ranks = None
+    try:
+        outdeg = cut(e.groupBy("s").agg(F.count(F.lit(1)).alias("od")))
+        # handle_dangling=False asserts every node has an out-edge, so
+        # the node set is exactly outdeg's key column — already
+        # distinct by construction, no dedup shuffle at all (r11;
+        # previously a distinct over the full source column).
+        nodes = (
+            outdeg.select(F.col("s").alias("id"))
+            if not handle_dangling
+            else cut(
+                e.select(F.col("s").alias("id"))
+                .unionByName(e.select(F.col("d").alias("id")))
+                .distinct()
             )
         )
-        # Lineage policy (r12, reverting r11's lazy 8-round
-        # chaining on MEASUREMENT): cut per round. The r11 chain
-        # (one lazy plan over all rounds) was guide-conformant on
-        # paper but measured SLOWER in every run — q_pagerank
-        # 5.28 s chained vs 3.63 s eager in the same-session A/B
-        # (min of 3, this machine; VERDICT r11 flagged the same
-        # regression across three independent runs). A checkpoint
-        # keeps Catalyst's pre-execution estimate, though, so the
-        # next round's join is broadcast from the exact node count,
-        # not from these statistics.
-        ranks = ranks.localCheckpoint()
-    e2.unpersist()
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("cannot run pagerank on an empty edge list")
+        od = _broadcast_if_fits(outdeg, n)  # at most one row per node
+        e2 = e.join(od, "s")
+        if not handle_dangling:
+            # every destination must be a node, so each round's sum
+            # yields exactly the node set's rows
+            nd = _broadcast_if_fits(nodes, n)
+            e2 = e2.join(nd, e2.d == nd.id, "left_semi")
+        # the one shuffle of the edge frame: a staged frame keeps its
+        # hash partitioning (a cut would not), so each round's sum by
+        # destination needs no exchange
+        e2 = stage(
+            e2.unionByName(
+                nodes.select(
+                    F.lit(None).cast(e.schema["s"].dataType).alias("s"),
+                    F.col("id").alias("d"),
+                    F.lit(1).cast("long").alias("od"),
+                )
+            ).repartition("d")
+        )
+        base = ((100 - damping) * SCALE) // (100 * n)
+        ranks = nodes.withColumn("r", F.lit(SCALE // n).cast("long"))
+
+        for _ in range(n_iter):
+            if handle_dangling:
+                dang = (
+                    ranks.join(outdeg, ranks.id == outdeg.s, "left_anti")
+                    .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long"))
+                    .collect()[0][0]
+                )
+            else:
+                dang = 0
+            rk = _broadcast_if_fits(ranks, n)
+            # cut per round: one lazy plan over all rounds measured
+            # slower (q_pagerank 5.28 s vs 3.63 s). A cut keeps Catalyst's
+            # pre-execution estimate, so the next round's join is
+            # broadcast from the exact node count.
+            prev, ranks = ranks, cut(
+                e2.join(rk, e2.s == rk.id, "left")
+                .groupBy(F.col("d").alias("id"))
+                .agg(
+                    F.sum(F.coalesce(F.expr("r div od"), F.lit(0))).alias("s_in")
+                )
+                .select(
+                    "id",
+                    F.expr(
+                        f"{base}L + (({damping}L * (s_in + {dang // n}L)) div 100)"
+                    ).alias("r"),
+                )
+            )
+            release(prev)
+    except BaseException:
+        release(e, outdeg, nodes, e2, ranks)
+        raise
+    # until a round has run, the ranks read the node set
+    release(e, e2, *((outdeg, nodes) if n_iter > 0 else ()))
     return ranks.select(
         "id", round_duck(F.col("r").cast("double") / SCALE, 6).alias("rank")
     )
@@ -430,12 +430,10 @@ def coreness(
     """
     from pyspark.sql import Window
 
-    from flink_framework_spark.operators.dedup import _staged
-
     # both orientations via ONE explode — a two-branch union would
     # re-execute the caller's upstream (for q_kcore: the supplier
     # co-occurrence self-join) once per branch (r11, guide §2.4)
-    und = _staged(
+    und = stage(
         edges.select(
             F.explode(
                 F.array(
@@ -448,20 +446,10 @@ def coreness(
         .filter(F.col("a") != F.col("b"))
         # the edge frame's one shuffle: the dedup, the degrees and every
         # round's window and H-index by ``a`` read it in this
-        # partitioning (a persisted frame keeps it, a checkpoint would
-        # not)
+        # partitioning (a staged frame keeps it, a cut would not)
         .repartition("a")
         .distinct()
     )
-    changed = -1  # sentinel for max_iter == 0 (warning path below)
-    deg = und.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("h"))
-    state = deg.localCheckpoint()
-    # every value is non-increasing, so the state is unchanged exactly
-    # when its sum is
-    total = F.coalesce(F.sum("h"), F.lit(0))
-    n, before = state.agg(F.count(F.lit(1)), total).first()
-    degrees = state.select("id", F.col("h").alias("degree"))
-
     w = Window.partitionBy("a").orderBy(F.desc("nh"), "b")
 
     def step(st: DataFrame) -> DataFrame:
@@ -483,26 +471,42 @@ def coreness(
             )
         )
 
-    # r12 (guide §1.2/§2.4 — fewer driver round-trips dominate at
-    # small per-round volume): run TWO rounds per materialization/
-    # convergence probe instead of one. The iteration is monotone
-    # and stationary at the fixpoint, so probing every other round
-    # at worst runs one extra (no-op) round — output identical —
-    # while halving the per-round fixed cost (checkpoint job +
-    # count job) that dominates when rounds are tiny. Same-session
-    # A/B (q_kcore, min of 3): 4.94 s per-round probes -> 4.41 s.
-    it = 0
-    while it < max_iter:
-        block = min(2, max_iter - it)
-        for _ in range(block):
-            state = step(state)
-        state = state.localCheckpoint()
-        it += block
-        after = state.agg(total).first()[0]
-        changed, before = before - after, after
-        if changed == 0:
-            break
-    und.unpersist()
+    changed = -1  # sentinel for max_iter == 0 (warning path below)
+    deg = state = None
+    try:
+        # the initial state: the result reads it for the degrees, so it
+        # is the one earlier cut that is never released
+        deg = state = cut(
+            und.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("h"))
+        )
+        # every value is non-increasing, so the state is unchanged
+        # exactly when its sum is
+        total = F.coalesce(F.sum("h"), F.lit(0))
+        n, before = state.agg(F.count(F.lit(1)), total).first()
+        degrees = state.select("id", F.col("h").alias("degree"))
+
+        # two rounds per cut and probe: the iteration is stationary at
+        # the fixpoint, so at worst one extra no-op round runs, and the
+        # per-probe jobs halve (q_kcore 4.94 s -> 4.41 s, min of 3)
+        it = 0
+        while it < max_iter:
+            block = min(2, max_iter - it)
+            nxt = state
+            for _ in range(block):
+                nxt = step(nxt)
+            prev, state = state, cut(nxt)
+            if prev is not deg:
+                release(prev)
+            it += block
+            after = state.agg(total).first()[0]
+            changed, before = before - after, after
+            if changed == 0:
+                break
+    except BaseException:
+        release(deg, state)
+        raise
+    finally:
+        release(und)
     if changed != 0:
         # The h-index sequence is a monotone non-increasing upper
         # bound on the true core number at every round, so a
@@ -549,12 +553,10 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 
     The degree table is counted once, and both its joins onto the edge
     list broadcast it while it fits (``_broadcast_if_fits``). Staging
-    uses ``persist``, so the returned plan stays pure SQL.
+    uses ``staging.stage``, so the returned plan stays pure SQL.
     """
-    from flink_framework_spark.operators.dedup import _staged
-
-    e = _staged(edges.select(F.col("u").cast("long"), F.col("v").cast("long")))
-    deg = _staged(
+    e = stage(edges.select(F.col("u").cast("long"), F.col("v").cast("long")))
+    deg = stage(
         e.select(F.col("u").alias("n"))
         .unionAll(e.select(F.col("v").alias("n")))
         .groupBy("n")
@@ -569,7 +571,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = _staged(
+    oriented = stage(
         ke.select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),

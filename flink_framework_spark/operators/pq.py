@@ -59,6 +59,7 @@ from flink_framework_spark.operators.similarity import (
     _nearest,
     _seq_d2,
 )
+from flink_framework_spark.staging import stage
 
 Codebooks = list[list[list[float]]]  # [subspace][code][component]
 
@@ -265,8 +266,6 @@ def ivfpq_topk(
     broadcast-sized (Q x rerank and Q rows)."""
     from pyspark.sql import Window
 
-    from flink_framework_spark.operators.dedup import _staged
-
     from flink_framework_spark.functions.helpers import dot
 
     # Stage the normalized vector BEFORE slicing into subspaces:
@@ -276,7 +275,7 @@ def ivfpq_topk(
     # staged frame is the PQ index itself — the artifact a production
     # deployment materializes offline anyway — and the rerank pass
     # re-reads it for the shortlisted ids.
-    enc_nv = _staged(
+    enc_nv = stage(
         _cell_assign(corpus, centroids, vec_col, "__cell").select(
             F.col(id_col).alias("neighbor_id"),
             "__cell",
@@ -292,7 +291,7 @@ def ivfpq_topk(
     # probing runs in the coarse quantizer's raw space, same as
     # corpus assignment) and the unit vector (PQ/ADC + exact rerank
     # run in cosine space).
-    q_nv = _staged(
+    q_nv = stage(
         queries.select(
             F.col(id_col).alias("query_id"),
             to_double_array(vec_col).alias("__qv"),

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
 from flink_framework_spark.functions.helpers import round_duck
+from flink_framework_spark.staging import stage
 
 
 def profile_table(df: DataFrame, approx_distinct: bool = True) -> DataFrame:
@@ -87,12 +88,10 @@ def hll_rollup(
     Returns one row per bucket plus an ``__all__`` row whose estimate
     comes from the sketch union (property-tested equal to the
     direct whole-table sketch)."""
-    from flink_framework_spark.operators.dedup import _staged
-
     # both output branches read the per-bucket sketches; stage them so
     # the sketch pass over the fact table runs once, not once per
     # branch (the same staged-input discipline as kll_quantile_summary)
-    per = _staged(
+    per = stage(
         df.groupBy(bucket_expr.alias(bucket_name)).agg(
             F.hll_sketch_agg(key_col).alias("__sk")
         )
@@ -142,14 +141,12 @@ def kll_quantile_summary(
     rather than exact values (property-tested against exact
     percentiles); use ``percentile_approx``/exact percentiles when a
     value-reproducible answer is required."""
-    from flink_framework_spark.operators.dedup import _staged
-
     # both output branches (per-bucket rows AND the merged __all__
     # row) read the per-bucket sketches; without staging, the sketch
     # pass over the fact table runs once PER BRANCH (Spark does not
     # dedupe common subplans) — the staged frame is tiny (one sketch
     # blob per bucket)
-    per = _staged(
+    per = stage(
         df.groupBy(bucket_expr.alias(bucket_name)).agg(
             F.kll_sketch_agg_double(value_col).alias("__sk")
         )

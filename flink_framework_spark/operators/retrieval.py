@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from flink_framework_spark.functions.helpers import round_duck
 from flink_framework_spark.operators.text import words
+from flink_framework_spark.staging import stage
 
 
 def _postings(
@@ -71,12 +72,10 @@ def bm25_topk(
     rounded to 4 decimals, ties broken by ascending doc id
     (TakeOrderedAndProject, no global sort).
     """
-    from flink_framework_spark.operators.dedup import _staged
-
     # staged: dl and the query-term slice both consume the postings
     # aggregate; without the stage the tokenize+count pipeline runs
     # once PER BRANCH (see SCALING.md on self-join branch duplication)
-    post_all = _staged(_postings(df, id_col, text_col))
+    post_all = stage(_postings(df, id_col, text_col))
     dl = doc_lengths(post_all, id_col)
     stats = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -130,9 +129,7 @@ def tfidf_keywords(
     """
     from pyspark.sql.window import Window
 
-    from flink_framework_spark.operators.dedup import _staged
-
-    post = _staged(_postings(df, id_col, text_col))
+    post = stage(_postings(df, id_col, text_col))
     dl = doc_lengths(post, id_col)
     n_docs = df.select(
         F.count(F.lit(1)).cast("double").alias("n_docs")

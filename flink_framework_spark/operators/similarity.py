@@ -30,6 +30,7 @@ from flink_framework_spark.functions.helpers import (
     round_duck,
     to_double_array,
 )
+from flink_framework_spark.staging import stage
 
 
 def _score_and_rank(
@@ -115,11 +116,9 @@ def embedding_near_dup_pairs(
     equi-join on the bucket id bounds the pair space; the cosine
     kernel verifies. Output: vec_a < vec_b with cosine >= threshold.
     """
-    from flink_framework_spark.operators.dedup import _staged
-
-    # _staged: the bucket self-join consumes the normed vectors in
+    # stage: the bucket self-join consumes the normed vectors in
     # both branches — persist so the cast + norm pass runs once
-    e = _staged(
+    e = stage(
         df.select(
             F.col(id_col).alias("__eid"),
             to_double_array(vec_col).alias("__v"),
@@ -318,8 +317,6 @@ def semantic_dedup(
     (vec_id, cell, kept 0/1, dup_of nullable) — one row per input
     vector.
     """
-    from flink_framework_spark.operators.dedup import _staged
-
     # Both stages run Arrow-vectorized: with n_cells growing ~N (the
     # sizing discipline above), assignment is O(N*k*dim) and pruning
     # O(sum c_i^2 * dim) — as interpreted per-element expressions
@@ -671,8 +668,6 @@ def cell_near_dup_pairs(
     default, so the live oracles stay exact."""
     if cell_cap is not None and cell_cap < 2:
         raise ValueError(f"cell_cap must be >= 2, got {cell_cap}")
-    from flink_framework_spark.operators.dedup import _staged
-
     assigned = df.select(
         F.col(id_col).alias("vec_id"),
         to_double_array(vec_col).alias("__v"),
@@ -720,7 +715,7 @@ def cell_near_dup_pairs(
     # wider persist). The staged frame is shared by the probe and the
     # GEMM pass (the probe's action warms the cache); the cold path —
     # every real corpus measured — is the unguarded plan over it.
-    assigned = _staged(assigned)
+    assigned = stage(assigned)
     sizes = assigned.groupBy("__cell").agg(F.count("*").alias("__csz"))
     if sizes.filter(F.col("__csz") > cell_cap).isEmpty():
         return (
@@ -733,7 +728,7 @@ def cell_near_dup_pairs(
     # sub-group — pmod(xxhash64, 1) == 0 — so their GEMM groups are
     # the unguarded per-cell groups); sizes aggregates to cell
     # cardinality, so AQE broadcasts the salting join's small side.
-    assigned = _staged(
+    assigned = stage(
         assigned.join(sizes, "__cell").select(
             "vec_id",
             "__v",

@@ -16,6 +16,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_framework_spark.staging import release, stage
+
 
 def salted_join(
     left: DataFrame,
@@ -101,8 +103,7 @@ def salted_join_targeted(
     if hot_keys is None:
         # one sampled scan: per-key counts staged, total derived from
         # them (collect only the bounded hot list, never the groups)
-        g = left.sample(fraction=sample_frac, seed=seed).groupBy(k).count()
-        g = g.persist()
+        g = stage(left.sample(fraction=sample_frac, seed=seed).groupBy(k).count())
         try:
             total_sampled = max(
                 (g.agg(F.sum("count")).collect()[0][0] or 0), 1
@@ -116,7 +117,7 @@ def salted_join_targeted(
                 .collect()
             ]
         finally:
-            g.unpersist()
+            release(g)
     if not hot_keys:
         out = left.join(right, keys, how)
     else:

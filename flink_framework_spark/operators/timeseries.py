@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_framework_spark.functions.helpers import round_duck
-from flink_framework_spark.operators.dedup import _staged
+from flink_framework_spark.staging import stage
 
 
 def gap_fill_locf(
@@ -57,7 +57,7 @@ def gap_fill_locf(
     so it is staged (persisted) once — the self-join-branch rule from
     SCALING.md; it holds one row per (series, bucket), not facts.
     """
-    b = _staged(
+    b = stage(
         events.groupBy(
             F.col(series_col).alias("series"),
             F.date_trunc(grain, F.col(ts_col)).alias("bucket"),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from flink_framework_spark.functions.helpers import round_duck
 from flink_framework_spark.io import table
 from flink_framework_spark.registry import register
+from flink_framework_spark.staging import stage
 
 
 @register(
@@ -636,13 +637,12 @@ def q_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     is staged once for both the sketch and the exact top-k; the probe
     broadcasts the 1024-cell sketch (operators.profile.cms_build /
     cms_estimate)."""
-    from flink_framework_spark.operators.dedup import _staged
     from flink_framework_spark.operators.profile import (
         cms_build,
         cms_estimate,
     )
 
-    tok = _staged(
+    tok = stage(
         table(spark, sf_dir, "documents").select(
             F.explode(F.split(F.trim("text"), " ")).alias("term")
         )

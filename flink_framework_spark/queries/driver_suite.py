@@ -39,6 +39,7 @@ from flink_framework_spark.queries._oracle_trained import (
 )
 from flink_framework_spark.queries.graph import _pagerank_oracle_sql
 from flink_framework_spark.registry import register
+from flink_framework_spark.staging import release, stage
 
 
 @register(
@@ -1609,8 +1610,8 @@ def _cep_part(df: DataFrame, name: str, grp_col: str | None = None) -> DataFrame
 
 
 def _cep_times_union(ev: DataFrame):
-    """(persisted match frame, lazy 4-part union) for the times/skip
-    family — the caller drains the union eagerly and unpersists.
+    """(staged match frame, lazy 4-part union) for the times/skip
+    family — the caller drains the union eagerly and releases it.
 
     r11: the two greedy selections (SKIP_PAST_LAST + SKIP_TO_LAST)
     run as ONE grouped-map pass (operators.cep.skip_greedy_pair) and
@@ -1625,7 +1626,7 @@ def _cep_times_union(ev: DataFrame):
         skip_greedy_pair,
     )
 
-    times_m = match_times(ev, "click", "purchase", 2, 3, "12 HOURS").persist()
+    times_m = stage(match_times(ev, "click", "purchase", 2, 3, "12 HOURS"))
     skip_parts = (
         skip_greedy_pair(
             times_m, tags=("skip_past", "skip_last", "skip_next")
@@ -1715,7 +1716,7 @@ def cep_suite_breakdown(spark: SparkSession, sf_dir: str) -> dict:
         try:
             lazy.collect()
         finally:
-            times_m.unpersist()
+            release(times_m)
 
     def noop(df: DataFrame):
         return lambda: df.write.format("noop").mode("overwrite").save()
@@ -1805,7 +1806,7 @@ def q_cep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         times_rows = times_parts_lazy.collect()
     finally:
-        times_m.unpersist()
+        release(times_m)
 
     # the nine non-MR chain/greedy parts: ONE spark.sql statement over
     # the oracle-shared live-SQL text (see the docstring) — a single

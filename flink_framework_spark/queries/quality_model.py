@@ -26,6 +26,7 @@ from flink_framework_spark.queries._oracle_trained import (
     quality_model_select_sql,
 )
 from flink_framework_spark.registry import register
+from flink_framework_spark.staging import stage
 
 _FEATS = ("f_stop", "f_dup", "f_wlen")
 
@@ -99,9 +100,7 @@ def q_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     # With the persist, features are computed once, distributed, and
     # the take's projection is a trivial column selection (r12, guide
     # §5 caching + §1.2). Reclaimed by the caller's clearCache.
-    from flink_framework_spark.operators.dedup import _staged
-
-    feats = _staged(_featurized(spark, sf_dir))
+    feats = stage(_featurized(spark, sf_dir))
     weights = logreg_train(
         feats, _FEATS, label_col="label", order_col=F.struct("doc_id", "variant")
     )

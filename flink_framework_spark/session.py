@@ -7,7 +7,8 @@ config-independent. ``configure_session`` applies the few runtime-safe
 settings we do need (notably reading nanosecond parquet timestamps).
 
 Scale posture (SURVEY.md §4.2 / K6): AQE enabled for runtime
-re-planning (skew-join splitting, partition coalescing), shuffle
+re-planning (skew-join splitting, partition coalescing at Spark's
+default targets), shuffle
 partitions sized for the local harness but overridable via env for a
 real cluster, Arrow enabled so the few pandas-UDF operators use
 vectorized transfer.
@@ -35,10 +36,9 @@ Cached-plan partitioning. ``persist``/``cache`` plans the cached
 query when it builds the ``InMemoryRelation``, and by default Spark
 turns AQE's final-stage partition coalescing off for that plan so the
 cache keeps the output partitioning of its last exchange. Every staged
-frame whose plan ends in a shuffle (``dedup._staged`` and the other
-persist sites) was then stored in ``spark.sql.shuffle.partitions``
-partitions, and every stage that scanned it ran that many tasks,
-however small the frame. ``spark.sql.optimizer.
+frame whose plan ends in a shuffle (every ``staging.stage`` call) was
+then stored in ``spark.sql.shuffle.partitions`` partitions, and every
+stage that scanned it ran that many tasks, however small the frame. ``spark.sql.optimizer.
 canChangeCachedPlanOutputPartitioning=true`` (runtime, in
 ``RUNTIME_CONFS``) lets AQE coalesce the cached plan like any other:
 on ``perfbench``'s pipelines (sf0.01, local[4], 32 shuffle partitions)
@@ -164,33 +164,12 @@ def get_spark(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-    # AQE partition-coalescing posture (guide §2.2): with
-    # ``parallelismFirst=true`` (Spark's default) tiny shuffles keep
-    # full parallelism — at local[32] over MB-scale inputs that is 32
-    # near-empty tasks per exchange, pure scheduling overhead; Spark's
-    # own docs recommend ``false`` (respect the advisory partition
-    # size) on busy clusters. Both knobs stay env-tunable so a real
-    # deployment sizes them to its data volume (e.g. advisory 256m at
-    # 100 TB); the defaults here are measured A/B on the bench corpus
-    # (see OPTIMIZATION_r11.md).
-    parallelism_first = os.environ.get(
-        "SPARK_GRAFT_COALESCE_PARALLELISM_FIRST", "true"
-    )
-    advisory = os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config(map=STATIC_CONFS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            parallelism_first,
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory
-        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

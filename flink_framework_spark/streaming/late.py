@@ -29,6 +29,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from flink_framework_spark.staging import cut, release
 from flink_framework_spark.streaming.drain import run_available_now
 
 
@@ -79,12 +81,14 @@ class LateSideOutputProcessor:
         if self._wm_floor is not None:
             wm = F.greatest(wm, F.lit(self._wm_floor))
         bound = wm - F.expr(f"INTERVAL {self._delay}")
-        split = batch_df.withColumn(
-            "__late", wm.isNotNull() & (ts < bound)
-        ).localCheckpoint()  # evaluate the window once, not per sink
-        self._late_sink(split.filter("__late").drop("__late"), batch_id)
-        self._on_time_sink(split.filter("NOT __late").drop("__late"), batch_id)
-        new_max = split.agg(F.max(ts)).collect()[0][0]
+        # evaluate the window once, not per sink
+        split = cut(batch_df.withColumn("__late", wm.isNotNull() & (ts < bound)))
+        try:
+            self._late_sink(split.filter("__late").drop("__late"), batch_id)
+            self._on_time_sink(split.filter("NOT __late").drop("__late"), batch_id)
+            new_max = split.agg(F.max(ts)).collect()[0][0]
+        finally:
+            release(split)
         if new_max is not None and (
             self._wm_floor is None or new_max > self._wm_floor
         ):

@@ -37,6 +37,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_framework_spark.staging import release, stage
+
 
 class RollingDedupProcessor:
     """``foreachBatch`` handler accumulating a deduplicated corpus.
@@ -191,19 +193,21 @@ class RollingDedupProcessor:
                     spark, self.signature_path, bid
                 )
                 if corpus_sig is not None:
-                    survivors = incremental_dedup_ngram(
-                        new,
-                        None,
-                        threshold=self.threshold,
-                        id_col=self.id_col,
-                        text_col=self.text_col,
-                        new_minsh=new_minsh,
-                        corpus_minsh=corpus_sig,
-                    # persisted: the corpus write AND the signature
+                    # staged: the corpus write AND the signature
                     # semi-join both consume the anti-join output —
                     # without this the whole dedup plan (including a
                     # second signature-lake scan) executes twice
-                    ).persist()
+                    survivors = stage(
+                        incremental_dedup_ngram(
+                            new,
+                            None,
+                            threshold=self.threshold,
+                            id_col=self.id_col,
+                            text_col=self.text_col,
+                            new_minsh=new_minsh,
+                            corpus_minsh=corpus_sig,
+                        )
+                    )
                 else:
                     survivors = new
                 self._write_partition(
@@ -211,7 +215,7 @@ class RollingDedupProcessor:
                     os.path.join(self.corpus_path, f"batch={batch_id}"),
                 )
                 # signature rows for THIS batch's survivors, same
-                # idempotent layout — derived from the (persisted)
+                # idempotent layout — derived from the (staged)
                 # survivors plan itself, since a zero-survivor
                 # partition has no files to read back
                 surv_ids = survivors.select(
@@ -226,9 +230,7 @@ class RollingDedupProcessor:
             finally:
                 # staged frames must not outlive the batch even when
                 # it fails (retries would pile up cache entries)
-                new_minsh.unpersist()
-                if survivors is not None and survivors is not new:
-                    survivors.unpersist()
+                release(new_minsh, survivors)
             return
         corpus = self._read_lake(spark, self.corpus_path, bid)
         if corpus is not None and corpus.limit(1).count() > 0:
@@ -329,7 +331,7 @@ class RollingDedupProcessor:
             )
             minsh = min_shingle_frame(part, self.id_col, self.text_col)
             self._write_partition(minsh, sig_dir)
-            minsh.unpersist()
+            release(minsh)
             n += 1
         return n
 

@@ -16,10 +16,11 @@ output (Flink's main output). A record is therefore routed exactly
 once per pass — the tag slices plus the default partition the batch
 (property-tested in tests/test_sideout.py).
 
-Scale: the batch is split with one ``localCheckpoint`` evaluation of
-a single CASE expression, then each sink receives a filtered narrow
+Scale: the batch is split with one ``staging.cut`` evaluation of a
+single CASE expression, then each sink receives a filtered narrow
 view — no per-tag rescan of the source, no shuffle added beyond what
-the sinks themselves do.
+the sinks themselves do. The router releases the cut once the sinks
+have run.
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ from typing import Callable, Mapping, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from flink_framework_spark.staging import cut, release
 from flink_framework_spark.streaming.drain import run_available_now
 
 Sink = Callable[[DataFrame, int], None]
@@ -54,10 +57,14 @@ def split_batch(
     df: DataFrame, tags: Mapping[str, Column]
 ) -> dict[str, DataFrame]:
     """Split a (batch) DataFrame into first-match tag slices plus
-    ``DEFAULT_TAG``. The routing expression is evaluated once
-    (localCheckpoint), so N output slices cost one pass over ``df``.
+    ``DEFAULT_TAG``. The routing expression is evaluated once (a
+    ``staging.cut``), so N output slices cost one pass over ``df``.
+    The slices read the cut, which stays stored.
     """
-    routed = df.withColumn(_TAG, route_expr(tags)).localCheckpoint()
+    return _slices(cut(df.withColumn(_TAG, route_expr(tags))), tags)
+
+
+def _slices(routed: DataFrame, tags: Mapping[str, Column]) -> dict[str, DataFrame]:
     out = {
         name: routed.filter(F.col(_TAG) == name).drop(_TAG) for name in tags
     }
@@ -85,12 +92,16 @@ class SideOutputRouter:
         }
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        for name, sl in split_batch(batch_df, self._tags).items():
-            sink = self._sinks.get(name)
-            if sink is not None:
-                sink(sl, batch_id)
-            else:
-                self.rows[name].extend(sl.collect())
+        routed = cut(batch_df.withColumn(_TAG, route_expr(self._tags)))
+        try:
+            for name, sl in _slices(routed, self._tags).items():
+                sink = self._sinks.get(name)
+                if sink is not None:
+                    sink(sl, batch_id)
+                else:
+                    self.rows[name].extend(sl.collect())
+        finally:
+            release(routed)  # the sinks have run
 
 
 def run_with_side_outputs(

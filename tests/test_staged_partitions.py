@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_framework_spark.operators.dedup import _staged
+from flink_framework_spark.staging import stage
 from flink_framework_spark.session import configure_session
 
 CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
@@ -28,7 +28,7 @@ def test_staged_aggregate_is_scanned_in_few_tasks(spark, group_jobs):
     parallelism = spark.sparkContext.defaultParallelism
     # so a scan of every shuffle partition would break the bound below
     assert shuffle > parallelism
-    staged = _staged(
+    staged = stage(
         spark.range(2000)
         .withColumn("k", F.col("id") % 50)
         .groupBy("k")

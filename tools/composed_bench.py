@@ -47,8 +47,6 @@ def _build_spark() -> SparkSession:
             "spark.sql.shuffle.partitions",
             os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
         )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # UI on: the status REST API is the shuffle-bytes source
         .config("spark.ui.enabled", "true")
