@@ -32,13 +32,23 @@ by key and runs the step per key. A null in any key column sends the
 row to one extra bucket, -1, so a null never widens a bigint key
 column of other keys to float64 in pandas.
 
-One state row per bucket holds the bucket's keys column-wise:
+A bucket's state is one ``binary`` cell: its keys' columns as one
+Arrow IPC message (:class:`BucketCodec`), a record batch with one row
+per key whose columns the layout DDL (:func:`_bucket_schema`) declares
+as one array each:
 
-- ``__k0 .. __k{n-1}``: the key columns, one array each, encoded
-  through :func:`state_array` (timestamps as wall-clock epoch
-  seconds);
+- ``__k0 .. __k{n-1}``: the key columns, encoded through
+  :func:`state_array` (timestamps as wall-clock epoch seconds);
 - ``__timer``: each key's armed timer (epoch ms, null for none);
 - one ``array<T>`` per field ``T`` of the operator's state schema.
+
+Spark sees only the binary cell, so the state deserializer it
+generates is the same every micro-batch and is compiled once; for
+nested arrays it named its lambda variables afresh each batch, so
+every trigger compiled it again. The codec keeps the DDL's types
+exactly (float32 rounding, NaN apart from null), writes no pickle,
+and carries the layout: a blob written under another layout (other
+key types or state fields) raises ValueError naming both.
 
 A key whose step returns None leaves the bucket; a bucket left empty
 is removed. The bucket's timer is the minimum of its keys' timers.
@@ -56,8 +66,9 @@ under another count would route keys to buckets that do not hold
 their state and return silently wrong results. Flink fixes its key
 groups when a job is created for the same reason. Changing the
 constant, or the bucket layout, makes existing checkpoints unusable;
-checkpoints written by the per-key harness this replaced cannot be
-resumed either.
+checkpoints written by the per-key harness, or by the bucket harness
+that kept one state column per field, cannot be resumed either (Spark
+refuses the changed state schema when the query restarts).
 
 Scale ceiling: a bucket holds about ``keys / KEY_BUCKETS`` key states
 (about 390 at 25k keys), and touching any key of a bucket decodes and
@@ -73,11 +84,11 @@ from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
 
 from flink_framework_spark.streaming.epoch import (
     epoch_s_to_timestamps,
@@ -90,6 +101,8 @@ from flink_framework_spark.streaming.epoch import (
 # module docstring); 64 is also groupmap.bucket_count's floor.
 KEY_BUCKETS = 64
 BUCKET_COL = "__kb"
+# the bucket state row Spark stores: one cell, written by BucketCodec
+STATE_CELL = "bucket binary"
 
 # Spark column type -> the state array type that carries a column of
 # it; timestamps ride as epoch seconds (micros-exact at current epochs)
@@ -115,6 +128,82 @@ def state_array(col: str, typ: str, where: str, ntz: bool = True) -> str:
             f"{col} of type {typ} is not supported in {where} state"
         )
     return _STATE_ARRAY[typ]
+
+
+# a state DDL scalar type -> its Arrow type in the bucket codec
+_ARROW = {
+    "boolean": pa.bool_(),
+    "bigint": pa.int64(),
+    "long": pa.int64(),
+    "int": pa.int32(),
+    "integer": pa.int32(),
+    "double": pa.float64(),
+    "float": pa.float32(),
+    "string": pa.string(),
+}
+
+
+def _arrow_type(typ: str) -> pa.DataType:
+    """The Arrow type of state DDL type ``typ``; raises ValueError for
+    a type the bucket codec cannot carry (anything but the scalars of
+    ``_ARROW`` and arrays of them)."""
+    t = typ.strip().lower()
+    if t.startswith("array<") and t.endswith(">"):
+        return pa.list_(_arrow_type(t[6:-1]))
+    if t not in _ARROW:
+        raise ValueError(f"type {typ} is not supported in key-bucket state")
+    return _ARROW[t]
+
+
+def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
+    """``(name, type)`` per field of a flat DDL field list such as
+    ``"n long, buf array<double>"``; its types never hold a comma, as
+    no struct or map type is carried."""
+    fields = []
+    for spec in ddl.split(","):
+        name, typ = spec.strip().split(None, 1)
+        _arrow_type(typ)  # refuses a type the cell cannot carry
+        fields.append((name.strip("`"), typ))
+    return fields
+
+
+class BucketCodec:
+    """A key bucket's state cell: the per-key columns of a layout DDL
+    (one ``array<T>`` per column, see :func:`_bucket_schema`) as one
+    record batch, one row per key, each column typed ``T``. The cell
+    is the layout's text, a NUL byte, then the batch as one Arrow IPC
+    message; decoding a cell written under another layout raises
+    ValueError naming both."""
+
+    def __init__(self, layout: str):
+        self.layout = layout
+        self.schema = pa.schema([
+            pa.field(name, _arrow_type(typ[6:-1]))
+            for name, typ in _ddl_fields(layout)
+        ])
+        self._tag = layout.encode() + b"\0"
+
+    def encode(self, columns: Sequence[Sequence]) -> bytes:
+        """One sequence of per-key values per layout column -> cell."""
+        batch = pa.record_batch(
+            [pa.array(c, f.type) for c, f in zip(columns, self.schema)],
+            schema=self.schema,
+        )
+        return self._tag + batch.serialize().to_pybytes()
+
+    def decode(self, cell) -> list[list]:
+        """A cell -> one list of per-key values per layout column."""
+        written, _, message = bytes(cell).partition(b"\0")
+        if written != self._tag[:-1]:
+            raise ValueError(
+                f"key-bucket state written under layout "
+                f"[{written.decode(errors='replace')}] cannot be read "
+                f"under this query's layout [{self.layout}]: a "
+                f"checkpoint's key types and state fields are fixed "
+                f"for its life"
+            )
+        batch = pa.ipc.read_record_batch(message, self.schema)
+        return [c.to_pylist() for c in batch.columns]
 
 
 def _ts_value(s: float) -> pd.Timestamp:
@@ -211,18 +300,14 @@ def _split_keys(frame: pd.DataFrame, keys: Sequence[str], narrow=()):
     return [(tuple(g[k].iat[0] for k in keys), g) for g in groups]
 
 
-def _plain(v):
-    """A state value as the plain Python value Spark can unpickle."""
-    return v.item() if isinstance(v, np.generic) else v
-
-
 def keyed_fn(step: Callable, types: dict, keys: Sequence[str],
-             timed: bool, tz=None):
+             codec: BucketCodec, timed: bool, tz=None):
     """The per-bucket ``(bucket, pdfs, state)`` function that runs
     ``step`` on each key of the bucket; ``types`` maps the input's
-    columns to Spark type names, ``timed`` reads the watermark and
-    arms timers, ``tz`` is the wall-clock zone of the event-time
-    column (``epoch.wallclock_tz``)."""
+    columns to Spark type names, ``codec`` reads and writes the
+    bucket's state cell, ``timed`` reads the watermark and arms
+    timers, ``tz`` is the wall-clock zone of the event-time column
+    (``epoch.wallclock_tz``)."""
     codecs = [_KEY_CODEC[types[k]] for k in keys]
     narrow = [(c, np.dtype(_NARROW[t])) for c, t in types.items()
               if t in _NARROW]
@@ -244,10 +329,10 @@ def keyed_fn(step: Callable, types: dict, keys: Sequence[str],
         wm = state.getCurrentWatermarkMs() if timed else None
         enc, timers, states = [], [], []
         if state.exists:
-            row = state.get
-            enc = list(zip(*row[:nk]))
-            timers = list(row[nk])
-            states = list(zip(*row[nk + 1:]))
+            cols = codec.decode(state.get[0])
+            enc = list(zip(*cols[:nk]))
+            timers = cols[nk]
+            states = list(zip(*cols[nk + 1:]))
         slot = {e: i for i, e in enumerate(enc)}
         outs = []
 
@@ -289,12 +374,11 @@ def keyed_fn(step: Callable, types: dict, keys: Sequence[str],
         if not keep:
             state.remove()
         else:
-            state.update((
+            state.update((codec.encode([
                 *([enc[i][j] for i in keep] for j in range(nk)),
                 [timers[i] for i in keep],
-                *(list(map(_plain, col))
-                  for col in zip(*(states[i] for i in keep))),
-            ))
+                *zip(*(states[i] for i in keep)),
+            ]),))
             armed = [timers[i] for i in keep if timers[i] is not None]
             if armed:
                 state.setTimeoutTimestamp(min(armed))
@@ -305,10 +389,10 @@ def keyed_fn(step: Callable, types: dict, keys: Sequence[str],
 
 def _bucket_schema(types: dict, keys: Sequence[str],
                    state_schema: str) -> str:
-    """The bucket state row's schema for keys ``keys`` (typed by
+    """The bucket state's layout DDL for keys ``keys`` (typed by
     ``types``) and the operator's per-key ``state_schema``; raises
-    ValueError for a key column of a type the state cannot carry."""
-    fields = StructType.fromDDL(state_schema).fields
+    ValueError for a key column or state field of a type the state
+    cannot carry."""
     return ", ".join(
         [
             f"__k{i} " + state_array(f"key column {k!r}", types[k],
@@ -316,8 +400,8 @@ def _bucket_schema(types: dict, keys: Sequence[str],
             for i, k in enumerate(keys)
         ]
         + ["__timer array<bigint>"]
-        + [f"`{f.name}` array<{f.dataType.simpleString()}>"
-           for f in fields]
+        + [f"`{name}` array<{typ}>"
+           for name, typ in _ddl_fields(state_schema)]
     )
 
 
@@ -346,14 +430,14 @@ def keyed_process(
     timed = event_time is not None
     tz = wallclock_tz(df, event_time) if timed else None
     types = {f.name: f.dataType.simpleString() for f in df.schema}
-    bucket_state = _bucket_schema(types, keys, state_schema)
+    codec = BucketCodec(_bucket_schema(types, keys, state_schema))
     return (
         df.withColumn(BUCKET_COL, _key_bucket(keys))
         .groupBy(BUCKET_COL)
         .applyInPandasWithState(
-            keyed_fn(step, types, keys, timed, tz),
+            keyed_fn(step, types, keys, codec, timed, tz),
             outputStructType=out_schema,
-            stateStructType=bucket_state,
+            stateStructType=STATE_CELL,
             outputMode="update",
             timeoutConf=(
                 GroupStateTimeout.EventTimeTimeout

@@ -1,11 +1,17 @@
 """A Spark-free ``GroupState`` for driving keyed-state steps through
-the harness's per-bucket function (``streaming.keyed.keyed_fn``)."""
+the harness's per-bucket function (``streaming.keyed.keyed_fn``) and
+its state codec (``streaming.keyed.BucketCodec``)."""
 
 from __future__ import annotations
 
 import pandas as pd
 
-from flink_framework_spark.streaming.keyed import BUCKET_COL, keyed_fn
+from flink_framework_spark.streaming.keyed import (
+    BUCKET_COL,
+    BucketCodec,
+    _bucket_schema,
+    keyed_fn,
+)
 
 # Patched to True to run every :func:`call` with a neighbour key
 # sharing the bucket (tests/test_keyed_shared.py).
@@ -16,33 +22,38 @@ class FakeGroupState:
     """The slice of ``GroupState`` the harness touches for one key
     bucket: ``exists`` / ``get`` / ``update`` / ``remove``,
     ``hasTimedOut``, a settable watermark ``wm_ms`` and the armed
-    ``timer``. Lists are copied on update so a step cannot lean on
-    aliasing between calls; like Spark, a timer below the watermark
-    is refused."""
+    ``timer``. The state cell is kept as the harness codec wrote it
+    and handed back as a ``bytearray``, as Spark's unpickled state row
+    holds it; like Spark, a timer below the watermark is refused.
 
-    def __init__(self, wm_ms: int | None = None):
+    ``state_schema`` is the step's per-key state DDL, as the operator
+    passes it to ``keyed_process``; a toy step may leave it out, and
+    its scalar state fields are then typed from the first state it
+    writes (:class:`_ToyCodec`). ``codec`` is set by the first
+    :func:`call_bucket`."""
+
+    def __init__(self, wm_ms: int | None = None,
+                 state_schema: str | None = None):
         self.wm_ms = wm_ms
+        self.state_schema = state_schema
+        self.codec = None
         self.hasTimedOut = False
         self.timer = None
-        self._packed = None
+        self._cell = None
 
     @property
     def exists(self):
-        return self._packed is not None
+        return self._cell is not None
 
     @property
     def get(self):
-        return self._packed
+        return (bytearray(self._cell),)
 
-    def update(self, packed):
-        self._packed = tuple(
-            [list(x) if isinstance(x, list) else x for x in v]
-            if isinstance(v, list) else v
-            for v in packed
-        )
+    def update(self, row):
+        (self._cell,) = row
 
     def remove(self):
-        self._packed = None
+        self._cell = None
 
     def getCurrentWatermarkMs(self):
         return self.wm_ms
@@ -52,13 +63,42 @@ class FakeGroupState:
         self.timer = ms
 
 
+# Python type of a toy step's scalar state field -> its DDL type
+_TOY_TYPES = {bool: "boolean", int: "bigint", float: "double", str: "string"}
+
+
+class _ToyCodec:
+    """The harness codec for a toy step that declares no state schema:
+    its layout is fixed by the first state it encodes, each state
+    field typed from the first key's value (a scalar only)."""
+
+    def __init__(self, types: dict, keys):
+        self.types, self.keys, self.codec = types, keys, None
+
+    def encode(self, columns):
+        if self.codec is None:
+            fields = [type(c[0]) for c in columns[len(self.keys) + 1:]]
+            if not set(fields) <= set(_TOY_TYPES):
+                raise TypeError(f"state fields {fields}: pass the step's "
+                                "state_schema")
+            ddl = ", ".join(f"s{i} {_TOY_TYPES[t]}"
+                            for i, t in enumerate(fields))
+            self.codec = BucketCodec(_bucket_schema(self.types, self.keys,
+                                                    ddl))
+        return self.codec.encode(columns)
+
+    def decode(self, blob):
+        return self.codec.decode(blob)
+
+
 def key_states(bucket: FakeGroupState, n_keys: int = 1) -> dict:
-    """The bucket's keys as ``{stored key tuple: (timer, state)}``."""
+    """The bucket's keys as ``{stored key tuple: (timer, state)}``,
+    decoded through the bucket's codec."""
     if not bucket.exists:
         return {}
-    row = bucket.get
-    return dict(zip(zip(*row[:n_keys]),
-                    zip(row[n_keys], zip(*row[n_keys + 1:]))))
+    cols = bucket.codec.decode(bucket.get[0])
+    return dict(zip(zip(*cols[:n_keys]),
+                    zip(cols[n_keys], zip(*cols[n_keys + 1:]))))
 
 
 def _key_type(v) -> str:
@@ -78,7 +118,12 @@ def call_bucket(step, bucket, chunks, keys, types, *, timed=False,
     bucket.hasTimedOut = timed_out
     for c in chunks:
         c[BUCKET_COL] = 0
-    fn = keyed_fn(step, types, keys, timed, tz)
+    if bucket.codec is None:
+        bucket.codec = (
+            _ToyCodec(types, keys) if bucket.state_schema is None
+            else BucketCodec(_bucket_schema(types, keys, bucket.state_schema))
+        )
+    fn = keyed_fn(step, types, keys, bucket.codec, timed, tz)
     return list(fn((0,), iter(chunks), bucket))
 
 
@@ -87,8 +132,9 @@ class FakeState:
     ``get`` and ``timer`` read the slot of the key last passed to
     :func:`call`, ``wm_ms`` is the bucket's watermark."""
 
-    def __init__(self, wm_ms: int | None = None):
-        self.bucket = FakeGroupState(wm_ms)
+    def __init__(self, wm_ms: int | None = None,
+                 state_schema: str | None = None):
+        self.bucket = FakeGroupState(wm_ms, state_schema)
         self.key = None
 
     @property

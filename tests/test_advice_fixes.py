@@ -271,11 +271,14 @@ def test_sequence_fn_trims_state_on_unrelated_events():
     horizon bound (state size contract)."""
     import pandas as pd
 
-    from flink_framework_spark.streaming.stateful import make_sequence_step
+    from flink_framework_spark.streaming.stateful import (
+        _SEQ_STATE_SCHEMA,
+        make_sequence_step,
+    )
     from tests.fake_state import FakeState, call
 
     step = make_sequence_step(["view", "click"], horizon_s=100.0)
-    st = FakeState()
+    st = FakeState(state_schema=_SEQ_STATE_SCHEMA)
     T = 1_700_000_000
     # batch 1: a 'view' opens a partial
     p1 = pd.DataFrame(

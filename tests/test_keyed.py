@@ -260,14 +260,19 @@ _CLICKS = [(0, 1, "click", 1.0), (1, 2, "click", 2.0),
            (5, 5, "purchase", 5.0), (100, 6, "click", 6.0)]
 
 IN_ORDER = {
-    "funnel": (lambda: stateful._funnel_step, _FUNNEL),
-    "negated_funnel": (lambda: stateful._negated_funnel_step, _FUNNEL),
-    "times": (lambda: stateful.make_times_step(2, 3, 60.0), _CLICKS),
-    "greedy": (lambda: stateful.make_greedy_step(5.0, 60.0), _CLICKS),
-    "count_window": (lambda: stateful.make_count_window_step(2), _CLICKS),
+    "funnel": (lambda: stateful._funnel_step, _FUNNEL,
+               stateful._STATE_SCHEMA),
+    "negated_funnel": (lambda: stateful._negated_funnel_step, _FUNNEL,
+                       stateful._NEG_STATE_SCHEMA),
+    "times": (lambda: stateful.make_times_step(2, 3, 60.0), _CLICKS,
+              stateful._TIMES_STATE_SCHEMA),
+    "greedy": (lambda: stateful.make_greedy_step(5.0, 60.0), _CLICKS,
+               stateful._GREEDY_STATE_SCHEMA),
+    "count_window": (lambda: stateful.make_count_window_step(2), _CLICKS,
+                     stateful._CW_STATE_SCHEMA),
     "sequence": (
         lambda: stateful.make_sequence_step(["click", "purchase"], 60.0),
-        _CLICKS,
+        _CLICKS, stateful._SEQ_STATE_SCHEMA,
     ),
 }
 
@@ -277,10 +282,11 @@ def test_in_order_step_sorts_the_whole_call(name):
     """Two Arrow chunks of one call, later events first: the step
     sees one frame and sorts it whole, so the output and state equal
     the single-chunk call's."""
-    make, rows = IN_ORDER[name]
+    make, rows, schema = IN_ORDER[name]
     pdf = _events(rows)
     h = len(pdf) // 2
-    one, split = FakeState(), FakeState()
+    one = FakeState(state_schema=schema)
+    split = FakeState(state_schema=schema)
     want = call(make(), one, (7,), [pdf])
     got = call(make(), split, (7,), [pdf.iloc[h:], pdf.iloc[:h]])
     assert want  # the fixture must emit
@@ -300,16 +306,17 @@ def _ms(wall: str) -> int:
 
 def _capture(monkeypatch, module, build):
     """Build an operator with its ``keyed_process`` call captured:
-    returns the ``call_bucket`` arguments that run its step, the
-    grouped frame as pandas (the rows the step would see) and the key
-    columns."""
+    returns the arguments that run its step (step, column types,
+    event-time column, zone, state schema), the grouped frame as
+    pandas (the rows the step would see) and the key columns."""
     seen = {}
 
     def capture(df, keys, step, *, out_schema, state_schema,
                 event_time=None):
         types = {f.name: f.dataType.simpleString() for f in df.schema}
         tz = wallclock_tz(df, event_time) if event_time else None
-        seen.update(df=df, keys=keys, args=(step, types, event_time, tz))
+        seen.update(df=df, keys=keys,
+                args=(step, types, event_time, tz, state_schema))
         return df
 
     monkeypatch.setattr(module, "keyed_process", capture)
@@ -321,14 +328,14 @@ def _arm(args, pdf, keys, wm_ms):
     """One data call per key bucket of ``pdf`` (one key per bucket,
     or one bucket for the key and its neighbour); the one armed
     timer among the keys."""
-    step, types, event_time, tz = args
+    step, types, event_time, tz, state_schema = args
     pdf = fake_state.neighboured(pdf, keys)
     buckets = (
         [pdf] if fake_state.SHARED else [g for _, g in pdf.groupby(keys)]
     )
     timers = set()
     for rows in buckets:
-        st = FakeGroupState(wm_ms)
+        st = FakeGroupState(wm_ms, state_schema)
         call_bucket(step, st, [rows.reset_index(drop=True)], keys, types,
                     timed=event_time is not None, tz=tz)
         timers |= {t for t, _ in key_states(st, len(keys)).values()}
@@ -423,7 +430,7 @@ def test_temporal_join_arms_one_ms_past_the_watermark(spark, monkeypatch):
 
 def test_greedy_timer_arms_at_the_gap_end():
     step = stateful.make_greedy_step(5.0, 60.0, use_timeout=True)
-    st = FakeState((T - 60) * 1000)
+    st = FakeState((T - 60) * 1000, stateful._GREEDY_STATE_SCHEMA)
     call(step, st, (7,), [_events([(0, 1, "click", 0.0),
                                    (1, 2, "click", 0.0)])],
          timed=True, tz=NY)
@@ -431,7 +438,7 @@ def test_greedy_timer_arms_at_the_gap_end():
 
 
 def test_over_timer_arms_at_the_earliest_buffered_row():
-    st = FakeState((T - 60) * 1000)
+    st = FakeState((T - 60) * 1000, stateful._OVER_STATE_SCHEMA)
     call(stateful.make_over_window_step(), st, (7,),
          [_events([(3, 1, "x", 1.0), (9, 2, "x", 1.0)])],
          timed=True, tz=NY)

@@ -15,6 +15,9 @@ import pandas as pd
 import pytest
 
 from flink_framework_spark.streaming.stateful import (
+    _GREEDY_STATE_SCHEMA,
+    _PEND_STATE_SCHEMA,
+    _TIMES_STATE_SCHEMA,
     _GreedyCore,
     _TimesCore,
     make_disorder_step,
@@ -43,6 +46,13 @@ class RecordingCore:
 
     def pack(self):
         return tuple([f[i] for f in self.fed] for i in range(3))
+
+
+# RecordingCore's fields, then the buffer's
+RECORDING_STATE_SCHEMA = (
+    "fed_s array<double>, fed_id array<long>, fed_type array<string>"
+    + _PEND_STATE_SCHEMA
+)
 
 
 def batch(events):
@@ -86,7 +96,7 @@ def test_shuffled_arrival_releases_in_ts_id_order():
     arrival = sorted(events, key=lambda e: e[0] + rng.uniform(0, 5))
     batches = [arrival[i:i + 13] for i in range(0, 60, 13)]
     batches.append([(1000, 1, "click")])  # far-future flush
-    state = FakeState()
+    state = FakeState(state_schema=RECORDING_STATE_SCHEMA)
     run(make_disorder_step(RecordingCore, 10.0), state, batches)
     assert fed_log(state) == sorted(events, key=lambda e: (e[0], e[1]))
     pend_ts, pend_id, pend_type, hi, done = state.get[3:]
@@ -96,7 +106,7 @@ def test_shuffled_arrival_releases_in_ts_id_order():
 
 
 def test_frontier_ties_and_late_events():
-    state = FakeState()
+    state = FakeState(state_schema=RECORDING_STATE_SCHEMA)
     fn = make_disorder_step(RecordingCore, 10.0)
     # hi=20 releases the two sec-0 events (a same-batch tie: both feed)
     run(fn, state, [[(0, 5, "click"), (20, 2, "click"), (0, 1, "click")]])
@@ -135,12 +145,12 @@ def _greedy_disorder(d):
 
 
 @pytest.mark.parametrize(
-    "in_order, disorder",
-    [(_times_in_order, _times_disorder),
-     (_greedy_in_order, _greedy_disorder)],
+    "in_order, disorder, schema",
+    [(_times_in_order, _times_disorder, _TIMES_STATE_SCHEMA),
+     (_greedy_in_order, _greedy_disorder, _GREEDY_STATE_SCHEMA)],
     ids=["times", "greedy"],
 )
-def test_core_matches_equal_the_in_order_driver(in_order, disorder):
+def test_core_matches_equal_the_in_order_driver(in_order, disorder, schema):
     rng = random.Random(11)
     events, t = [], 0.0
     for eid in range(200):
@@ -149,9 +159,12 @@ def test_core_matches_equal_the_in_order_driver(in_order, disorder):
     # a far-future click closes greedy's last run; the event after it
     # releases that click through the buffer
     tail = [(t + 1000, 900, "click"), (t + 2000, 901, "view")]
-    want = run(in_order(), FakeState(), [events + tail[:1]])
+    want = run(in_order(), FakeState(state_schema=schema),
+               [events + tail[:1]])
     assert want  # the fixture must produce matches
     arrival = sorted(events, key=lambda e: e[0] + rng.uniform(0, 6))
     batches = [arrival[i:i + 17] for i in range(0, len(arrival), 17)]
-    got = run(disorder(10.0), FakeState(), batches + [tail[:1], tail[1:]])
+    got = run(disorder(10.0),
+              FakeState(state_schema=schema + _PEND_STATE_SCHEMA),
+              batches + [tail[:1], tail[1:]])
     assert got == want

@@ -1132,13 +1132,14 @@ def test_over_flush_strictly_below_watermark():
     batch (ts, event_id) ordinal order. Driven directly through the
     step through the harness with the shared fake GroupState."""
     from flink_framework_spark.streaming.stateful import (
+        _OVER_STATE_SCHEMA,
         make_over_window_step,
     )
     from tests.fake_state import FakeState, call
 
     step = make_over_window_step()
     T = 1_700_000_000
-    st = FakeState(T * 1000)
+    st = FakeState(T * 1000, _OVER_STATE_SCHEMA)
     pdf = pd.DataFrame(
         {"ts": pd.to_datetime([T], unit="s"), "event_id": [2],
          "value": [5.0]}

@@ -1,13 +1,17 @@
-"""Per-pass CPU profile of a query run, split by JVM thread class, with
-Spark's codegen counts.
+"""Per-pass (or per-trigger) CPU profile of a query run or a stream,
+split by JVM thread class, with Spark's codegen counts.
 
     python tools/jvm_profile.py query q_pagerank q_curation_pipeline --sf-dir DATA_DIR
+    python tools/jvm_profile.py stream temporal_join_changelog
 
-Runs the named queries once as a warm-up, then PASSES timed passes. A
-pass builds each query, collects it to pandas and clears the cache, as
-``perfbench`` does. Per pass it prints the process-tree CPU (this
-process, the Spark JVM, the Python workers), read from ``/proc`` and
-split into:
+``query`` runs the named queries once as a warm-up, then PASSES timed
+passes. A pass builds each query, collects it to pandas and clears the
+cache, as ``perfbench`` does. ``stream`` runs one scenario of
+``tools/pyworker_profile.py`` (a ``STREAMS`` name or ``module:function``,
+through its ``run_stream``) for TRIGGERS micro-batches and reports each
+trigger after the first. Per pass or trigger it prints the
+process-tree CPU (this process, the Spark JVM, the Python workers),
+read from ``/proc`` and split into:
 
 - ``compiler``: HotSpot C1/C2 JIT compiler threads
 - ``executor``: Spark executor task threads
@@ -17,9 +21,11 @@ split into:
 - ``py_workers``: PySpark worker processes
 - ``py_driver``: this process, including its thread sampler
 
-and two codegen counts: Janino compiles (generated-class cache misses)
-during the pass and the generated-class cache's size after it. The
-last line is a JSON summary with the per-pass medians.
+and three codegen counts: Janino compiles (generated-class cache
+misses) during the pass or trigger, the generated-class cache's growth
+over it, and its size after it. The last line is a JSON summary with
+the medians over the passes, or over the triggers from the third on
+(the first two fill the stream's state).
 """
 
 from __future__ import annotations
@@ -34,8 +40,11 @@ import threading
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 PASSES = 3  # timed passes after the warm-up
+TRIGGERS = 10  # stream micro-batches; the first is the baseline
+STEADY = 2  # batch id of the first trigger in the summary (the third)
 SAMPLE_S = 0.2  # JVM thread sampling interval
 
 TICK = os.sysconf("SC_CLK_TCK")
@@ -160,50 +169,107 @@ def run_pass(spark, queries, names, sf_dir: str) -> None:
             spark.catalog.clearCache()
 
 
+class Meter:
+    """Snapshots of CPU and codegen; :meth:`row` is the split between
+    the last two."""
+
+    def __init__(self, spark) -> None:
+        self.threads = JvmThreads(
+            spark._jvm.java.lang.ProcessHandle.current().pid())
+        self.codegen = Codegen(spark)
+        self.marks: list[tuple] = []
+
+    def mark(self) -> None:
+        self.marks.append((snapshot(self.threads), self.codegen.compiles(),
+                           self.codegen.cache_size()))
+
+    def row(self) -> dict:
+        (a, compiles_a, cache_a), (b, compiles_b, cache_b) = self.marks[-2:]
+        return {**cpu_split(a, b), "compiles": compiles_b - compiles_a,
+                "growth": cache_b - cache_a, "cache": cache_b}
+
+
+def profile_queries(spark, meter: Meter, queries, names,
+                    sf_dir: str) -> list[dict]:
+    run_pass(spark, queries, names, sf_dir)  # warm-up
+    rows = []
+    meter.mark()
+    for _ in range(PASSES):
+        run_pass(spark, queries, names, sf_dir)
+        meter.mark()
+        rows.append(meter.row())
+    return rows
+
+
+def profile_stream(spark, meter: Meter, name: str) -> list[dict]:
+    from pyworker_profile import run_stream
+
+    rows = []
+
+    def on_batch(batch_id: int) -> None:
+        meter.mark()
+        if len(meter.marks) > 1:
+            rows.append({"trigger": batch_id, **meter.row()})
+
+    run_stream(spark, name, TRIGGERS, on_batch)
+    return rows
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("kind", choices=("query",))
-    ap.add_argument("names", nargs="+", help="registered query names, run "
-                    "in this order in every pass")
+    ap.add_argument("kind", choices=("query", "stream"))
+    ap.add_argument("names", nargs="+", help="query: registered query names, "
+                    "run in this order in every pass; stream: one scenario")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
                     help="query data dir (default $SPARK_GRAFT_SF_DIR)")
     args = ap.parse_args(argv)
-    if not args.sf_dir:
+    if args.kind == "query" and not args.sf_dir:
         ap.error("a query needs --sf-dir or $SPARK_GRAFT_SF_DIR")
+    if args.kind == "stream" and len(args.names) != 1:
+        ap.error("a stream profile runs one scenario")
 
-    from flink_framework_spark.registry import all_queries
     from flink_framework_spark.session import get_spark
 
-    queries = all_queries()
-    unknown = set(args.names) - set(queries)
-    if unknown:
-        ap.error(f"unknown queries {sorted(unknown)}")
+    partitions = None
+    if args.kind == "query":
+        from flink_framework_spark.registry import all_queries
+
+        queries = all_queries()
+        unknown = set(args.names) - set(queries)
+        if unknown:
+            ap.error(f"unknown queries {sorted(unknown)}")
+    else:
+        from pyworker_profile import PARTITIONS as partitions
     os.environ.setdefault("PYSPARK_SUBMIT_ARGS", "--conf "
                           "spark.ui.showConsoleProgress=false pyspark-shell")
-    spark = get_spark(app_name="jvm-profile")
+    spark = get_spark(app_name="jvm-profile", shuffle_partitions=partitions)
     spark.sparkContext.setLogLevel("ERROR")
-    threads = JvmThreads(spark._jvm.java.lang.ProcessHandle.current().pid())
-    codegen = Codegen(spark)
-    rows = []
+    meter = Meter(spark)
     try:
-        run_pass(spark, queries, args.names, args.sf_dir)  # warm-up
-        for _ in range(PASSES):
-            before, compiles = snapshot(threads), codegen.compiles()
-            run_pass(spark, queries, args.names, args.sf_dir)
-            rows.append({**cpu_split(before, snapshot(threads)),
-                         "compiles": codegen.compiles() - compiles,
-                         "cache": codegen.cache_size()})
+        if args.kind == "query":
+            rows = profile_queries(spark, meter, queries, args.names,
+                                   args.sf_dir)
+            label, summarized = "pass", rows
+        else:
+            rows = profile_stream(spark, meter, args.names[0])
+            label = "trigger"
+            summarized = [r for r in rows if r["trigger"] >= STEADY]
     finally:
-        threads.stop()
+        meter.threads.stop()
         spark.stop()
-    cols = ("total",) + CLASSES + ("compiles", "cache")
-    print(" ".join(f"{c:>10}" for c in ("pass",) + cols))
+    counts = ("compiles", "growth", "cache")
+    cols = ("total",) + CLASSES + counts
+    print(" ".join(f"{c:>10}" for c in (label,) + cols))
     for i, row in enumerate(rows, 1):
-        print(f"{i:>10} " + " ".join(
-            f"{row[c]:>10}" if c in ("compiles", "cache")
-            else f"{row[c]:>10.2f}" for c in cols))
-    print(json.dumps({"names": args.names, "passes": len(rows), **{
-        c: round(statistics.median(r[c] for r in rows), 3) for c in cols}}))
+        print(f"{row.get(label, i):>10} " + " ".join(
+            f"{row[c]:>10}" if c in counts else f"{row[c]:>10.2f}"
+            for c in cols))
+    if not summarized:
+        raise SystemExit(f"no {label} to summarize")
+    print(json.dumps({"kind": args.kind, "names": args.names,
+                      f"{label}s": len(summarized), **{
+        c: round(statistics.median(r[c] for r in summarized), 3)
+        for c in cols}}))
     return 0
 
 

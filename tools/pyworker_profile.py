@@ -121,18 +121,28 @@ def _resolve_stream(name: str):
     return getattr(importlib.import_module(module), fn)
 
 
-def run_stream(spark, name: str) -> None:
+def run_stream(spark, name: str, batches: int = BATCHES,
+               on_batch=None) -> None:
+    """Run scenario ``name`` into a noop sink until ``batches``
+    micro-batches have completed. ``on_batch(batch_id)`` is called
+    when the poll first sees a batch complete; a trigger outlasts the
+    poll interval, so that is once per batch, just after it ends."""
     df, mode = _resolve_stream(name)(spark, ROWS)
     ckpt = tempfile.mkdtemp(prefix="pyworker_profile_ckpt_")
     q = (df.writeStream.format("noop").outputMode(mode)
          .option("checkpointLocation", ckpt).start())
     try:
-        deadline = time.monotonic() + 60 + 20 * BATCHES
+        deadline = time.monotonic() + 60 + 20 * batches
+        seen = -1
         while q.isActive and time.monotonic() < deadline:
             last = q.lastProgress
-            if last and last["batchId"] >= BATCHES - 1:
-                break
-            time.sleep(0.1)
+            if last and last["batchId"] != seen:
+                seen = last["batchId"]
+                if on_batch is not None:
+                    on_batch(seen)
+                if seen >= batches - 1:
+                    break
+            time.sleep(0.05)
         if q.exception() is not None:
             raise SystemExit(f"stream failed: {q.exception()}")
     finally:
